@@ -393,7 +393,7 @@ def q_spatial_join_convex(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["polygon_id", "geojson"],
     )
     inner = (
-        spatial_join(pts, polys, zoom=9, salt=4)
+        spatial_join(pts, polys, zoom=9)
         .select("point_id")
         .withColumn("side", F.lit("in"))
     )
@@ -1206,7 +1206,7 @@ def q_flagship_image_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     pts = spark.sql(PTS_IMAGES)
     polys = spark.createDataFrame(FX.make_polygons(60)[["polygon_id", "geojson"]])
-    return spatial_join(pts, polys, compact=True, salt=8).select(
+    return spatial_join(pts, polys, compact=True).select(
         "point_id", "polygon_id"
     )
 

@@ -2,8 +2,9 @@
 
 This is the refinement half of the two-phase spatial join (SURVEY.md §2.3 "Exact PIP
 refinement"): after the broadcast candidate join on cell ids, each (point, polygon)
-candidate pair is resolved exactly here, inside Arrow-batched ``applyInPandas`` groups —
-no per-row Python (BASELINE.json input_hint).
+candidate pair is resolved exactly here by :func:`refine_mask`, once per Arrow batch of
+the join's ``mapInArrow`` refine (or per cogroup on the shuffle fallback) — no per-row
+Python (BASELINE.json input_hint).
 
 Boundary semantics: ``covers`` (boundary-inclusive), chosen and documented per SURVEY.md
 §7 hard part (b) — a point exactly on a ring edge or vertex counts as inside.  The
@@ -20,6 +21,8 @@ The blocked kernel is ~6x faster single-core and scales with cores.
 """
 
 from __future__ import annotations
+
+import json
 
 import numpy as np
 
@@ -141,6 +144,49 @@ def points_in_polygon(
     if boundary == "include":
         result |= on_outer
     return result
+
+
+def rings_from_json(ring_json: str, holes_json: str | None) -> list[np.ndarray]:
+    """A normalized polygon row's (ring_json, holes_json) -> [outer, *holes]."""
+    return [np.asarray(json.loads(ring_json), dtype=np.float64)] + [
+        np.asarray(h, dtype=np.float64) for h in json.loads(holes_json or "[]")
+    ]
+
+
+def refine_mask(lon, lat, codes, rings, kernels: dict) -> np.ndarray:
+    """Covers mask of candidate rows: row i is kept when (lon[i], lat[i]) lies in
+    polygon ``rings[codes[i]]`` (boundary-inclusive).
+
+    rings: indexable by code -> [outer] or [outer, *holes] (see
+    :func:`rings_from_json`), or None for a polygon that is never matched.
+    kernels: code -> RingKernel cache; pass the same dict across batches so each
+    single-ring polygon builds its edge table once.  Holed polygons run the
+    even-odd :func:`points_in_polygon` over all rings.
+    """
+    n = len(codes)
+    keep = np.zeros(n, dtype=bool)
+    # one argsort groups all rows by polygon — NOT a codes==gi scan per polygon
+    # (that is U full-array passes per batch and dominates runtime when hundreds
+    # of polygons are present in every batch)
+    order = np.argsort(codes, kind="stable")
+    uniq, starts = np.unique(codes[order], return_index=True)
+    ends = np.append(starts[1:], n)
+    for k, gi in enumerate(uniq.tolist()):
+        poly = rings[gi]
+        if poly is None:
+            continue
+        idx = order[starts[k] : ends[k]]
+        if len(poly) > 1:
+            keep[idx] = points_in_polygon(lon[idx], lat[idx], poly)
+            continue
+        kern = kernels.get(gi)
+        if kern is None:
+            kern = kernels[gi] = RingKernel(poly[0])
+        for s in range(0, len(idx), _BLOCK):
+            b = idx[s : s + _BLOCK]
+            ins, edg = kern.test_block(lon[b], lat[b])
+            keep[b] = ins | edg
+    return keep
 
 
 def point_ring_distance_sq(px, py, ring) -> np.ndarray:

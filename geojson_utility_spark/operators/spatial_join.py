@@ -12,20 +12,21 @@ Physical plan, designed for 10^12 points vs ~10^5 polygons:
    (conservative covering — superset, no false negatives).
 2. **Point side (huge)**: cell assignment is a pure Catalyst expression
    (functions/spark_geo.py) — stays inside whole-stage codegen, columns pruned to
-   (id, lat, lon), predicate pushdown unaffected.  With a compacted (multi-zoom)
-   cover, ancestors come from bit-shift expressions + one posexplode; with an
-   uncompacted cover the point table is scanned exactly ONCE with a single probe.
-3. **Candidate join**: ``points.join(broadcast(cover), 'cell')`` — broadcast hash
-   join, ZERO shuffle of the trillion-row side.
+   (id, lat, lon), predicate pushdown unaffected.  One probe expression: ancestors
+   at every cover zoom come from bit-shift expressions + one explode (a single
+   probe at one zoom for an uncompacted cover).
+3. **Candidate joins**: two broadcast hash joins of the probe against DISJOINT
+   halves of the cover — interior cells and boundary cells — so ZERO shuffle of
+   the trillion-row side and one cover's worth of broadcast in total.
 4. **Interior short-circuit**: points landing in fully-interior cover cells are
    matches with NO refinement and never cross the Python boundary (which costs a JVM
    feeder thread + a Python worker per task — the scarcest resource of the join).
    Only the O(perimeter) boundary band is refined.
-5. **Refine** (three strategies, see ``spatial_join``):
-   'broadcast' (default) — rings broadcast, zero-shuffle ``mapInArrow`` ray cast over
-   cache-blocked numpy kernels; 'cogroup' — salted shuffle for unbroadcastable polygon
-   sets (SURVEY.md §4 skew treatment); 'expr' — pure-Catalyst aggregate expression
-   (no Python at all; slower per row, useful when Python workers are unavailable).
+5. **Refine** (two strategies, see ``spatial_join``; one kernel,
+   ``functions/pip.refine_mask``): 'broadcast' (default) — rings broadcast,
+   zero-shuffle ``mapInArrow`` ray cast over cache-blocked numpy kernels;
+   'cogroup' — salted shuffle for unbroadcastable polygon sets (SURVEY.md §4 skew
+   treatment).
 
 At 1000 executors: everything through refine is map-only — the join's only exchanges
 hash-partition the tiny polygon side.
@@ -34,6 +35,7 @@ hash-partition the tiny polygon side.
 from __future__ import annotations
 
 import json
+from collections import Counter
 from typing import Iterator
 
 import numpy as np
@@ -90,37 +92,23 @@ def normalize_polygons(polygons: DataFrame, keep_holes: bool = False) -> DataFra
             for pid, gj in zip(pdf["polygon_id"], pdf["geojson"]):
                 if keep_holes:
                     rings, err = G.normalize_polygon_rings(gj)
-                    if err:
-                        rows.append((pid, None, None, err, None, None))
-                        continue
-                    arr = np.asarray(rings[0], dtype=np.float64)
-                    rows.append(
-                        (
-                            pid,
-                            json.dumps(rings[0]),
-                            json.dumps(rings[1:]),
-                            "",
-                            int(arr.shape[0]),
-                            abs(G.signed_area(arr)),
-                        )
-                    )
-                    continue
-                norm, err = G.normalize_polygon_geojson(gj)
+                else:
+                    norm, err = G.normalize_polygon_geojson(gj)
+                    rings = None if err else [G.extract_outer_ring(norm)]
                 if err:
                     rows.append((pid, None, None, err, None, None))
-                else:
-                    ring = G.extract_outer_ring(norm)
-                    arr = np.asarray(ring, dtype=np.float64)
-                    rows.append(
-                        (
-                            pid,
-                            json.dumps(ring),
-                            "[]",
-                            "",
-                            int(arr.shape[0]),
-                            abs(G.signed_area(arr)),
-                        )
+                    continue
+                arr = np.asarray(rings[0], dtype=np.float64)
+                rows.append(
+                    (
+                        pid,
+                        json.dumps(rings[0]),
+                        json.dumps(rings[1:]),
+                        "",
+                        int(arr.shape[0]),
+                        abs(G.signed_area(arr)),
                     )
+                )
             yield pd.DataFrame(
                 rows,
                 columns=[
@@ -228,21 +216,25 @@ def polygon_cover(
 
 
 def _refine_cogroup(cand: pd.DataFrame, rings: pd.DataFrame) -> pd.DataFrame:
-    """Exact PIP for one (polygon, salt) cogroup — vectorized ray cast, covers
-    semantics (boundary-inclusive).  ``cand`` holds the candidate points, ``rings``
-    exactly one replicated ring row."""
+    """Exact PIP for one (poly_idx, salt) cogroup — covers semantics
+    (boundary-inclusive).  ``cand`` holds the candidate points, ``rings`` the
+    polygon's replicated ring row."""
     if cand.empty or rings.empty:
         return pd.DataFrame({"point_id": [], "lat": [], "lon": [], "poly_idx": []})
-    poly = [np.asarray(json.loads(rings["ring_json"].iloc[0]), dtype=np.float64)]
-    if "holes_json" in rings.columns:
-        poly += [
-            np.asarray(h, dtype=np.float64)
-            for h in json.loads(rings["holes_json"].iloc[0] or "[]")
-        ]
-    inside = P.points_in_polygon(
-        cand["lon"].to_numpy(np.float64), cand["lat"].to_numpy(np.float64), poly
+    ring_of = {
+        i: P.rings_from_json(r, h)
+        for i, r, h in zip(
+            rings["poly_idx"].tolist(), rings["ring_json"], rings["holes_json"]
+        )
+    }
+    keep = P.refine_mask(
+        cand["lon"].to_numpy(np.float64),
+        cand["lat"].to_numpy(np.float64),
+        cand["poly_idx"].to_numpy(),
+        ring_of,
+        {},
     )
-    return cand.loc[inside, ["point_id", "lat", "lon", "poly_idx"]]
+    return cand.loc[keep, ["point_id", "lat", "lon", "poly_idx"]]
 
 
 class PreparedPolygons:
@@ -258,8 +250,7 @@ class PreparedPolygons:
     prepared=...)`` (geometry parameters travel with the object)."""
 
     def __init__(self, spark, zoom, compact, min_zoom, keep_holes,
-                 norm, cover, zooms, pid_rows, pid_map, cover_idx,
-                 norm_rows=None):
+                 norm, cover, zooms, pid_rows, pid_map, cover_idx, norm_rows):
         self.spark = spark
         self.zoom = zoom
         self.compact = compact
@@ -282,21 +273,11 @@ class PreparedPolygons:
         """sc.broadcast of per-poly_idx ring lists ([outer] or [outer, *holes]),
         built lazily (only the broadcast refine path needs it) and cached."""
         if self._bc_rings is None:
-            rows = self._norm_rows
-            if rows is None:
-                rows = (
-                    self.norm.filter(F.col("poly_errors") == "")
-                    .select("polygon_id", "ring_json", "holes_json")
-                    .collect()
-                )
             rings_list = [None] * len(self.pid_rows)
-            for r in rows:
-                rings_list[self.idx_of[r["polygon_id"]]] = [
-                    np.asarray(json.loads(r["ring_json"]), dtype=np.float64)
-                ] + [
-                    np.asarray(h, dtype=np.float64)
-                    for h in json.loads(r["holes_json"] or "[]")
-                ]
+            for r in self._norm_rows:
+                rings_list[self.idx_of[r["polygon_id"]]] = P.rings_from_json(
+                    r["ring_json"], r["holes_json"]
+                )
             self._bc_rings = self.spark.sparkContext.broadcast(rings_list)
         return self._bc_rings
 
@@ -318,10 +299,27 @@ def prepare_polygons(
     keep_holes: bool = False,
 ) -> PreparedPolygons:
     """Build the reusable polygon index for :func:`spatial_join` (see
-    :class:`PreparedPolygons`)."""
+    :class:`PreparedPolygons`).  Raises ``ValueError`` when two valid polygons
+    share a ``polygon_id`` (a match could not say which one it hit)."""
     spark = polygons.sparkSession
     # polygon side is small: cache so normalize+cover run once, not once per zoom probe
     norm = normalize_polygons(polygons, keep_holes=keep_holes).cache()
+    # ONE collect serves both the dense-id list and (lazily) the ring
+    # broadcast — the r6 shape ran a pid-distinct job here plus a second
+    # norm collect inside rings_broadcast per spatial_join call (r7)
+    norm_rows = (
+        norm.filter(F.col("poly_errors") == "")
+        .select("polygon_id", "ring_json", "holes_json")
+        .collect()
+    )
+    # dense integer polygon surrogate: candidate rows carry a 4-byte poly_idx instead
+    # of the polygon_id string — string columns double the per-row cost of the Python
+    # handoff; ids are re-attached JVM-side from a tiny broadcast map at the end.
+    pid_rows = sorted({r["polygon_id"] for r in norm_rows})
+    if len(pid_rows) != len(norm_rows):
+        norm.unpersist()
+        dup = Counter(r["polygon_id"] for r in norm_rows).most_common(1)[0][0]
+        raise ValueError(f"duplicate polygon_id {dup!r}: polygon ids must be unique")
     cover = polygon_cover(norm, zoom=zoom, compact=compact, min_zoom=min_zoom).cache()
     if not compact:
         zooms = [zoom]
@@ -338,18 +336,6 @@ def prepare_polygons(
         zooms = sorted(
             r["cell_zoom"] for r in cover.select("cell_zoom").distinct().collect()
         )
-    # ONE collect serves both the dense-id list and (lazily) the ring
-    # broadcast — the r6 shape ran a pid-distinct job here plus a second
-    # norm collect inside rings_broadcast per spatial_join call (r7)
-    norm_rows = (
-        norm.filter(F.col("poly_errors") == "")
-        .select("polygon_id", "ring_json", "holes_json")
-        .collect()
-    )
-    # dense integer polygon surrogate: candidate rows carry a 4-byte poly_idx instead
-    # of the polygon_id string — string columns double the per-row cost of the Python
-    # handoff; ids are re-attached JVM-side from a tiny broadcast map at the end.
-    pid_rows = sorted({r["polygon_id"] for r in norm_rows})
     pid_map = spark.createDataFrame(
         [(i, pid) for i, pid in enumerate(pid_rows)], ["poly_idx", "polygon_id"]
     )
@@ -361,9 +347,29 @@ def prepare_polygons(
     ).cache()
     return PreparedPolygons(
         spark, zoom, compact, min_zoom, keep_holes,
-        norm, cover, zooms, pid_rows, pid_map, cover_idx,
-        norm_rows=norm_rows,
+        norm, cover, zooms, pid_rows, pid_map, cover_idx, norm_rows,
     )
+
+
+def _points(points: DataFrame, point_id: str) -> DataFrame:
+    """(point_id, lat, lon) with lat/lon normalized to double at the boundary
+    (SQL-derived inputs may arrive as DECIMAL; every kernel and the result schema
+    assume float64)."""
+    return points.select(
+        F.col(point_id).alias("point_id"),
+        F.col("lat").cast("double").alias("lat"),
+        F.col("lon").cast("double").alias("lon"),
+    )
+
+
+def _apply_how(pts: DataFrame, matches: DataFrame, how: str) -> DataFrame:
+    """'inner' -> the matches; 'left_semi' / 'left_anti' -> the points with /
+    without any match."""
+    if how == "inner":
+        return matches
+    if how in ("left_semi", "left_anti"):
+        return pts.join(matches.select("point_id").distinct(), "point_id", how)
+    raise ValueError(f"unsupported how={how!r}")
 
 
 def spatial_join(
@@ -376,7 +382,6 @@ def spatial_join(
     how: str = "inner",
     refine: str = "broadcast",
     min_zoom: int | None = None,
-    single_scan: bool = False,
     keep_holes: bool = False,
     prepared: PreparedPolygons | None = None,
 ) -> DataFrame:
@@ -386,41 +391,26 @@ def spatial_join(
     keep_holes=True joins on the full even-odd polygon (interior rings excluded,
     hole BOUNDARIES still included — covers semantics): cover cells touching a
     hole's bbox are demoted to the refine path and the kernel ray-casts against
-    every ring.  Supported by refine='broadcast' (incl. single_scan) and
-    refine='cogroup'; refine='expr' raises (the Catalyst expression encodes one
-    ring).
+    every ring.
 
     how: 'inner' -> (point_id, lat, lon, polygon_id) matches;
          'left_semi' -> served points; 'left_anti' -> serviceability-gap points.
-    refine:
+    refine (both run the same kernel, :func:`pip.refine_mask`):
       'broadcast' (default) — rings broadcast to every Python worker; refine is a
-        map-only ``mapInPandas`` over the candidate rows, grouped locally per batch.
-        ZERO shuffles end to end; skew is impossible (work follows partition size).
-        Right whenever the normalized ring set fits in executor memory (up to ~10^6
-        typical catchment rings ≈ a few GB; far past the reference's scale).
-      'cogroup' — candidates shuffled on (polygon_id, salt) and cogrouped with
+        map-only ``mapInArrow`` over the boundary candidate rows, grouped locally
+        per batch.  ZERO shuffles end to end; skew is impossible (work follows
+        partition size).  Right whenever the normalized ring set fits in executor
+        memory (up to ~10^6 typical catchment rings ≈ a few GB; far past the
+        reference's scale).
+      'cogroup' — candidates shuffled on (poly_idx, salt) and cogrouped with
         replicated ring rows; the salted-repartition skew treatment (SURVEY.md §4).
         The fallback when the polygon table itself is too large to broadcast.
-    single_scan (refine='broadcast' only): ONE point-table scan + ONE cover
-        broadcast — the join output carries the cell's interior flag and the Arrow
-        kernel passes interior rows through untouched (no ray cast) while refining
-        boundary rows.  Trades the default plan's second scan + second broadcast for
-        routing interior matches through the Arrow boundary (~0.4 µs/row-equivalent
-        of core time).  MEASURED at 96M points x 120 polygons (224.7M matches,
-        ~80% interior), local[16], page-warm parquet: default 11.2 s vs single_scan
-        79.6 s — on cheap scans the interior short-circuit wins by 7x, which is why
-        two-branch is the default.  single_scan only pays off when the input scan
-        itself dominates (cold object-store reads of wide rows) AND the match rate
-        is low; identical results either way (tests pin equality).
+    salt: salt buckets per polygon; read by refine='cogroup' only.
     """
+    if refine not in ("broadcast", "cogroup"):
+        raise ValueError(f"unsupported refine={refine!r}")
     spark = points.sparkSession
-    # lat/lon normalized to double at the boundary (SQL-derived inputs may arrive as
-    # DECIMAL; every kernel and the result schema assume float64)
-    pts = points.select(
-        F.col(point_id).alias("point_id"),
-        F.col("lat").cast("double").alias("lat"),
-        F.col("lon").cast("double").alias("lon"),
-    )
+    pts = _points(points, point_id)
     if prepared is None:
         if polygons is None:
             raise ValueError("spatial_join needs either polygons or prepared")
@@ -432,19 +422,16 @@ def spatial_join(
         # geometry parameters travel with the index (a mismatched zoom would
         # silently probe the wrong cells)
         zoom = prepared.zoom
-        keep_holes = prepared.keep_holes
-    if keep_holes and refine == "expr":
-        raise ValueError("keep_holes=True is not supported with refine='expr'")
     norm = prepared.norm
     zooms = prepared.zooms
     pid_map = prepared.pid_map
     cover_idx = prepared.cover_idx
 
-    # candidate join: broadcast ONLY (polygon_id, cell) — rings never enter the
+    # candidate join: broadcast ONLY (poly_idx, cell) — rings never enter the
     # broadcast nor the per-candidate shuffle rows (they weigh KBs vs ~40 B/candidate).
-    # ONE scan of the point table: ancestors at every cover zoom come from bit-shift
-    # expressions, posexplode multiplies rows JVM-side, one broadcast hash join total
-    # (cell ids embed their zoom, so a single join key covers all zooms collision-free).
+    # One probe expression: ancestors at every cover zoom come from bit-shift
+    # expressions and one explode multiplies rows JVM-side (cell ids embed their
+    # zoom, so a single join key covers all zooms collision-free).
     fine = pts.withColumn("_cell_fine", cell_expr(F.col("lat"), F.col("lon"), zoom))
     ancestors = F.array(
         *[cell_parent_expr(F.col("_cell_fine"), z, zoom) for z in zooms]
@@ -455,13 +442,13 @@ def spatial_join(
     # refinement — it never crosses the Python boundary (which costs ~5 µs/row of core
     # time in Spark's row<->Arrow machinery and would otherwise dominate the join);
     # only boundary-cell candidates — O(perimeter), a small fraction — get ray-cast.
-    # The two broadcasts carry DISJOINT halves of the cover (interior cells vs
-    # boundary cells), so total broadcast volume equals one full cover.  (A single
-    # shared broadcast + post-join filters was tried and REGRESSED: Catalyst pushes
-    # the interior filter into the build side, defeating ReusedExchange, and each
-    # branch then ships the whole cover — 2x the rows of the disjoint split.
-    # single_scan=True below avoids the double scan a different way: one join whose
-    # output KEEPS the interior flag, with kernel passthrough instead of a filter.)
+    # The two broadcast hash joins carry DISJOINT halves of the cover (interior cells
+    # vs boundary cells), so total broadcast volume equals one full cover; each branch
+    # scans the point side.  (A single shared broadcast + post-join filters was tried
+    # and REGRESSED: Catalyst pushes the interior filter into the build side,
+    # defeating ReusedExchange, and each branch then ships the whole cover — 2x the
+    # rows of the disjoint split.  One join keeping the interior flag, with interior
+    # rows passed through the kernel, was 7x slower at 96M points: BENCH.md.)
     interior_matches = probe.join(
         F.broadcast(
             cover_idx.filter(F.col("interior")).select(
@@ -485,71 +472,14 @@ def spatial_join(
     pid_type = dict(pts.dtypes)["point_id"]
     result_schema = f"point_id {pid_type}, lat double, lon double, poly_idx int"
 
-    if refine == "expr":
-        # pure-Catalyst refine: ray cast as an aggregate expression over the ring
-        # array (boundary-inclusive, same semantics as functions/pip.py).  No Python
-        # boundary at all — in local mode the Arrow handoff costs a JVM feeder thread
-        # PLUS a Python worker per task (2 CPU-bound threads/core -> negative scaling
-        # past N/2 cores); expression refine keeps every core on one JVM thread.
-        rings_arr = (
-            norm.filter(F.col("poly_errors") == "")
-            .join(F.broadcast(pid_map), "polygon_id")
-            .select(
-                F.col("poly_idx").cast("int").alias("poly_idx"),
-                F.from_json("ring_json", "array<array<double>>").alias("_ring"),
-            )
-        )
-        cand_r = candidates.join(F.broadcast(rings_arr), "poly_idx")
-        ring = F.col("_ring")
-        px, py = F.col("lon"), F.col("lat")
-        nv = F.size(ring)
-
-        def vx(i):
-            return F.element_at(F.element_at(ring, i), 1)
-
-        def vy(i):
-            return F.element_at(F.element_at(ring, i), 2)
-
-        edge_ids = F.sequence(F.lit(1), nv - 1)
-        crossings = F.aggregate(
-            edge_ids,
-            F.lit(0),
-            lambda acc, i: acc
-            + F.when(
-                ((vy(i) <= py) != (vy(i + 1) <= py))
-                & (
-                    px
-                    < vx(i)
-                    + (py - vy(i)) * (vx(i + 1) - vx(i)) / (vy(i + 1) - vy(i))
-                ),
-                1,
-            ).otherwise(0),
-        )
-        on_edge = F.exists(
-            edge_ids,
-            lambda i: (
-                (vx(i + 1) - vx(i)) * (py - vy(i))
-                - (vy(i + 1) - vy(i)) * (px - vx(i))
-                == 0
-            )
-            & (px >= F.least(vx(i), vx(i + 1)))
-            & (px <= F.greatest(vx(i), vx(i + 1)))
-            & (py >= F.least(vy(i), vy(i + 1)))
-            & (py <= F.greatest(vy(i), vy(i + 1))),
-        )
-        refined = cand_r.filter((crossings % 2 == 1) | on_edge).select(
-            "point_id", "lat", "lon", "poly_idx"
-        )
-    elif refine == "broadcast":
+    if refine == "broadcast":
         # map-only refine: all normalized rings broadcast once per executor; each
-        # Arrow batch is grouped locally by polygon_id and ray-cast per group.
+        # Arrow batch is grouped locally by poly_idx and ray-cast per group.
         # No shuffle, no sort, no skew — candidate rows never leave their partition.
         # mapInArrow, NOT mapInPandas: at ~10^8 candidate rows the Arrow->pandas
         # conversion materializes billions of Python string objects (id columns) and
         # becomes the memory-bandwidth ceiling of the whole join; in Arrow the ids
         # stay in columnar buffers and only lat/lon are viewed as numpy.
-        # each entry: [outer] or [outer, hole, ...] — single-ring polygons take the
-        # cached-RingKernel fast path; holed polygons run the even-odd PIP
         bc_rings = prepared.rings_broadcast()
 
         def refine_arrow(it):
@@ -558,8 +488,7 @@ def spatial_join(
             rings = bc_rings.value
             kernels: dict[int, object] = {}
             for batch in it:
-                n = batch.num_rows
-                if n == 0:
+                if batch.num_rows == 0:
                     continue
                 # asarray(float64): decimal-typed lat/lon (e.g. SQL-derived) arrive
                 # as object arrays of Decimal — coerce before the numpy kernel
@@ -570,115 +499,13 @@ def spatial_join(
                     batch.column("lat").to_numpy(zero_copy_only=False), dtype=np.float64
                 )
                 codes = batch.column("poly_idx").to_numpy(zero_copy_only=False)
-                keep = np.zeros(n, dtype=bool)
-                # one argsort groups all rows by polygon — NOT a codes==gi scan per
-                # polygon (that is U full-array passes per batch and dominates runtime
-                # when hundreds of polygons are present in every batch)
-                order = np.argsort(codes, kind="stable")
-                sorted_codes = codes[order]
-                uniq, starts = np.unique(sorted_codes, return_index=True)
-                ends = np.append(starts[1:], n)
-                for k, gi in enumerate(uniq.tolist()):
-                    poly = rings[gi]
-                    if poly is None:
-                        continue
-                    idx = order[starts[k] : ends[k]]
-                    if len(poly) == 1:
-                        kern = kernels.get(gi)
-                        if kern is None:
-                            kern = kernels[gi] = P.RingKernel(poly[0])
-                        ins, edg = kern.test_block(lon[idx], lat[idx])
-                        keep[idx] = ins | edg
-                    else:  # holed polygon: even-odd over all rings
-                        keep[idx] = P.points_in_polygon(lon[idx], lat[idx], poly)
+                keep = P.refine_mask(lon, lat, codes, rings, kernels)
                 yield batch.filter(pa.array(keep))
 
-        if single_scan:
-            # ONE point-table scan, ONE cover broadcast: the join output keeps the
-            # interior flag and the kernel passes interior rows through untouched —
-            # only boundary rows pay the ray cast.  See docstring for the tradeoff.
-            joined_flag = probe.join(
-                F.broadcast(
-                    cover_idx.select(
-                        "poly_idx", F.col("cell").alias("_cell"), "interior"
-                    )
-                ),
-                "_cell",
-                "inner",
-            ).select("point_id", "lat", "lon", "poly_idx", "interior")
-
-            def refine_arrow_single(it):
-                import pyarrow as pa
-
-                rings = bc_rings.value
-                kernels: dict[int, object] = {}
-                out_cols = ["point_id", "lat", "lon", "poly_idx"]
-                for batch in it:
-                    n = batch.num_rows
-                    if n == 0:
-                        continue
-                    interior = (
-                        batch.column("interior")
-                        .to_numpy(zero_copy_only=False)
-                        .astype(bool)
-                    )
-                    keep = interior.copy()
-                    bidx = np.nonzero(~interior)[0]
-                    if bidx.size:
-                        lon = np.asarray(
-                            batch.column("lon").to_numpy(zero_copy_only=False),
-                            dtype=np.float64,
-                        )[bidx]
-                        lat = np.asarray(
-                            batch.column("lat").to_numpy(zero_copy_only=False),
-                            dtype=np.float64,
-                        )[bidx]
-                        codes = batch.column("poly_idx").to_numpy(
-                            zero_copy_only=False
-                        )[bidx]
-                        order = np.argsort(codes, kind="stable")
-                        sorted_codes = codes[order]
-                        uniq, starts = np.unique(sorted_codes, return_index=True)
-                        ends = np.append(starts[1:], len(bidx))
-                        for kk, gi in enumerate(uniq.tolist()):
-                            poly = rings[gi]
-                            if poly is None:
-                                continue
-                            idx = order[starts[kk] : ends[kk]]
-                            if len(poly) == 1:
-                                kern = kernels.get(gi)
-                                if kern is None:
-                                    kern = kernels[gi] = P.RingKernel(poly[0])
-                                ins, edg = kern.test_block(lon[idx], lat[idx])
-                                keep[bidx[idx]] = ins | edg
-                            else:
-                                keep[bidx[idx]] = P.points_in_polygon(
-                                    lon[idx], lat[idx], poly
-                                )
-                    filtered = batch.filter(pa.array(keep))
-                    yield pa.RecordBatch.from_arrays(
-                        [filtered.column(c) for c in out_cols], out_cols
-                    )
-
-            refined = joined_flag.mapInArrow(refine_arrow_single, result_schema)
-            matches = refined.join(F.broadcast(pid_map), "poly_idx").select(
-                "point_id", "lat", "lon", "polygon_id"
-            )
-            if how == "inner":
-                return matches
-            if how == "left_semi":
-                return pts.join(
-                    matches.select("point_id").distinct(), "point_id", "left_semi"
-                )
-            if how == "left_anti":
-                return pts.join(
-                    matches.select("point_id").distinct(), "point_id", "left_anti"
-                )
-            raise ValueError(f"unsupported how={how!r}")
         refined = candidates.mapInArrow(refine_arrow, result_schema)
-    elif refine == "cogroup":
+    else:
         # shuffle path: candidates cogrouped with replicated rings on
-        # (polygon_id, salt) — the salted-repartition skew treatment for polygon
+        # (poly_idx, salt) — the salted-repartition skew treatment for polygon
         # tables too large to broadcast.  Each task receives the ring exactly once.
         n_salt = max(1, salt)
         salted = candidates.withColumn(
@@ -702,8 +529,6 @@ def spatial_join(
             .cogroup(rings_salted.groupBy("poly_idx", "_salt"))
             .applyInPandas(_refine_cogroup, result_schema)
         )
-    else:
-        raise ValueError(f"unsupported refine={refine!r}")
 
     # cover cells are disjoint, so interior and boundary matches cannot overlap;
     # polygon_id strings re-attach here, JVM-side, from the tiny broadcast map
@@ -712,14 +537,7 @@ def spatial_join(
         .join(F.broadcast(pid_map), "poly_idx")
         .select("point_id", "lat", "lon", "polygon_id")
     )
-
-    if how == "inner":
-        return matches
-    if how == "left_semi":
-        return pts.join(matches.select("point_id").distinct(), "point_id", "left_semi")
-    if how == "left_anti":
-        return pts.join(matches.select("point_id").distinct(), "point_id", "left_anti")
-    raise ValueError(f"unsupported how={how!r}")
+    return _apply_how(pts, matches, how)
 
 
 def explode_multipolygon_parts(polygons: DataFrame) -> DataFrame:
@@ -819,19 +637,8 @@ def spatial_join_multi(
         )
         .dropDuplicates(["point_id", "polygon_id"])
     )
-    if how == "inner":
-        return matches
-    point_id = kwargs.get("point_id", "point_id")
-    pts = points.select(
-        F.col(point_id).alias("point_id"),
-        F.col("lat").cast("double").alias("lat"),
-        F.col("lon").cast("double").alias("lon"),
-    )
-    if how == "left_semi":
-        return pts.join(matches.select("point_id").distinct(), "point_id", "left_semi")
-    if how == "left_anti":
-        return pts.join(matches.select("point_id").distinct(), "point_id", "left_anti")
-    raise ValueError(f"unsupported how={how!r}")
+    pts = _points(points, kwargs.get("point_id", "point_id"))
+    return _apply_how(pts, matches, how)
 
 
 def polygon_intersect_join(

@@ -32,8 +32,6 @@ def streaming_spatial_join(
     stream_points: DataFrame,
     prepared: PreparedPolygons,
     point_id: str = "point_id",
-    refine: str = "broadcast",
-    single_scan: bool = False,
 ) -> DataFrame:
     """stream(point_id, lat, lon) ⋈ prepared polygons -> streaming matches frame
     (point_id, lat, lon, polygon_id), ready for `.writeStream`.
@@ -47,15 +45,4 @@ def streaming_spatial_join(
             "streaming_spatial_join expects a streaming DataFrame; "
             "use spatial_join for batch inputs"
         )
-    if refine == "cogroup":
-        # cogroup refine shuffles candidates on (poly_idx, salt) —
-        # applyInPandas cogroup is not available on streams
-        raise ValueError("streaming joins support refine='broadcast' or 'expr'")
-    return spatial_join(
-        stream_points,
-        prepared=prepared,
-        point_id=point_id,
-        how="inner",
-        refine=refine,
-        single_scan=single_scan,
-    )
+    return spatial_join(stream_points, prepared=prepared, point_id=point_id)

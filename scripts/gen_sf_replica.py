@@ -23,14 +23,25 @@ SF = float(sys.argv[1]) if len(sys.argv) > 1 else 1.0
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/root/sf1rep"
 SRC = "/root/testdata/sf0.1"  # fixed small tables are copied verbatim
 
-rng = np.random.default_rng(42)
-os.makedirs(OUT, exist_ok=True)
+TESTDATA = os.path.realpath(os.path.dirname(SRC))
+if os.path.commonpath([os.path.realpath(OUT), TESTDATA]) == TESTDATA:
+    sys.exit(f"refusing to write a replica under {TESTDATA} (oracle data lives there)")
+# a stale replica (an earlier SF, or an interrupted run that left _DONE) is
+# cleared; a directory holding anything else is refused rather than deleted
+if os.path.isdir(OUT):
+    stray = [f for f in os.listdir(OUT) if f != "_DONE" and not f.endswith(".parquet")]
+    if stray:
+        sys.exit(f"{OUT} is not a replica directory (holds {stray[0]!r}); pick another")
+    shutil.rmtree(OUT)
+os.makedirs(OUT)
 
-N_CUST = int(150_000 * SF)
-N_SUPP = int(10_000 * SF)
-N_PART = int(200_000 * SF)
-N_ORD = int(1_500_000 * SF)
-N_LINE = int(6_000_000 * SF)
+rng = np.random.default_rng(42)
+
+N_CUST = max(1, int(150_000 * SF))
+N_SUPP = max(1, int(10_000 * SF))
+N_PART = max(1, int(200_000 * SF))
+N_ORD = max(1, int(1_500_000 * SF))
+N_LINE = max(1, int(6_000_000 * SF))
 N_EVT = max(1000, int(1_000_000 * SF))
 N_USER = max(100, int(15_000 * SF))
 N_DOC = max(500, int(50_000 * SF))
@@ -44,12 +55,10 @@ def write(name, table):
     print(name, table.num_rows, flush=True)
 
 
-def ts_col(days_from, n_days, n, date_only=False):
+def ts_col(days_from, n_days, n):
+    """n timestamps at midnight of a day drawn from [days_from, days_from + n_days)."""
     base = np.datetime64("1995-01-01", "us").astype("int64") + days_from * DAY
-    if date_only:
-        off = rng.integers(0, n_days, n) * DAY
-    else:
-        off = rng.integers(0, n_days * DAY, n)
+    off = rng.integers(0, n_days, n) * DAY
     return pa.array((base + off).astype("datetime64[us]"))
 
 
@@ -93,7 +102,7 @@ write("orders", pa.table({
     "o_custkey": pa.array(rng.integers(0, N_CUST, N_ORD), pa.int64()),
     "o_orderstatus": pa.array(np.array(["F", "O", "P"])[rng.integers(0, 3, N_ORD)]),
     "o_totalprice": np.round(rng.uniform(1000, 500000, N_ORD), 2),
-    "o_orderdate": ts_col(0, 2404, N_ORD, date_only=True),
+    "o_orderdate": ts_col(0, 2404, N_ORD),
     "o_orderpriority": pa.array(np.array(PRIO)[rng.integers(0, 5, N_ORD)]),
 }))
 
@@ -108,7 +117,7 @@ write("lineitem", pa.table({
     "l_tax": rng.integers(0, 9, N_LINE) / 100.0,
     "l_returnflag": pa.array(np.array(["A", "N", "R"])[rng.integers(0, 3, N_LINE)]),
     "l_linestatus": pa.array(np.array(["F", "O"])[rng.integers(0, 2, N_LINE)]),
-    "l_shipdate": ts_col(1, 2499, N_LINE, date_only=True),
+    "l_shipdate": ts_col(1, 2499, N_LINE),
 }))
 
 ETYPE = ["click", "error", "purchase", "signup", "view"]

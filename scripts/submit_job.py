@@ -25,7 +25,6 @@ def main():
     ap.add_argument("--polygons", required=True)
     ap.add_argument("--out", required=True)
     ap.add_argument("--zoom", type=int, default=13)
-    ap.add_argument("--salt", type=int, default=8)
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -40,8 +39,8 @@ def main():
     t0 = time.perf_counter()
     result = ck.run_stage(
         "spatial_join",
-        lambda: spatial_join(pts, polys, zoom=args.zoom, compact=True, salt=args.salt),
-        fingerprint=f"{args.points}|{args.polygons}|{args.zoom}|{args.salt}",
+        lambda: spatial_join(pts, polys, zoom=args.zoom, compact=True),
+        fingerprint=f"{args.points}|{args.polygons}|{args.zoom}",
     )
     n = result.count()
     lineage = ck.partition_lineage("spatial_join", result)

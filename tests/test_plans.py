@@ -24,7 +24,7 @@ def test_candidate_join_is_broadcast(spark, tmp_path):
     ).withColumnRenamed("image_id", "point_id").write.parquet(pts_path)
     pts = spark.read.parquet(pts_path)
     polys = spark.createDataFrame(FX.make_polygons(10)[["polygon_id", "geojson"]])
-    plan = _plan(spatial_join(pts, polys, compact=True, salt=4))
+    plan = _plan(spatial_join(pts, polys, compact=True))
     assert "BroadcastHashJoin" in plan
     # the trillion-row side must never shuffle for the candidate join
     assert "SortMergeJoin" not in plan
@@ -68,7 +68,7 @@ def test_flagship_single_shuffle(spark, tmp_path):
     ).withColumnRenamed("image_id", "point_id").write.parquet(pts_path)
     pts = spark.read.parquet(pts_path)
     polys = spark.createDataFrame(FX.make_polygons(10)[["polygon_id", "geojson"]])
-    plan = _plan(spatial_join(pts, polys, compact=True, salt=4))
+    plan = _plan(spatial_join(pts, polys, compact=True))
     # point-side rows must NEVER shuffle: every Exchange in the plan is on the tiny
     # polygon side (normalize/cover repartition over ~10-10^5 rows). Verify no
     # exchange consumes the point table by checking none sits above the parquet scan:

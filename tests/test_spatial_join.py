@@ -46,10 +46,8 @@ def oracle_pairs(data):
     [
         (False, 1, "broadcast"),
         (False, 8, "cogroup"),
-        (False, 8, "expr"),
         (True, 8, "broadcast"),
         (True, 8, "cogroup"),
-        (True, 8, "expr"),
     ],
 )
 def test_spatial_join_matches_oracle(spark, data, oracle_pairs, compact, salt, refine):
@@ -116,30 +114,68 @@ def test_cell_heat_stats(spark, data):
     assert heat["n_points"].iloc[0] > len(pts) * 0.01
 
 
-def test_single_scan_matches_default(spark):
-    """single_scan=True (one scan + kernel passthrough) must produce the identical
-    match set as the default two-branch plan, and its plan must contain exactly one
-    point-side broadcast join."""
-    pts = spark.createDataFrame(
-        FX.image_point([f"img_{i:012d}" for i in range(20000)])
-    ).withColumnRenamed("image_id", "point_id")
-    polys = spark.createDataFrame(FX.make_polygons(30)[["polygon_id", "geojson"]])
-    a = (
-        SJ.spatial_join(pts, polys, compact=True)
-        .select("point_id", "polygon_id")
-        .toPandas()
-        .sort_values(["point_id", "polygon_id"])
-        .reset_index(drop=True)
+def test_refine_mask_matches_bruteforce():
+    """pip.refine_mask over one batch with unsorted codes mixing single-ring
+    polygons, a holed polygon and a None (invalid) polygon == per-row
+    points_in_polygon; the RingKernel cache is filled only for single rings."""
+    sq = lambda x0, y0, s: np.array(
+        [[x0, y0], [x0 + s, y0], [x0 + s, y0 + s], [x0, y0 + s], [x0, y0]]
     )
-    b = (
-        SJ.spatial_join(pts, polys, compact=True, single_scan=True)
-        .select("point_id", "polygon_id")
-        .toPandas()
-        .sort_values(["point_id", "polygon_id"])
-        .reset_index(drop=True)
+    tri = np.array([[0.0, 0.0], [3.0, 0.0], [1.5, 3.0], [0.0, 0.0]])
+    rings = [
+        [sq(0, 0, 2)],                  # 0: single ring
+        [sq(0, 0, 4), sq(1, 1, 2)],     # 1: holed
+        None,                           # 2: invalid polygon
+        [tri],                          # 3: single ring
+    ]
+    rng = np.random.default_rng(11)
+    n = 4000
+    lon = np.concatenate([rng.uniform(-0.5, 4.5, n), [2.0, 1.0, 0.0, 1.5]])
+    lat = np.concatenate([rng.uniform(-0.5, 4.5, n), [2.0, 2.0, 2.0, 3.0]])
+    codes = np.concatenate([rng.integers(0, 4, n), [1, 1, 1, 3]]).astype(np.int32)
+    kernels = {}
+    got = P.refine_mask(lon, lat, codes, rings, kernels)
+    want = np.array([
+        rings[c] is not None
+        and bool(P.points_in_polygon(lon[i : i + 1], lat[i : i + 1], rings[c])[0])
+        for i, c in enumerate(codes.tolist())
+    ])
+    np.testing.assert_array_equal(got, want)
+    assert got.any() and not got.all()
+    assert not got[codes == 2].any()
+    assert set(kernels) == {0, 3}
+    # planted: strictly inside the hole, on the hole edge, on the outer edge, apex
+    assert got[n:].tolist() == [False, True, True, True]
+    # a polygon group longer than one kernel block is tested in every block
+    m = P._BLOCK + 100
+    bx, by = rng.uniform(-0.5, 2.5, m), rng.uniform(-0.5, 2.5, m)
+    np.testing.assert_array_equal(
+        P.refine_mask(bx, by, np.zeros(m, dtype=np.int32), rings, {}),
+        P.points_in_polygon(bx, by, rings[0]),
     )
-    pd.testing.assert_frame_equal(a, b)
-    assert len(a) > 0
+
+
+def test_prepare_polygons_rejects_duplicate_ids(spark):
+    """Two valid polygons sharing a polygon_id cannot be told apart in a match —
+    prepare_polygons (and so spatial_join) refuses them, naming the id."""
+    sq = lambda x0: _holed_fc(
+        [[x0, 0.0], [x0 + 1.0, 0.0], [x0 + 1.0, 1.0], [x0, 1.0], [x0, 0.0]], []
+    )
+    polys = spark.createDataFrame(
+        [("x", sq(0.0)), ("y", sq(1.5)), ("x", sq(3.0))], ["polygon_id", "geojson"]
+    )
+    pts = spark.createDataFrame([("p", 0.5, 0.5)], ["point_id", "lat", "lon"])
+    with pytest.raises(ValueError, match="duplicate polygon_id 'x'"):
+        SJ.prepare_polygons(polys, zoom=12)
+    with pytest.raises(ValueError, match="duplicate polygon_id 'x'"):
+        SJ.spatial_join(pts, polys, zoom=12, refine="cogroup")
+
+
+def test_spatial_join_rejects_unknown_refine(spark):
+    pts = spark.createDataFrame([("p", 0.5, 0.5)], ["point_id", "lat", "lon"])
+    polys = spark.createDataFrame([("a", "{}")], ["polygon_id", "geojson"])
+    with pytest.raises(ValueError, match="refine='expr'"):
+        SJ.spatial_join(pts, polys, refine="expr")
 
 
 def test_polygon_intersect_join_matches_bruteforce(spark):
@@ -254,7 +290,7 @@ def test_spatial_join_keep_holes_matches_bruteforce(spark):
         pts["lon"].to_numpy(), pts["lat"].to_numpy(), rings
     )
     want = set(pts.loc[want_mask, "point_id"])
-    for kwargs in ({}, {"refine": "cogroup"}, {"single_scan": True}):
+    for kwargs in ({}, {"refine": "cogroup"}):
         got = {
             r["point_id"]
             for r in spatial_join(pts_df, polys, zoom=14, keep_holes=True,
@@ -274,10 +310,6 @@ def test_spatial_join_keep_holes_matches_bruteforce(spark):
     )
     assert got_parity == set(pts.loc[outer_only, "point_id"])
     assert 600 in got_parity
-    # expr refine cannot encode holes
-    import pytest as _pt
-    with _pt.raises(ValueError, match="expr"):
-        spatial_join(pts_df, polys, keep_holes=True, refine="expr")
 
 
 def test_normalize_polygons_keep_holes_validation(spark):
