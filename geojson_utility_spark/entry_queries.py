@@ -1328,12 +1328,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_views(spark, sf_dir)
     docs = spark.table("documents")
-    # DISK_ONLY: this entry re-runs the whole ngram pipeline AND holds the
-    # components checkpoints; keeping the shingle cache off-heap is what lets
-    # the full 50-entry sequence fit a default-heap (1g) driver session
-    pairs = ngram_jaccard_pairs_exact(
-        docs, "text", "doc_id", threshold=0.8, storage_level="DISK_ONLY"
-    )
+    pairs = ngram_jaccard_pairs_exact(docs, "text", "doc_id", threshold=0.8)
     return dedup_components(pairs)
 
 
@@ -1369,9 +1364,7 @@ def q_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_views(spark, sf_dir)
     docs = spark.table("documents")
-    pairs = minhash_near_dups(
-        docs, "text", "doc_id", threshold=0.5, storage_level="DISK_ONLY"
-    )
+    pairs = minhash_near_dups(docs, "text", "doc_id", threshold=0.5)
     comps = dedup_components(pairs)
     keep = F.coalesce(F.col("component"), F.col("doc_id"))
     return (

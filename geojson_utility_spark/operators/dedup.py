@@ -3,9 +3,10 @@
 All set-oriented, shuffle-minimal designs:
 - exact:      hash-groupBy on content (map-side partial agg; one shuffle on the hash)
 - minhash+LSH: shingles -> minhash signature -> banded bucket join -> exact-Jaccard
-               verify restricted to candidates (never an O(N^2) compare)
+               verify restricted to candidates (never an O(N^2) compare); the
+               verify plan follows the counted pair volume (see jaccard_pairs)
 - ngram-jaccard: EXACT all-pairs Jaccard via the shingle inverted-index join
-               (complete for any threshold > 0)
+               (complete for any threshold > 0) over a doc_id-bucketed shingle table
 - simhash:    weighted-feature bit-majority hash (xxhash64 production family, or the
               SQL-reproducible md5 family for cross-engine oracles)
 - hamming_pairs: GUARANTEED-recall near-dup pairs by hamming distance — pigeonhole
@@ -26,6 +27,7 @@ from functools import reduce
 from itertools import count
 from operator import and_
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -148,19 +150,6 @@ def _capped_self_pairs(
     return cand_small.unionByName(cand_hot), n_hot
 
 
-def _persist(df: DataFrame, storage_level: str):
-    """persist() with a by-name StorageLevel — the shingle-cache knob.
-
-    ``MEMORY_AND_DISK`` (the ``cache()`` default) degrades gracefully, but a
-    corpus-scale run whose distinct-shingle frame is ~10x the corpus should pass
-    ``DISK_ONLY`` and keep executor memory for the joins."""
-    from pyspark import StorageLevel
-
-    if not hasattr(StorageLevel, storage_level):
-        raise ValueError(f"unknown storage_level {storage_level!r}")
-    return df.persist(getattr(StorageLevel, storage_level))
-
-
 #: Bucketed shingle tables created by :func:`_materialize_shingles` (name ->
 #: still-registered).  Sequential pipelines overwrite nothing: every call gets
 #: a fresh table name; call :func:`cleanup_shingle_tables` (the heavy entries'
@@ -169,19 +158,18 @@ _BUCKETED_SHINGLE_TABLES: list[str] = []
 _BUCKETED_SEQ = count()
 
 
-def _materialize_shingles(
-    sh: DataFrame, store: str, storage_level: str, n_buckets: int
-):
+def _materialize_shingles(sh: DataFrame, n_buckets: int, bucketed: bool = True):
     """Materialize the distinct-shingle frame and return a REF FACTORY.
 
-    store='persist': one persisted frame, every consumer shares the object —
-    the classic plan, but Catalyst re-resolves the cached frame's attributes at
-    the second self-join reference, severing the output-partitioning link, so
-    the ~10x-corpus b-side of the verify join gets re-exchanged (measured,
-    BENCH.md round-5 addendum; the subset co-partitioning fix is impossible for
-    cached self-joins in current Catalyst).
+    bucketed=False: one frame persisted at MEMORY_AND_DISK, every consumer
+    shares the object — but Catalyst re-resolves the cached frame's attributes
+    at the second self-join reference, severing the output-partitioning link,
+    so the b-side of the verify join gets re-exchanged (measured, BENCH.md
+    round-5 addendum; the subset co-partitioning fix is impossible for cached
+    self-joins in current Catalyst).  Only :func:`jaccard_pairs` uses it, for
+    small counted pair sets where that exchange is cluster-trivial.
 
-    store='bucketed': write the frame ONCE as a parquet table bucketed+sorted
+    bucketed=True: write the frame ONCE as a parquet table bucketed+sorted
     by doc_id (EAGER — same documented trade as the adaptive cap), then hand
     every consumer its OWN ``spark.table()`` read.  Each scan carries bucket
     partitioning on its own attribute ids, so per-doc aggregates and the
@@ -192,18 +180,11 @@ def _materialize_shingles(
 
     The bucket count equals the pre-write hash partitioning's count, so every
     write task holds exactly one bucket — no per-task file explosion."""
-    from pyspark import StorageLevel
-
-    if not hasattr(StorageLevel, storage_level):
-        # validate even in bucketed mode (where the level is inert): a typo'd
-        # level must fail loudly, not silently when the caller flips stores
-        raise ValueError(f"unknown storage_level {storage_level!r}")
-    spark = sh.sparkSession
-    if store == "persist":
-        p = _persist(sh, storage_level)
+    if not bucketed:
+        # explicit level, not cache(): cache() picks MEMORY_AND_DISK_DESER
+        p = sh.persist(StorageLevel.MEMORY_AND_DISK)
         return lambda: p
-    if store != "bucketed":
-        raise ValueError(f"unknown shingle_store {store!r}")
+    spark = sh.sparkSession
     # pid in the name: a killed session leaves its warehouse dir behind, and a
     # managed CREATE over a stale non-empty location fails — fresh pid, no clash
     tbl = f"gjus_shingles_{os.getpid()}_{next(_BUCKETED_SEQ)}"
@@ -372,6 +353,34 @@ def exact_dup_groups(df: DataFrame, content_col: str) -> DataFrame:
     )
 
 
+def _normalized(text_col: str):
+    """The one text normalization every shingle producer shares: lowercase,
+    whitespace runs collapsed to one space."""
+    return F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ").alias("_norm")
+
+
+def _shingle_stream(norm: DataFrame, shingle_n: int) -> DataFrame:
+    """(doc_id, _norm) -> (doc_id, shingle), one row per character-shingle
+    position (not distinct; a text shorter than ``shingle_n`` is its own single
+    shingle).  Explodes a position sequence and slices with a codegen
+    substring — no per-row array-of-strings, no interpreted higher-order
+    lambda, no re-evaluated regexp per shingle (exploding an
+    interpreted-transform ARRAY costs ~20 ms/row; this is ~100x faster).
+    Callers pick their own spread and normalize first."""
+    return norm.select(
+        "doc_id",
+        "_norm",
+        F.explode(
+            F.sequence(
+                F.lit(1), F.greatest(F.length("_norm") - (shingle_n - 1), F.lit(1))
+            )
+        ).alias("_i"),
+    ).select(
+        "doc_id",
+        F.substring(F.col("_norm"), F.col("_i"), F.lit(shingle_n)).alias("shingle"),
+    )
+
+
 def minhash_signatures(
     df: DataFrame, text_col: str, id_col: str, n_hashes: int = 32, shingle_n: int = 8
 ) -> DataFrame:
@@ -384,28 +393,15 @@ def minhash_signatures(
     over shingles) allocates 32 intermediate arrays per row outside codegen and is
     ~100x slower — do not regress to it.
     """
-    # normalize ONCE per doc, then explode a position sequence and slice with a
-    # codegen substring — no per-row array-of-strings materialization, no interpreted
-    # higher-order lambda, no re-evaluated regexp per shingle.  The regexp runs
-    # AFTER _spread (same bytes shuffled either way): a narrow source (one
-    # parquet file = 2 scan tasks at bench scale) would otherwise evaluate the
-    # whole corpus' regex on those few tasks while the other cores idle
+    # normalize ONCE per doc, AFTER _spread (same bytes shuffled either way): a
+    # narrow source (one parquet file = 2 scan tasks at bench scale) would
+    # otherwise evaluate the whole corpus' regex on those few tasks while the
+    # other cores idle
     norm = _spread(
         df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t")),
         "doc_id",
-    ).select(
-        "doc_id",
-        F.regexp_replace(F.lower(F.col("_t")), r"\s+", " ").alias("_norm"),
-    )
-    exploded = norm.select(
-        "doc_id",
-        "_norm",
-        F.explode(
-            F.sequence(
-                F.lit(1), F.greatest(F.length("_norm") - (shingle_n - 1), F.lit(1))
-            )
-        ).alias("_i"),
-    ).withColumn("shingle", F.substring(F.col("_norm"), F.col("_i"), F.lit(shingle_n)))
+    ).select("doc_id", _normalized("_t"))
+    exploded = _shingle_stream(norm, shingle_n)
     # hash the shingle STRING once; derive the hash family from the resulting long
     # (xxhash64 over 8 bytes per member instead of re-traversing the string n times).
     # selectExpr + one array-of-mins aggregate, NOT stacked Column objects (r7,
@@ -478,16 +474,6 @@ def minhash_candidate_pairs(
             )
         ).alias("band", "bucket"),
     )
-    if bucket_cap is None:
-        a = banded.alias("a")
-        b = banded.alias("b")
-        cand = a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        ).select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        return cand.distinct()
     pairs, _ = _capped_self_pairs(
         banded, ["band", "bucket"], "doc_id", [], bucket_cap, n_ids=n_docs
     )
@@ -496,15 +482,18 @@ def minhash_candidate_pairs(
     ).distinct()
 
 
+#: Verify-plan cutover of :func:`jaccard_pairs`, in counted candidate pairs
+#: (r7, measured).  At or under it the needed-doc shingle frame is
+#: cluster-trivial (<= ~60M rows at the default bucket cap).
+_SMALL_CANDS_MAX = 100_000
+
+
 def jaccard_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
     pairs: DataFrame,
     shingle_n: int = 8,
-    storage_level: str = "MEMORY_AND_DISK",
-    shingle_store: str = "bucketed",
-    pair_join_hint: str | None = "auto",
 ) -> DataFrame:
     """Exact n-gram Jaccard for given candidate (doc_a, doc_b) pairs.
 
@@ -514,37 +503,32 @@ def jaccard_pairs(
     array set ops on large string arrays are interpreted per-element and cost ~15 ms
     per 600x600 pair — orders of magnitude slower than the join plan.
 
-    ``shingle_store='bucketed'`` (the default, r6-measured) materializes the
-    distinct-shingle frame as a doc_id-bucketed parquet table instead of a
-    persisted cache (see :func:`_materialize_shingles`): every consumer scan
-    then carries bucket partitioning, so the verify join's second
-    (~10x-corpus) shingle reference is never re-exchanged and joins sort-free
-    via SMJ (requires the session's subset-co-partition conf — session.py).
-    Measured at 1M docs, ABAB probe-bracketed: minhash pipeline 76.9 -> 47.3 s,
-    ngram exact 144-158 -> 60-66 s, identical pair outputs.  EAGER (the write
-    happens at call time) and leaves a managed table behind; drop via
-    :func:`cleanup_shingle_tables` when done.  ``'persist'`` keeps the lazy
-    single-session cache plan.
+    The pair set is cached and counted (one job; the verify consumes it twice),
+    and the count picks the physical plan — by DATA SIZE, not a caller's string:
 
-    ``pair_join_hint`` (r7): ``'auto'`` keeps the measured per-store defaults
-    (``merge`` for bucketed, ``shuffle_hash`` for persist — see the comment at
-    the second join).  ``None`` drops the hint entirely: correct ONLY when the
-    ``pairs`` frame's statistics are accurate at plan time (e.g. a cache()d
-    frame already materialized by a count()) — the hint exists because
-    Catalyst's STATIC estimate of the (pairs x shingles) intermediate planned
-    a 13.4 GiB broadcast at 1M docs; with real pairs stats the planner
-    broadcasts the small pairs side instead and never the intermediate.
-    Callers with small, counted pair sets (the signature-prefiltered minhash
-    path) pass ``None`` so the tiny verify runs broadcast-side with zero
-    shingle-frame shuffle.
+    - at or under ``_SMALL_CANDS_MAX`` pairs: the shingle frame is persisted
+      and the pair join carries NO hint.  The counted pairs frame has accurate
+      statistics, so the planner broadcasts the small pairs side and the verify
+      runs with zero shingle-frame shuffle (measured at 50k docs / 2.6k pairs:
+      verify 2.6 s bucketed -> ~1 s persisted+unhinted).
+    - above it: the verify side is corpus-like.  The shingle frame becomes a
+      doc_id-bucketed parquet table (see :func:`_materialize_shingles`) and
+      the pair join is hinted ``merge``: the second (~10x-corpus) shingle
+      reference joins sort-free with no exchange (requires the session's
+      subset-co-partition conf — session.py).  Measured at 1M docs, ABAB
+      probe-bracketed: minhash pipeline 76.9 -> 47.3 s, identical pair
+      outputs.  The write is EAGER and leaves a managed table behind; drop it
+      via :func:`cleanup_shingle_tables` when done.
     """
+    # the count materializes the cache AND gives the planner accurate pairs
+    # statistics for the unhinted small plan
+    pairs = pairs.cache()
+    bucketed = pairs.count() > _SMALL_CANDS_MAX
     needed = (
         pairs.select(F.col("doc_a").alias(id_col))
         .unionByName(pairs.select(F.col("doc_b").alias(id_col)))
         .distinct()
     )
-    # codegen shingle stream (normalize once -> explode positions -> substring):
-    # exploding an interpreted-transform ARRAY costs ~20 ms/row; this is ~100x faster.
     # _spread_keyed: the doc_id hash partitioning FUSES the distinct below and the
     # sizes aggregate with zero exchange of the ~10x shingle frame (same measured
     # trade as ngram_jaccard_pairs_exact — BENCH.md round-5 addendum)
@@ -560,46 +544,21 @@ def jaccard_pairs(
         ),
         "doc_id",
         tgt,
-    ).select(
-        "doc_id",
-        F.regexp_replace(F.lower(F.col("_t")), r"\s+", " ").alias("_norm"),
-    )
-    sh_ex = (
-        norm.select(
-            "doc_id",
-            "_norm",
-            F.explode(
-                F.sequence(
-                    F.lit(1), F.greatest(F.length("_norm") - (shingle_n - 1), F.lit(1))
-                )
-            ).alias("_i"),
-        )
-        .select(
-            "doc_id",
-            F.substring(F.col("_norm"), F.col("_i"), F.lit(shingle_n)).alias("shingle"),
-        )
-        .distinct()
-    )
-    ref = _materialize_shingles(sh_ex, shingle_store, storage_level, tgt)
+    ).select("doc_id", _normalized("_t"))
+    sh = _shingle_stream(norm, shingle_n).distinct()
+    ref = _materialize_shingles(sh, tgt, bucketed)
     sizes = ref().groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
     ex_a = ref().select(F.col("doc_id").alias("doc_a"), "shingle")
     ex_b = ref().select(F.col("doc_id").alias("doc_b"), "shingle")
-    # shuffle_hash hint on the exploded (pairs x shingles) intermediate:
-    # Catalyst sizes it from the SMALL pairs side and statically plans the
+    # merge hint on the exploded (pairs x shingles) intermediate of the large
+    # plan: Catalyst sizes it from the pairs side and statically planned the
     # second join as a broadcast of the intermediate — |pairs| * |doc| rows,
-    # measured 13.4 GiB attempted at 1M docs vs the 8 GiB hard limit.  The hint
-    # was measured at BOTH scales: toy-scale cost is in the noise band
-    # (probe-normalized 1.18 vs 1.18 unhinted at sf0.1) and the 1M-doc pipeline
-    # completes in 72.7 s.  Per-partition build maps assume the cluster sizes
-    # shuffle partitions to fit executor memory (standard Spark contract).
-    # Bucketed mode replaces it with merge: the bucketed+sorted ex_b side joins
-    # with zero exchange AND zero sort, and SMJ spills gracefully on the
-    # intermediate side at any scale (closes the large-build-side risk).
-    if pair_join_hint == "auto":
-        pair_join_hint = "merge" if shingle_store == "bucketed" else "shuffle_hash"
+    # measured 13.4 GiB attempted at 1M docs vs the 8 GiB hard limit.  The
+    # bucketed+sorted ex_b side joins with zero exchange AND zero sort, and SMJ
+    # spills gracefully on the intermediate side at any scale.
     joined_a = pairs.join(ex_a, "doc_a")
-    if pair_join_hint is not None:
-        joined_a = joined_a.hint(pair_join_hint)
+    if bucketed:
+        joined_a = joined_a.hint("merge")
     inter = (
         joined_a.join(ex_b, ["doc_b", "shingle"])
         .groupBy("doc_a", "doc_b")
@@ -631,8 +590,7 @@ def _sig_prefilter_cut(threshold: float, n_hashes: int, n_bands: int) -> int:
     boundary point is the binding constraint — see minhash_near_dups.
     Driver-side arithmetic over n_hashes+1 terms; exact (math.comb)."""
     if threshold <= 0:
-        # jaccard >= 0 admits every pair — filtering would be semantically
-        # wrong (the fixed-margin path skips the filter here too)
+        # jaccard >= 0 admits every pair — filtering would be semantically wrong
         return 0
     r = max(1, n_hashes // n_bands)
     miss_band = (1.0 - threshold**r) ** n_bands
@@ -662,18 +620,13 @@ def minhash_near_dups(
     n_bands: int = 8,
     shingle_n: int = 8,
     bucket_cap: int | None = 20_000,
-    storage_level: str = "MEMORY_AND_DISK",
-    shingle_store: str = "auto",
-    sig_prefilter_margin: float | str | None = "auto",
-    small_cands_max: int = 100_000,
+    sig_prefilter_margin: str | None = "auto",
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: signatures -> banded candidates ->
     signature-agreement prefilter -> exact Jaccard verify -> pairs over
     threshold.  ``bucket_cap`` bounds degenerate band buckets (see
-    :func:`minhash_candidate_pairs` for the recall contract);
-    ``storage_level`` is the verify stage's shingle-cache knob (``DISK_ONLY`` for
-    corpus-scale runs — see :func:`_persist`); ``shingle_store='bucketed'``
-    swaps the verify stage's shingle cache for a doc_id-bucketed table (see
+    :func:`minhash_candidate_pairs` for the recall contract); the verify
+    plan follows the counted surviving-candidate volume (see
     :func:`jaccard_pairs`).
 
     ``sig_prefilter_margin`` (r7, measured): banding admits any pair agreeing
@@ -682,38 +635,27 @@ def minhash_near_dups(
     2,544 verify at threshold 0.5, with the signature match-count distribution
     bimodal (flukes <= 14/32 matching hashes, true pairs >= 25/32).  Before the
     (expensive, shingle-exploding) exact verify, drop candidates whose FULL
-    signature agreement is below ``ceil((threshold - margin) * n_hashes)``
-    matching components — a 2-long-arrays comparison per pair, no shingles
-    touched.  Verify volume shrinks ~17x at the bench corpus.
+    signature agreement is below a cut of matching components — a
+    2-long-arrays comparison per pair, no shingles touched.  Verify volume
+    shrinks ~17x at the bench corpus.
 
     Recall contract: a true pair at jaccard j has match-count ~
     Binomial(n_hashes, j), so the prefilter's miss probability is the lower
-    Binomial tail below the cut.  The default ``'auto'`` picks the LARGEST
+    Binomial tail below the cut.  ``'auto'`` (the only mode) picks the LARGEST
     cut whose tail at j=threshold stays within the banding miss the pipeline
     already accepts at that same point (``P[Bin(n, t) <= cut-1] <=
     (1 - t^rows_per_band)^n_bands``) — self-calibrating across thresholds:
     at threshold 0.5 banding misses ~60% at the boundary, so the cut is an
     aggressive 17/32 (P[miss] ~5e-6 at the corpus' true-pair j>=0.83); at
     threshold 0.8 banding misses only 1.5%, so the cut backs off to 20/32
-    (P[miss at j=0.82] ~0.1% vs banding's 0.8%).  A FIXED float margin cuts
-    at ``ceil((threshold - margin) * n_hashes)`` — the measured history that
-    motivated 'auto': margin 0.125 at threshold 0.8 (cut 22) lost 4 of 500k
-    true pairs at 1M docs beyond banding's own 8 (499,988 vs 499,992); the
-    auto cut 20 recovers them (re-measured: 499,992, equal to the
-    prefilter-off result).  ``None`` disables the prefilter and restores the
-    verify-every-candidate plan.
-
-    ``shingle_store='auto'`` (r7, measured): the surviving candidate count is
-    known exactly (the cache-materializing count below), so pick the verify
-    plan by DATA SIZE, not by a constant: at or under ``small_cands_max``
-    pairs the needed-doc shingle frame is cluster-trivial (<= ~60M rows at the
-    default cap) — use ``'persist'`` with NO pair-join hint, letting the
-    planner broadcast the small counted pairs frame so the verify runs with
-    zero shingle-frame shuffle (measured at 50k docs / 2.6k pairs: verify
-    2.6 s bucketed -> ~1 s persisted+unhinted).  Above the cap, the verify
-    side is corpus-like — the r6 bucketed store (zero-exchange b-side scan,
-    merge join) remains the measured winner at 1M+ docs.  Explicit
-    ``'bucketed'``/``'persist'`` force either plan."""
+    (P[miss at j=0.82] ~0.1% vs banding's 0.8%).  At 1M docs and threshold
+    0.8 it keeps 499,992 true pairs, equal to the prefilter-off result.
+    ``None`` disables the prefilter and restores the verify-every-candidate
+    plan; any other value raises ``ValueError``."""
+    if sig_prefilter_margin not in ("auto", None):
+        raise ValueError(
+            f"sig_prefilter_margin must be 'auto' or None, got {sig_prefilter_margin!r}"
+        )
     # materialize signatures once (tiny: one row of n_hashes longs per doc) — the
     # banding SELF-join would otherwise evaluate the whole shingle+hash subtree
     # twice.  In the capped mode the count below follows immediately, so the
@@ -730,51 +672,32 @@ def minhash_near_dups(
     # not needed at all in the uncapped mode
     n_docs = sigs.count() if bucket_cap is not None else None
     cands = minhash_candidate_pairs(sigs, n_bands, bucket_cap=bucket_cap, n_docs=n_docs)
-    if sig_prefilter_margin is not None:
-        if sig_prefilter_margin == "auto":
-            min_match = _sig_prefilter_cut(threshold, n_hashes, n_bands)
-        else:
-            min_match = math.ceil((threshold - sig_prefilter_margin) * n_hashes)
-        if min_match > 0:
-            # two narrow equi-joins attach the checkpointed signatures to the
-            # pair list (plain joins — sigs is corpus-sized at scale, never
-            # broadcast); the agreement count is one codegen'd 2-array pass per
-            # pair.  Shuffle volume is O(|cands|) rows of 2 ids + one
-            # n_hashes-long array — bounded by the candidate volume LSH already
-            # bounds, and repaid ~10x by the shrunken shingle verify.
-            sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("_sa"))
-            sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("_sb"))
-            n_match = F.size(
-                F.filter(F.zip_with("_sa", "_sb", lambda x, y: x == y), lambda v: v)
-            )
-            cands = (
-                cands.join(sa, "doc_a")
-                .join(sb, "doc_b")
-                .filter(n_match >= F.lit(min_match))
-                .select("doc_a", "doc_b")
-            )
-    # cache the (small) surviving candidate-pair set: the verify stage consumes
-    # it twice (doc semi-join + pair join)
-    cands = cands.cache()
-    pair_join_hint: str | None = "auto"
-    if shingle_store == "auto":
-        # the count materializes the cache (consumed twice below anyway) AND
-        # gives the planner accurate pairs statistics for the unhinted plan
-        n_cands = cands.count()
-        if n_cands <= small_cands_max:
-            shingle_store, pair_join_hint = "persist", None
-        else:
-            shingle_store = "bucketed"
-    return jaccard_pairs(
-        df,
-        text_col,
-        id_col,
-        cands,
-        shingle_n,
-        storage_level=storage_level,
-        shingle_store=shingle_store,
-        pair_join_hint=pair_join_hint,
-    ).filter(F.col("jaccard") >= threshold)
+    min_match = (
+        _sig_prefilter_cut(threshold, n_hashes, n_bands)
+        if sig_prefilter_margin == "auto"
+        else 0
+    )
+    if min_match > 0:
+        # two narrow equi-joins attach the checkpointed signatures to the
+        # pair list (plain joins — sigs is corpus-sized at scale, never
+        # broadcast); the agreement count is one codegen'd 2-array pass per
+        # pair.  Shuffle volume is O(|cands|) rows of 2 ids + one
+        # n_hashes-long array — bounded by the candidate volume LSH already
+        # bounds, and repaid ~10x by the shrunken shingle verify.
+        sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("_sa"))
+        sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("_sb"))
+        n_match = F.size(
+            F.filter(F.zip_with("_sa", "_sb", lambda x, y: x == y), lambda v: v)
+        )
+        cands = (
+            cands.join(sa, "doc_a")
+            .join(sb, "doc_b")
+            .filter(n_match >= F.lit(min_match))
+            .select("doc_a", "doc_b")
+        )
+    return jaccard_pairs(df, text_col, id_col, cands, shingle_n).filter(
+        F.col("jaccard") >= threshold
+    )
 
 
 def dedup_components(
@@ -1184,7 +1107,7 @@ def _prefix_candidates(
         # the caller feeding a doc_id-partitioned frame (see _spread_keyed) the
         # two per-doc windows fuse onto one exchange.  (History: a full freq
         # broadcast exhausted the driver at 1M docs — "Not enough memory to
-        # build and broadcast" — and a shuffle_hash variant OOM'd on 32
+        # build and broadcast" — and a shuffled hash-join variant OOM'd on 32
         # concurrent multi-million-entry build maps.  The 'sampled' mode
         # broadcast is immune to both: it is CAPPED at hh_top_m entries.)
         base = sh.withColumn("_df", F.count("*").over(Window.partitionBy("shingle")))
@@ -1269,8 +1192,6 @@ def ngram_jaccard_pairs_exact(
     id_col: str,
     threshold: float,
     shingle_n: int = 8,
-    storage_level: str = "MEMORY_AND_DISK",
-    shingle_store: str = "bucketed",
     doc_freq: str = "exact",
 ) -> DataFrame:
     """EXACT all-pairs character n-gram Jaccard >= threshold — prefix-filtered
@@ -1291,12 +1212,13 @@ def ngram_jaccard_pairs_exact(
     stage of MinHash-LSH (the probabilistic pipeline's output is a subset of this
     result by construction).
 
-    The distinct-shingle frame is persisted for its consumers (sizes, frequency
-    ranking, and both verify join sides) at ``storage_level`` — the default
-    MEMORY_AND_DISK degrades gracefully; corpus-scale runs (the shingle frame is
-    ~10x the corpus) should pass ``DISK_ONLY``.  Long-lived sessions issuing many
-    corpora should unpersist via ``spark.catalog.clearCache()`` between batches
-    (the cache is per-call state).
+    The distinct-shingle frame is written once as a doc_id-bucketed table (see
+    :func:`_materialize_shingles`) and read by each consumer (sizes, frequency
+    ranking, and both verify join sides).  It is built before any candidate
+    exists, so unlike :func:`jaccard_pairs` there is no pair count to choose a
+    plan by.  Measured at 1M docs, ABAB probe-bracketed: 144-158 s persisted ->
+    60-66 s bucketed, identical pairs.  EAGER (the write happens at call time);
+    drop the table via :func:`cleanup_shingle_tables` when done.
     """
     # _spread_keyed: the pre-explode corpus shuffles ONCE by doc_id so that the
     # distinct below — whose keys (doc_id, shingle) are clustered by doc_id —
@@ -1304,39 +1226,18 @@ def ngram_jaccard_pairs_exact(
     # ~10x-larger shingle frame (measured at 1M docs, BENCH.md round-5 addendum)
     tgt = _bucket_target(df)
     norm = _spread_keyed(
-        df.select(
-            F.col(id_col).alias("doc_id"),
-            F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ").alias("_norm"),
-        ),
-        "doc_id",
-        tgt,
+        df.select(F.col(id_col).alias("doc_id"), _normalized(text_col)), "doc_id", tgt
     )
-    sh = (
-        norm.select(
-            "doc_id",
-            "_norm",
-            F.explode(
-                F.sequence(
-                    F.lit(1), F.greatest(F.length("_norm") - (shingle_n - 1), F.lit(1))
-                )
-            ).alias("_i"),
-        )
-        .select(
-            "doc_id",
-            F.substring(F.col("_norm"), F.col("_i"), F.lit(shingle_n)).alias("shingle"),
-        )
-        .distinct()
-    )
-    ref = _materialize_shingles(sh, shingle_store, storage_level, tgt)
+    ref = _materialize_shingles(_shingle_stream(norm, shingle_n).distinct(), tgt)
     sh = ref()
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     cand = _prefix_candidates(sh, threshold, doc_freq=doc_freq)
     # verify: intersection over the FULL shingle sets, restricted to candidates
     # (merge hints: Catalyst statically broadcast the corpus shingle frame `a`
     # here at 1M docs — same estimate trap as jaccard_pairs; not on the bench
-    # path, so SMJ everywhere).  In bucketed mode `a` and `b` are INDEPENDENT
-    # table reads, each carrying its own bucket partitioning — the b-side
-    # joins with no exchange and no sort.
+    # path, so SMJ everywhere).  `a` and `b` are INDEPENDENT bucketed table
+    # reads, each carrying its own bucket partitioning — the b-side joins with
+    # no exchange and no sort.
     a = ref().select(F.col("doc_id").alias("doc_a"), "shingle")
     b = ref().select(F.col("doc_id").alias("doc_b"), "shingle")
     inter = (

@@ -336,24 +336,6 @@ def within_distance_join(
     return out
 
 
-def _tile_frac_exprs(lat_col: str, lon_col: str, zoom: int):
-    """Fractional (unfloored) tile coordinates — projected position in tile units."""
-    import math
-
-    from geojson_utility_spark.functions.cells import MAX_LAT
-
-    n = F.lit(float(1 << zoom))
-    lat_c = F.greatest(F.lit(-MAX_LAT), F.least(F.lit(MAX_LAT), F.col(lat_col)))
-    xf = (F.col(lon_col) + F.lit(180.0)) / F.lit(360.0) * n
-    lat_rad = F.radians(lat_c)
-    yf = (
-        (F.lit(1.0) - F.log(F.tan(lat_rad) + F.lit(1.0) / F.cos(lat_rad)) / F.lit(math.pi))
-        / F.lit(2.0)
-        * n
-    )
-    return xf, yf
-
-
 def knn_brute_force_arrow(
     points: DataFrame,
     targets: DataFrame,

@@ -210,15 +210,6 @@ def validate_locations(df: DataFrame) -> DataFrame:
     )
 
 
-def split_valid(df_validated: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(valid, invalid) branches; both retained for the final union (cardinality is
-    part of the output contract — SURVEY.md §2.2 preamble)."""
-    return (
-        df_validated.filter(F.col("errors") == ""),
-        df_validated.filter(F.col("errors") != ""),
-    )
-
-
 def reject_file_errors(df: DataFrame) -> list[str]:
     """File-level guards P2/P4/P5 -> list of file-level error strings (driver-side
     pre-flight, mirrors reference catchment.py:175-202; empty list = admissible)."""

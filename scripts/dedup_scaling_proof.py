@@ -68,8 +68,7 @@ def pipeline():
     # pairs checkpointed once (tiny frame) so the identical-outputs gate gets
     # the pair count from the SAME timed pass — components reads the
     # checkpoint, exactly one verify execution either way
-    pairs = minhash_near_dups(docs, "text", "doc_id", threshold=0.8,
-                              storage_level="DISK_ONLY").localCheckpoint()
+    pairs = minhash_near_dups(docs, "text", "doc_id", threshold=0.8).localCheckpoint()
     n_pairs = pairs.count()
     comps = dedup_components(pairs)
     keep = F.coalesce(F.col("component"), F.col("doc_id"))

@@ -411,23 +411,52 @@ def test_minhash_near_dups_unchanged_by_sig_prefilter(spark, docs):
     b = set(map(tuple, base[["doc_a", "doc_b"]].values))
     u = set(map(tuple, unfiltered[["doc_a", "doc_b"]].values))
     assert b == u and len(b) > 0
+    # 'auto' and None are the only modes; anything else fails before any job
+    sc = spark.sparkContext
+    sc.setJobGroup("bad_prefilter_mode", "must launch no job")
+    try:
+        with pytest.raises(ValueError, match="sig_prefilter_margin"):
+            D.minhash_near_dups(
+                docs, "text", "doc_id", threshold=0.5, sig_prefilter_margin=0.125
+            )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup("bad_prefilter_mode")
 
 
-def test_minhash_near_dups_auto_store_matches_explicit(spark, docs):
-    """shingle_store='auto' (r7) picks a physical plan by candidate count; the
-    result set must equal both explicit stores."""
+def test_sig_prefilter_cut_loss_bound():
+    """The prefilter cut is the LARGEST whose Binomial miss at the threshold
+    stays within banding's own miss there (32 hashes, 8 bands of 4 rows)."""
+    import math
+
+    n, bands = 32, 8
+    assert D._sig_prefilter_cut(0.5, n, bands) == 17
+    assert D._sig_prefilter_cut(0.8, n, bands) == 20
+
+    def tail(t, c):  # P[Bin(n, t) <= c]
+        return sum(math.comb(n, k) * t**k * (1 - t) ** (n - k) for k in range(c + 1))
+
+    for t in (0.3, 0.5, 0.7, 0.8, 0.9):
+        cut = D._sig_prefilter_cut(t, n, bands)
+        miss_band = (1 - t**4) ** bands
+        assert tail(t, cut - 1) <= miss_band, t
+        assert tail(t, cut) > miss_band, t
+
+
+def test_minhash_near_dups_auto_store_matches_explicit(spark, docs, monkeypatch):
+    """The verify plan follows the counted candidate volume: the small
+    persisted plan at the default cutover, the bucketed one when the cutover
+    (read at call time) is 0 — identical pair sets, and only the second
+    registers a bucketed table."""
     D.cleanup_shingle_tables(spark)
-    auto = D.minhash_near_dups(docs, "text", "doc_id", threshold=0.5).toPandas()
-    pers = D.minhash_near_dups(
-        docs, "text", "doc_id", threshold=0.5, shingle_store="persist"
-    ).toPandas()
-    buck = D.minhash_near_dups(
-        docs, "text", "doc_id", threshold=0.5, shingle_store="bucketed"
-    ).toPandas()
+    small = D.minhash_near_dups(docs, "text", "doc_id", threshold=0.5).toPandas()
+    assert not D._BUCKETED_SHINGLE_TABLES
+    monkeypatch.setattr(D, "_SMALL_CANDS_MAX", 0)
+    large = D.minhash_near_dups(docs, "text", "doc_id", threshold=0.5).toPandas()
+    assert D._BUCKETED_SHINGLE_TABLES
     D.cleanup_shingle_tables(spark)
-    a = set(map(tuple, auto[["doc_a", "doc_b"]].values))
-    assert a == set(map(tuple, pers[["doc_a", "doc_b"]].values))
-    assert a == set(map(tuple, buck[["doc_a", "doc_b"]].values))
+    a = set(map(tuple, small[["doc_a", "doc_b"]].values))
+    assert a == set(map(tuple, large[["doc_a", "doc_b"]].values))
     assert len(a) > 0
 
 
@@ -808,39 +837,6 @@ def test_ivf_near_dups_nprobe1_hot_list_warns(spark):
         )
 
 
-def test_shingle_cache_storage_level_knob(spark):
-    """storage_level parameter reaches the distinct-shingle persist (DISK_ONLY
-    for corpus-scale runs) and an unknown name raises; results are identical
-    across levels."""
-    import pytest
-
-    spark.catalog.clearCache()
-    rows = [(i, f"some repeated text body number {i % 7} padded out to shingles")
-            for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = D.ngram_jaccard_pairs_exact(
-        df, "text", "doc_id", threshold=0.8, storage_level="DISK_ONLY",
-        shingle_store="persist",
-    )
-    got = {(r["doc_a"], r["doc_b"]) for r in out.collect()}
-    # the persisted shingle frame is disk-only (no in-memory copies)
-    levels = [
-        rdd.storageLevel() for rdd in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    ]
-    assert any(lv.useDisk() and not lv.useMemory() for lv in levels), [
-        str(lv) for lv in levels
-    ]
-    spark.catalog.clearCache()
-    want = {(r["doc_a"], r["doc_b"]) for r in D.ngram_jaccard_pairs_exact(
-        df, "text", "doc_id", threshold=0.8, shingle_store="persist").collect()}
-    assert got == want and len(want) > 0
-    spark.catalog.clearCache()
-    with pytest.raises(ValueError, match="storage_level"):
-        D.jaccard_pairs(df, "text", "doc_id", df.select(
-            F.col("doc_id").alias("doc_a"), F.col("doc_id").alias("doc_b")),
-            storage_level="NOT_A_LEVEL")
-
-
 def test_dedup_components_matches_union_find(spark):
     """Connected components over a random pair graph == python union-find
     (min-id representative), including multi-hop chains; empty input yields an
@@ -955,28 +951,27 @@ def test_python_xxh64_matches_spark(spark, sf_dir):
         assert xxh64_str(r.s) == r.h, f"xxh64 mismatch on {r.s!r}"
 
 
-def test_bucketed_shingle_store_results_and_plan(spark):
-    """shingle_store='bucketed' (r6): identical results to the persisted plan,
-    and the verify join's second shingle reference is a bucketed scan with NO
-    exchange above it — the physical-bucketing escape from the cached
-    self-join attribute re-resolution (BENCH.md round-5 addendum)."""
+def test_bucketed_shingle_store_results_and_plan(spark, monkeypatch):
+    """The doc_id-bucketed shingle store (r6): ngram output equals a python
+    brute force, and the verify join's second shingle reference is a bucketed
+    scan with NO exchange above it — the physical-bucketing escape from the
+    cached self-join attribute re-resolution (BENCH.md round-5 addendum)."""
+    import itertools
+
     spark.catalog.clearCache()
     rows = [
         (i, f"some repeated text body number {i % 9} padded out to shingles ok")
         for i in range(60)
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    want = {
-        (r["doc_a"], r["doc_b"], round(r["jaccard"], 9))
-        for r in D.ngram_jaccard_pairs_exact(
-            df, "text", "doc_id", 0.8, shingle_store="persist"
-        ).collect()
-    }
+    sets = {i: _py_shingles(t) for i, t in rows}
+    want = set()
+    for a, b in itertools.combinations(sorted(sets), 2):
+        j = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+        if j >= 0.8:
+            want.add((a, b, round(j, 9)))
     assert len(want) > 0
-    spark.catalog.clearCache()
-    out = D.ngram_jaccard_pairs_exact(
-        df, "text", "doc_id", 0.8, shingle_store="bucketed"
-    )
+    out = D.ngram_jaccard_pairs_exact(df, "text", "doc_id", 0.8)
     got = {
         (r["doc_a"], r["doc_b"], round(r["jaccard"], 9))
         for r in out.collect()
@@ -991,22 +986,17 @@ def test_bucketed_shingle_store_results_and_plan(spark):
     assert "CLUSTERED BY (doc_id)" in ddl and "SORTED BY (doc_id" in ddl, ddl
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Bucketed: true" in plan, plan[:4000]
-    # minhash pipeline: same equivalence through the composed path
+    # minhash pipeline: the bucketed verify plan (forced by a 0 cutover) gives
+    # the pairs the brute force finds
     spark.catalog.clearCache()
-    mh_want = {
-        (r["doc_a"], r["doc_b"])
-        for r in D.minhash_near_dups(
-            df, "text", "doc_id", threshold=0.8, shingle_store="persist"
-        ).collect()
-    }
-    spark.catalog.clearCache()
+    monkeypatch.setattr(D, "_SMALL_CANDS_MAX", 0)
+    n_tables = len(D._BUCKETED_SHINGLE_TABLES)
     mh_got = {
         (r["doc_a"], r["doc_b"])
-        for r in D.minhash_near_dups(
-            df, "text", "doc_id", threshold=0.8, shingle_store="bucketed"
-        ).collect()
+        for r in D.minhash_near_dups(df, "text", "doc_id", threshold=0.8).collect()
     }
-    assert mh_got == mh_want and len(mh_want) > 0
+    assert len(D._BUCKETED_SHINGLE_TABLES) == n_tables + 1
+    assert mh_got == {(a, b) for a, b, _ in want}
     # cleanup drops every materialized table (managed -> files removed too)
     made = list(D._BUCKETED_SHINGLE_TABLES)
     D.cleanup_shingle_tables(spark)
