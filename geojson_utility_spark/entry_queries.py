@@ -48,11 +48,7 @@ def _reclaim(spark: SparkSession) -> None:
     heavy pipelines only — cheap entries leave the session untouched.
 
     The clearCache() is session-global: safe ONLY under the sequential
-    collect-then-construct contract above.  A harness that constructs entries
-    concurrently (or interleaves them with its own cached frames) must set
-    ``SPARK_GRAFT_NO_RECLAIM=1`` to disable it and manage heap itself."""
-    if os.environ.get("SPARK_GRAFT_NO_RECLAIM") == "1":
-        return
+    collect-then-construct contract above."""
     spark.catalog.clearCache()
     from geojson_utility_spark.operators.dedup import (
         cleanup_shingle_tables,
@@ -1953,7 +1949,7 @@ def oracle_rasterize_masks() -> str:
 
     Everything else is computed in SQL with bit-identical IEEE arithmetic (parity
     rules at the top of this file): the three-way conservative cover rule of
-    functions/cells.py:polygon_to_cells (probe-point even-odd parity for center +
+    functions/cells.py:_classify_tiles (probe-point even-odd parity for center +
     4 corners, ring-vertex-in-rect, ring-edge x tile-edge intersection incl.
     collinear touch), then the 32x32 pixel-center covers-PIP of functions/pip.py
     (half-open even-odd crossing OR exact on-edge) and the coverage fraction
@@ -2042,7 +2038,7 @@ def oracle_rasterize_masks() -> str:
     cover_xint = "({py} - ed.ey1) * (ed.ex2 - ed.ex1) / (ed.ey2 - ed.ey1)"
     pixel_xint = "({py} - ed.ey1) * ((ed.ex2 - ed.ex1) / (ed.ey2 - ed.ey1))"
 
-    # engine tile-edge order: S, E, N, W (functions/cells.py:polygon_to_cells)
+    # engine tile-edge order: S, E, N, W (functions/cells.py:_classify_tiles)
     tile_edges = "(w, s, e, s), (e, s, e, n), (e, n, w, n), (w, n, w, s)"
 
     return f"""

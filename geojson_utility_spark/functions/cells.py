@@ -141,8 +141,9 @@ def grid_ring(cell: int, k: int) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 def _points_in_ring(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
-    """Even-odd ray cast of points against one ring (duplicated here to keep cells.py
-    dependency-free; the engine-grade version lives in functions/pip.py)."""
+    """Even-odd ray cast of points against one ring.  Kept apart from pip's
+    ``RingKernel`` on purpose: this computes the crossing x as mul-then-div, and
+    the ``rasterize_masks`` oracle SQL mirrors that exact op order."""
     x1 = ring[:-1, 0][None, :]
     y1 = ring[:-1, 1][None, :]
     x2 = ring[1:, 0][None, :]
@@ -197,53 +198,10 @@ def polygon_to_cells(ring: np.ndarray, zoom: int) -> np.ndarray:
     covered cell (no false negatives at the candidate stage — SURVEY.md §7 hard part c).
 
     ring: (M, 2) array of (lon, lat), closed or open (closure enforced here).
+    The one-level case of :func:`polygon_to_cells_adaptive`: every bbox tile at
+    ``zoom`` is classified once by :func:`_classify_tiles`.
     """
-    ring = np.asarray(ring, dtype=np.float64)
-    if not (ring[0] == ring[-1]).all():
-        ring = np.vstack([ring, ring[:1]])
-    lon_min, lat_min = ring.min(axis=0)
-    lon_max, lat_max = ring.max(axis=0)
-    c_min = latlng_to_cell(lat_max, lon_min, zoom)  # NW corner -> min x, min y
-    c_max = latlng_to_cell(lat_min, lon_max, zoom)  # SE corner -> max x, max y
-    _, x0, y0 = (int(v) for v in unpack_cell(c_min))
-    _, x1, y1 = (int(v) for v in unpack_cell(c_max))
-    xs = np.arange(x0, x1 + 1, dtype=np.int64)
-    ys = np.arange(y0, y1 + 1, dtype=np.int64)
-    gx, gy = np.meshgrid(xs, ys, indexing="ij")
-    cand = pack_cell(zoom, gx.ravel(), gy.ravel())
-
-    w, s, e, n = cell_bounds(cand)
-    # (1) any tile center/corner inside polygon
-    cx = (w + e) / 2.0
-    cy = (s + n) / 2.0
-    inside = _points_in_ring(cx, cy, ring)
-    for px, py in ((w, s), (w, n), (e, s), (e, n)):
-        inside |= _points_in_ring(px, py, ring)
-    # (2) any ring vertex inside the tile rect
-    vx = ring[:-1, 0][None, :]
-    vy = ring[:-1, 1][None, :]
-    vert_in = (
-        (vx >= w[:, None]) & (vx <= e[:, None]) & (vy >= s[:, None]) & (vy <= n[:, None])
-    ).any(axis=1)
-    inside |= vert_in
-    # (3) any ring edge crosses any tile edge — only for still-undecided tiles
-    undecided = ~inside
-    if undecided.any():
-        idx = np.nonzero(undecided)[0]
-        r1 = ring[:-1]
-        r2 = ring[1:]
-        wi, si, ei, ni = w[idx], s[idx], e[idx], n[idx]
-        for (ax, ay, bx, by) in (
-            (wi, si, ei, si),
-            (ei, si, ei, ni),
-            (ei, ni, wi, ni),
-            (wi, ni, wi, si),
-        ):
-            a1 = np.stack([ax, ay], axis=1)
-            a2 = np.stack([bx, by], axis=1)
-            hit = _segments_intersect(a1, a2, r1, r2).any(axis=1)
-            inside[idx] |= hit
-    return np.sort(cand[inside])
+    return polygon_to_cells_adaptive(ring, zoom, coarse_zoom=zoom)
 
 
 def _classify_tiles(cand: np.ndarray, ring: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -267,10 +225,10 @@ def _classify_tiles(cand: np.ndarray, ring: np.ndarray) -> tuple[np.ndarray, np.
         (vx >= w[:, None]) & (vx <= e[:, None]) & (vy >= s[:, None]) & (vy <= n[:, None])
     ).any(axis=1)
 
-    # edge crossings only where undecided by the cheap tests
+    # edge crossings only where undecided by the cheap tests: vertex-in already
+    # implies intersecting AND not-fully-inside
     edge_cross = np.zeros(cand.shape[0], dtype=bool)
-    need = ~(vert_in & True)  # vertex-in already implies intersecting AND not-full-inside
-    idx = np.nonzero(need | all_corners)[0]
+    idx = np.nonzero(~vert_in | all_corners)[0]
     if idx.size:
         r1 = ring[:-1]
         r2 = ring[1:]

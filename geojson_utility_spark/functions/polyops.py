@@ -5,61 +5,18 @@ Two simple polygons intersect (share any point, boundary-inclusive) iff
   (b) any vertex of B lies in A, or
   (c) any edge of A intersects any edge of B (incl. touching/collinear overlap).
 (a)/(b) catch full containment; (c) catches boundary crossings with no contained
-vertex.  Vertex tests reuse the ray-cast PIP kernel; the edge test is the standard
-orientation/on-segment predicate vectorized over the full E_a x E_b grid (ring sizes
-are tens of vertices, so the grid is tiny per pair).
+vertex.  Vertex tests reuse the ray-cast PIP kernel; the edge test is
+``cells._segments_intersect``, the orientation/on-segment predicate the tile cover
+uses, vectorized over the full E_a x E_b grid (ring sizes are tens of vertices, so
+the grid is tiny per pair).
 """
 
 from __future__ import annotations
 
 import numpy as np
 
+from geojson_utility_spark.functions import cells as C
 from geojson_utility_spark.functions import pip as P
-
-
-def _edges(ring: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    r = P._closed(ring)
-    return r[:-1, 0], r[:-1, 1], r[1:, 0], r[1:, 1]
-
-
-def _segments_intersect_grid(a: np.ndarray, b: np.ndarray) -> bool:
-    """True if ANY segment of ring a intersects ANY segment of ring b
-    (proper crossings, endpoint touches, and collinear overlaps)."""
-    ax1, ay1, ax2, ay2 = _edges(a)
-    bx1, by1, bx2, by2 = _edges(b)
-    # orientation of (p, q, r): sign of cross(q - p, r - p); grids (Ea, Eb)
-    AX1, BX1 = ax1[:, None], bx1[None, :]
-    AY1, BY1 = ay1[:, None], by1[None, :]
-    AX2, BX2 = ax2[:, None], bx2[None, :]
-    AY2, BY2 = ay2[:, None], by2[None, :]
-
-    def orient(px, py, qx, qy, rx, ry):
-        return (qx - px) * (ry - py) - (qy - py) * (rx - px)
-
-    d1 = orient(AX1, AY1, AX2, AY2, BX1, BY1)
-    d2 = orient(AX1, AY1, AX2, AY2, BX2, BY2)
-    d3 = orient(BX1, BY1, BX2, BY2, AX1, AY1)
-    d4 = orient(BX1, BY1, BX2, BY2, AX2, AY2)
-    proper = ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
-    if proper.any():
-        return True
-
-    # touching / collinear: a zero orientation with the point inside the other
-    # segment's bbox
-    def on_seg(px, py, qx, qy, rx, ry):
-        # r collinear with pq (orientation zero handled by caller) and within bbox
-        return (
-            (rx >= np.minimum(px, qx)) & (rx <= np.maximum(px, qx))
-            & (ry >= np.minimum(py, qy)) & (ry <= np.maximum(py, qy))
-        )
-
-    touch = (
-        ((d1 == 0) & on_seg(AX1, AY1, AX2, AY2, BX1, BY1))
-        | ((d2 == 0) & on_seg(AX1, AY1, AX2, AY2, BX2, BY2))
-        | ((d3 == 0) & on_seg(BX1, BY1, BX2, BY2, AX1, AY1))
-        | ((d4 == 0) & on_seg(BX1, BY1, BX2, BY2, AX2, AY2))
-    )
-    return bool(touch.any())
 
 
 def rings_intersect(a: np.ndarray, b: np.ndarray) -> bool:
@@ -76,4 +33,5 @@ def rings_intersect(a: np.ndarray, b: np.ndarray) -> bool:
         return True
     if P.points_in_ring(a[:, 0], a[:, 1], b, boundary="include").any():
         return True
-    return _segments_intersect_grid(a, b)
+    ra, rb = P._closed(a), P._closed(b)
+    return bool(C._segments_intersect(ra[:-1], ra[1:], rb[:-1], rb[1:]).any())

@@ -269,6 +269,13 @@ def _stage_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a :func:`_stage_checkpoint` frame.  ``df.unpersist()``
+    does not: it drops cache-manager entries, and a checkpoint's blocks belong to
+    the RDD under its ``LogicalRDD`` plan node instead."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def _parallel_target(df: DataFrame) -> int:
     """The partition count :func:`_spread_keyed` shuffles to (and the bucket
     count :func:`_materialize_shingles` must match)."""
@@ -760,9 +767,9 @@ def dedup_components(
                 .count()
             )
             # the superseded round's checkpoint is dead once `changed` is
-            # computed — unpersist it or a high-diameter graph pins one
+            # computed — release it or a high-diameter graph pins one
             # label-set copy per round
-            labels.unpersist()
+            _release_checkpoint(labels)
             labels = new_labels
             if changed == 0:
                 converged = True
@@ -774,8 +781,8 @@ def dedup_components(
             # long-lived session that catches the error.  On success the
             # returned frame reads the final labels checkpoint (truncated
             # lineage), so only edges is safe to drop there.
-            labels.unpersist()
-        edges.unpersist()
+            _release_checkpoint(labels)
+        _release_checkpoint(edges)
     raise RuntimeError(
         f"dedup_components did not converge in {max_iter} rounds — graph "
         "diameter exceeds the bound; use a larger max_iter or a star-contraction "

@@ -1,20 +1,30 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search and near-dup detection over embedding columns (array<float>).
 
-- brute-force cosine top-k: exact baseline — one zero-shuffle ``mapInArrow`` pass whose
-  kernel is a numpy matmul of each Arrow batch against the broadcast query matrix
-  (BLAS-rate arithmetic; Catalyst higher-order lambdas like aggregate/zip_with are
-  interpreted per element and ~10-100x slower in this hot path).
-- LSH-bucketed ANN (random hyperplane / sign-LSH): the scale path — ONE matmul against
-  the stacked (n_tables x n_bits, dim) hyperplane matrix emits every table's signature
-  in a single scan of the vector table; candidates share a (table, signature) bucket;
-  exact cosine re-rank touches candidates only.  At 10^12 rows the all-pairs problem
-  becomes |bucket| local work with a single broadcast equi-join — never N^2.
+Five operators, all Arrow-batched numpy kernels behind ``mapInArrow``:
 
-Both kernels keep ids inside Arrow columnar buffers (no Python object churn) and emit
-a per-batch candidate superset small enough that the final exact window is negligible:
-for each query the batch keeps every row whose cosine ties-or-beats the batch's k-th
-best, so the global top-k (with the deterministic (cosine desc, vec_id asc) order) is
-always contained in the union.
+- :func:`cosine_topk`: exact brute-force top-k.  One zero-shuffle scan whose kernel
+  matmuls each batch against the broadcast query matrix (BLAS-rate arithmetic;
+  Catalyst higher-order lambdas are interpreted per element, ~10-100x slower).
+- :func:`ivf_topk`: IVF approximate top-k.  A driver-side k-means quantizer
+  assigns each batch to lists and re-ranks only the lists a query probes, in the
+  same single scan.
+- :func:`lsh_topk`: sign-LSH approximate top-k.  Candidates share a (table,
+  signature) bucket with a query; exact cosine re-rank touches candidates only.
+- :func:`cosine_near_dups`: sign-LSH banded self-join, exact cosine verify.
+- :func:`ivf_near_dups`: IVF-list blocked self-join, exact cosine verify.
+
+Shared kernels, one copy each: :func:`_query_side` (broadcast query matrix and
+norms), :func:`_norms`/:func:`_ratio` (the zero-guarded cosine division),
+:func:`_sq_dists` (the ||a-c||^2 expansion the quantizer and both IVF scans use,
+mirrored by the IVF oracle SQL), :func:`_batch_topk` (the per-batch tie-safe
+top-k mask), :func:`_signature_scan` (every table's sign-LSH signature in one
+matmul per batch), :func:`_ranked` (the final (cosine desc, vec_id asc) rank
+window) and :func:`_verify_cosine_pairs`.
+
+Ids stay inside Arrow buffers (no Python object churn).  The top-k kernels emit a
+per-batch superset: each query keeps every row whose cosine ties-or-beats the
+batch's k-th best, so the global top-k is always in the union and the final
+window ranks ~k rows per (query, partition), not N.
 """
 
 from __future__ import annotations
@@ -49,15 +59,55 @@ def _list_to_matrix(col) -> np.ndarray:
     return mat.reshape(len(col), dim)
 
 
-def _collect_query_matrix(
+def _norms(mat: np.ndarray) -> np.ndarray:
+    # axis=-1 so the (0,) matrix of an empty query set needs no special case
+    return np.sqrt((mat * mat).sum(axis=-1))
+
+
+def _ratio(num: np.ndarray, denom: np.ndarray) -> np.ndarray:
+    """num / denom, 0.0 where denom is not positive (zero-norm vectors)."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(denom > 0, num / denom, 0.0)
+
+
+def _sq_dists(mat: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """(n, d) x (c, d) -> (n, c) squared distances by the ||a||^2 - 2 a.c + ||c||^2
+    expansion.  The IVF oracle SQL mirrors this exact operand order."""
+    return (
+        (mat * mat).sum(axis=1)[:, None]
+        - 2.0 * (mat @ cents.T)
+        + (cents * cents).sum(axis=1)[None, :]
+    )
+
+
+def _batch_topk(cos: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """(rows, cols) of the per-column tie-safe top-k of a (n, q) cosine block:
+    every finite entry >= its column's k-th best finite value (all finite entries
+    when n <= k) — the global top-k under (cosine desc, vec_id asc) is inside.
+    Non-finite cosines (inf components survive the denom>0 guard as NaN) rank as
+    -inf so they cannot poison the k-th value, and are never kept: the Spark
+    window sorts NaN above every double DESC (rank 1), so keeping one would make
+    the result depend on Arrow batch/partition layout."""
+    n = cos.shape[0]
+    finite = np.isfinite(cos)
+    cos_rank = np.where(finite, cos, -np.inf)
+    if n > k:
+        kth = np.partition(cos_rank, n - k, axis=0)[n - k, :]
+        keep = cos_rank >= kth[None, :]
+    else:
+        keep = np.ones(cos.shape, dtype=bool)
+    return np.nonzero(keep & finite)
+
+
+def _query_side(
     queries: DataFrame, query_id_col: str, vec_col: str
-) -> tuple[list, np.ndarray]:
-    """Query set -> (ids, (Q, dim) float64 matrix). Queries are small by contract
-    (the broadcast side); order fixed by collection for deterministic indices."""
+) -> tuple[list, np.ndarray, np.ndarray]:
+    """Query set -> (ids, (Q, dim) float64 matrix, (Q,) norms).  Queries are small
+    by contract (the broadcast side); order fixed by collection for deterministic
+    indices."""
     rows = queries.select(query_id_col, vec_col).collect()
-    qids = [r[0] for r in rows]
     qmat = np.asarray([list(r[1]) for r in rows], dtype=np.float64)
-    return qids, qmat
+    return [r[0] for r in rows], qmat, _norms(qmat)
 
 
 def _empty_topk(
@@ -69,6 +119,23 @@ def _empty_topk(
     vid_type = dict(vectors.select(id_col).dtypes)[id_col]
     return vectors.sparkSession.createDataFrame(
         [], f"query_id {qid_type}, vec_id {vid_type}, cosine double, rank int"
+    )
+
+
+def _ranked(scored: DataFrame, qids: list, k: int) -> DataFrame:
+    """(vec_id, _qidx, cosine) candidates -> (query_id, vec_id, cosine, rank), rank
+    1..k by cosine desc with ties broken by vec_id asc."""
+    qmap = scored.sparkSession.createDataFrame(
+        [(i, qid) for i, qid in enumerate(qids)], ["_qidx", "query_id"]
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("vec_id").asc()
+    )
+    return (
+        scored.join(F.broadcast(qmap), "_qidx")
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "vec_id", "cosine", "rank")
     )
 
 
@@ -91,10 +158,9 @@ def cosine_topk(
     final window ranks ~k rows per (query, partition), not N.
     """
     spark = vectors.sparkSession
-    qids, qmat = _collect_query_matrix(queries, query_id_col, vec_col)
+    qids, qmat, qnorm = _query_side(queries, query_id_col, vec_col)
     if len(qids) == 0:
         return _empty_topk(vectors, queries, id_col, query_id_col)
-    qnorm = np.sqrt((qmat * qmat).sum(axis=1))
     bc = spark.sparkContext.broadcast((qmat, qnorm))
 
     v = vectors.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v"))
@@ -105,32 +171,12 @@ def cosine_topk(
         import pyarrow as pa
 
         qm, qn = bc.value
-        nq = qm.shape[0]
         for batch in it:
-            n = batch.num_rows
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
             vm = _list_to_matrix(batch.column("_v"))
-            vnorm = np.sqrt((vm * vm).sum(axis=1))
-            denom = vnorm[:, None] * qn[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(denom > 0, (vm @ qm.T) / denom, 0.0)
-            # per-query tie-safe top-k: keep every row with cos >= k-th best —
-            # the global top-k under (cosine desc, vec_id asc) is inside this set.
-            # Non-finite cosines (inf components survive the denom>0 guard as NaN)
-            # are masked UNCONDITIONALLY in both branches: ranking them as -inf
-            # stops them poisoning kth, and the finite mask stops them reaching the
-            # Spark window (which sorts NaN above every double DESC — rank 1), so
-            # the result never depends on Arrow batch/partition layout.
-            finite = np.isfinite(cos)
-            cos_rank = np.where(finite, cos, -np.inf)
-            if n > k:
-                kth = np.partition(cos_rank, n - k, axis=0)[n - k, :]
-                keep = cos_rank >= kth[None, :]
-            else:
-                keep = np.ones((n, nq), dtype=bool)
-            keep &= finite
-            rows, qidx = np.nonzero(keep)
+            cos = _ratio(vm @ qm.T, _norms(vm)[:, None] * qn[None, :])
+            rows, qidx = _batch_topk(cos, k)
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column("vec_id").take(pa.array(rows, type=pa.int64())),
@@ -140,19 +186,7 @@ def cosine_topk(
                 ["vec_id", "_qidx", "cosine"],
             )
 
-    local = v.mapInArrow(kernel, out_schema)
-    qmap = spark.createDataFrame(
-        [(i, qid) for i, qid in enumerate(qids)], ["_qidx", "query_id"]
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        local.join(F.broadcast(qmap), "_qidx")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    return _ranked(v.mapInArrow(kernel, out_schema), qids, k)
 
 
 def _kmeans_fit(train: np.ndarray, n_lists: int, n_iter: int, seed: int) -> np.ndarray:
@@ -167,11 +201,7 @@ def _kmeans_fit(train: np.ndarray, n_lists: int, n_iter: int, seed: int) -> np.n
     n = len(train)
     cents = train[rng.choice(n, size=min(n_lists, n), replace=False)].copy()
     for _ in range(n_iter):
-        d2 = (
-            (train * train).sum(axis=1)[:, None]
-            - 2.0 * (train @ cents.T)
-            + (cents * cents).sum(axis=1)[None, :]
-        )
+        d2 = _sq_dists(train, cents)
         assign = d2.argmin(axis=1)
         for c in range(len(cents)):
             members = train[assign == c]
@@ -210,7 +240,7 @@ def ivf_topk(
     bucket join.  Recall ~ n_probe/n_lists-tunable, exact when n_probe == n_lists.
     """
     spark = vectors.sparkSession
-    qids, qmat = _collect_query_matrix(queries, query_id_col, vec_col)
+    qids, qmat, qnorm = _query_side(queries, query_id_col, vec_col)
     if len(qids) == 0:
         return _empty_topk(vectors, queries, id_col, query_id_col)
     v = vectors.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v"))
@@ -220,8 +250,7 @@ def ivf_topk(
     cents = _kmeans_fit(train, n_lists, n_iter, seed)
 
     # per-query probe lists: n_probe nearest centroids by cosine
-    qnorm = np.sqrt((qmat * qmat).sum(axis=1))
-    cnorm = np.sqrt((cents * cents).sum(axis=1))
+    cnorm = _norms(cents)
     qc = (qmat @ cents.T) / np.maximum(qnorm[:, None] * cnorm[None, :], 1e-300)
     probe = np.argsort(-qc, axis=1)[:, :n_probe]  # (Q, n_probe)
     # invert: list -> array of query indices probing it
@@ -236,39 +265,21 @@ def ivf_topk(
 
         cen, qm, qn, prob = bc.value
         for batch in it:
-            n = batch.num_rows
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
             vm = _list_to_matrix(batch.column("_v"))
-            d2 = (
-                (vm * vm).sum(axis=1)[:, None]
-                - 2.0 * (vm @ cen.T)
-                + (cen * cen).sum(axis=1)[None, :]
-            )
-            assign = d2.argmin(axis=1)
-            vnorm = np.sqrt((vm * vm).sum(axis=1))
+            assign = _sq_dists(vm, cen).argmin(axis=1)
+            vnorm = _norms(vm)
             rows_out, qidx_out, cos_out = [], [], []
             for c in np.unique(assign):
                 qs = prob.get(int(c))
                 if qs is None or len(qs) == 0:
                     continue
                 members = np.nonzero(assign == c)[0]
-                denom = vnorm[members, None] * qn[qs][None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(
-                        denom > 0, (vm[members] @ qm[qs].T) / denom, 0.0
-                    )
-                m = len(members)
-                # same unconditional non-finite mask as cosine_topk (see there)
-                finite = np.isfinite(cos)
-                cos_rank = np.where(finite, cos, -np.inf)
-                if m > k:
-                    kth = np.partition(cos_rank, m - k, axis=0)[m - k, :]
-                    keep = cos_rank >= kth[None, :]
-                else:
-                    keep = np.ones((m, len(qs)), dtype=bool)
-                keep &= finite
-                mi, qj = np.nonzero(keep)
+                cos = _ratio(
+                    vm[members] @ qm[qs].T, vnorm[members, None] * qn[qs][None, :]
+                )
+                mi, qj = _batch_topk(cos, k)
                 rows_out.append(members[mi])
                 qidx_out.append(qs[qj])
                 cos_out.append(cos[mi, qj])
@@ -284,19 +295,7 @@ def ivf_topk(
                 ["vec_id", "_qidx", "cosine"],
             )
 
-    local = v.mapInArrow(kernel, out_schema)
-    qmap = spark.createDataFrame(
-        [(i, qid) for i, qid in enumerate(qids)], ["_qidx", "query_id"]
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        local.join(F.broadcast(qmap), "_qidx")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    return _ranked(v.mapInArrow(kernel, out_schema), qids, k)
 
 
 def _hyperplanes(dim: int, n_bits: int, seed: int = 42) -> list[list[float]]:
@@ -316,43 +315,20 @@ def _signatures_np(mat: np.ndarray, planes: np.ndarray, n_bits: int) -> np.ndarr
     return bits.reshape(len(mat), n_tables, n_bits) @ weights  # (n, n_tables)
 
 
-def lsh_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    dim: int | None = None,
-    n_bits: int = 16,
-    n_tables: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k: sign-LSH bucket join across ``n_tables`` independent
-    hyperplane tables, exact cosine re-rank over the union of candidates.
+def _signature_scan(
+    v: DataFrame, dim: int, n_bits: int, n_tables: int, seed: int
+) -> tuple[DataFrame, np.ndarray]:
+    """ONE scan of (vec_id, _v) -> ((vec_id, _table, _sig) frame, stacked planes).
 
-    Recall grows with n_tables; candidates per query ~ N / 2^n_bits per table.
-
-    Physical plan: ONE scan of the vector table — the Arrow kernel matmuls each
-    batch against the stacked hyperplane matrix and emits (vec_id, table, sig)
-    rows for all tables at once (the n-separate-scans formulation pays the scan
-    n_tables times); query signatures are computed driver-side (queries are tiny)
-    and broadcast; the candidate set is re-ranked by one exact-cosine kernel pass
-    restricted to candidates.
+    Each batch is matmul'd once against the stacked (n_tables*n_bits, dim)
+    hyperplane matrix (table t seeded ``seed + t``), emitting every table's
+    signature; n separate scans would pay the scan n_tables times.
     """
-    spark = vectors.sparkSession
-    qids, qmat = _collect_query_matrix(queries, query_id_col, vec_col)
-    if len(qids) == 0:
-        return _empty_topk(vectors, queries, id_col, query_id_col)
-    if dim is None:
-        dim = qmat.shape[1]
     planes = np.concatenate(
         [np.asarray(_hyperplanes(dim, n_bits, seed + t)) for t in range(n_tables)]
     )
-    bc_planes = spark.sparkContext.broadcast(planes)
-
-    v = vectors.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v"))
-    pid_type = dict(v.dtypes)["vec_id"]
+    bc_planes = v.sparkSession.sparkContext.broadcast(planes)
+    vid_type = dict(v.dtypes)["vec_id"]
 
     def sig_kernel(it):
         import pyarrow as pa
@@ -374,7 +350,38 @@ def lsh_topk(
                 ["vec_id", "_table", "_sig"],
             )
 
-    v_sig = v.mapInArrow(sig_kernel, f"vec_id {pid_type}, _table int, _sig long")
+    frame = v.mapInArrow(sig_kernel, f"vec_id {vid_type}, _table int, _sig long")
+    return frame, planes
+
+
+def lsh_topk(
+    vectors: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    n_bits: int = 16,
+    n_tables: int = 4,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+    seed: int = 42,
+) -> DataFrame:
+    """Approximate top-k: sign-LSH bucket join across ``n_tables`` independent
+    hyperplane tables, exact cosine re-rank over the union of candidates.
+
+    Recall grows with n_tables; candidates per query ~ N / 2^n_bits per table.
+
+    Physical plan: ONE :func:`_signature_scan` of the vector table emits
+    (vec_id, table, sig) rows for all tables; query signatures are computed
+    driver-side (queries are tiny) and broadcast; the candidate set is re-ranked
+    by one exact-cosine kernel pass restricted to candidates.
+    """
+    spark = vectors.sparkSession
+    qids, qmat, qnorm = _query_side(queries, query_id_col, vec_col)
+    if len(qids) == 0:
+        return _empty_topk(vectors, queries, id_col, query_id_col)
+    v = vectors.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v"))
+    pid_type = dict(v.dtypes)["vec_id"]
+    v_sig, planes = _signature_scan(v, qmat.shape[1], n_bits, n_tables, seed)
 
     q_sigs = _signatures_np(qmat, planes, n_bits)  # (Q, n_tables)
     q_sig_rows = [
@@ -393,7 +400,6 @@ def lsh_topk(
     # exact re-rank restricted to candidates: re-attach vectors by BROADCASTING the
     # candidate set (bounded by |queries| * n_tables * N/2^n_bits — small by design)
     # so the big vector table streams map-side and never shuffles
-    qnorm = np.sqrt((qmat * qmat).sum(axis=1))
     bc_q = spark.sparkContext.broadcast((qmat, qnorm))
     cand_v = v.join(F.broadcast(cand), "vec_id", "inner")
 
@@ -402,49 +408,28 @@ def lsh_topk(
 
         qm, qn = bc_q.value
         for batch in it:
-            n = batch.num_rows
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
             vm = _list_to_matrix(batch.column("_v"))
             qi = batch.column("_qidx").to_numpy(zero_copy_only=False)
-            dots = np.einsum("ij,ij->i", vm, qm[qi])
-            denom = np.sqrt((vm * vm).sum(axis=1)) * qn[qi]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(denom > 0, dots / denom, 0.0)
+            cos = _ratio(np.einsum("ij,ij->i", vm, qm[qi]), _norms(vm) * qn[qi])
             # drop non-finite cosines (inf-component vectors) before the rank
             # window — Spark sorts NaN above all doubles DESC
             ok = np.isfinite(cos)
-            if not ok.all():
-                sel = pa.array(ok)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        batch.column("vec_id").filter(sel),
-                        batch.column("_qidx").filter(sel),
-                        pa.array(cos[ok]),
-                    ],
-                    ["vec_id", "_qidx", "cosine"],
-                )
-            else:
-                yield pa.RecordBatch.from_arrays(
-                    [batch.column("vec_id"), batch.column("_qidx"), pa.array(cos)],
-                    ["vec_id", "_qidx", "cosine"],
-                )
+            sel = pa.array(ok)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("vec_id").filter(sel),
+                    batch.column("_qidx").filter(sel),
+                    pa.array(cos[ok]),
+                ],
+                ["vec_id", "_qidx", "cosine"],
+            )
 
     scored = cand_v.mapInArrow(
         rerank_kernel, f"vec_id {pid_type}, _qidx int, cosine double"
     )
-    qmap = spark.createDataFrame(
-        [(i, qid) for i, qid in enumerate(qids)], ["_qidx", "query_id"]
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.join(F.broadcast(qmap), "_qidx")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    return _ranked(scored, qids, k)
 
 
 def cosine_lsh_recall(threshold: float, n_bits: int, n_tables: int) -> float:
@@ -466,14 +451,12 @@ def cosine_near_dups(
     n_bits: int = 16,
     n_tables: int = 16,
     seed: int = 42,
-    dim: int | None = None,
     bucket_cap: int = 100_000,
 ) -> DataFrame:
     """Embedding near-dup pairs: (id_a, id_b, cosine) with cosine >= threshold —
     banded multi-table sign-LSH candidates + exact cosine verify, never N^2.
 
-    Physical shape: ONE Arrow scan matmuls each batch against the stacked
-    (n_tables x n_bits) hyperplane matrix and emits every table's signature;
+    Physical shape: ONE :func:`_signature_scan` emits every table's signature;
     candidates are pairs sharing any (table, signature) bucket (self-equi-join
     on the bucket key — over-cap buckets are split out and re-keyed on PAIRS of
     the row's over-cap buckets, the same boilerplate defense as minhash
@@ -493,42 +476,12 @@ def cosine_near_dups(
     """
     if not (-1.0 < threshold <= 1.0):
         raise ValueError("threshold must be in (-1, 1]")
-    spark = vectors.sparkSession
     v = vectors.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v"))
     vid_type = dict(v.dtypes)["vec_id"]
-    if dim is None:
-        first = v.limit(1).collect()
-        if not first:
-            return spark.createDataFrame(
-                [], f"id_a {vid_type}, id_b {vid_type}, cosine double"
-            )
-        dim = len(first[0]["_v"])
-    planes = np.concatenate(
-        [np.asarray(_hyperplanes(dim, n_bits, seed + t)) for t in range(n_tables)]
-    )
-    bc_planes = spark.sparkContext.broadcast(planes)
-
-    def sig_kernel(it):
-        import pyarrow as pa
-
-        pl = bc_planes.value
-        for batch in it:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            vm = _list_to_matrix(batch.column("_v"))
-            sigs = _signatures_np(vm, pl, n_bits)  # (n, n_tables)
-            idx = np.repeat(np.arange(n, dtype=np.int64), n_tables)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("vec_id").take(pa.array(idx)),
-                    pa.array(np.tile(np.arange(n_tables, dtype=np.int32), n)),
-                    pa.array(sigs.reshape(-1)),
-                ],
-                ["vec_id", "_table", "_sig"],
-            )
-
-    banded = v.mapInArrow(sig_kernel, f"vec_id {vid_type}, _table int, _sig long")
+    first = v.limit(1).collect()
+    if not first:
+        return _empty_pairs(v.sparkSession, vid_type)
+    banded, _ = _signature_scan(v, len(first[0]["_v"]), n_bits, n_tables, seed)
     # hot-bucket handling is the shared adaptive machinery (see dedup.py
     # _capped_self_pairs): empty over-cap list -> plain bucket self-join only
     pairs, _ = _capped_self_pairs(banded, ["_table", "_sig"], "vec_id", [], bucket_cap)
@@ -536,10 +489,14 @@ def cosine_near_dups(
     return _verify_cosine_pairs(v, cands, threshold, vid_type)
 
 
+def _empty_pairs(spark, vid_type: str) -> DataFrame:
+    return spark.createDataFrame([], f"id_a {vid_type}, id_b {vid_type}, cosine double")
+
+
 def _training_sample(v: DataFrame, n_train: int) -> tuple[np.ndarray, int]:
     """Deterministic hash-spaced quantizer-training sample over (vec_id, _v) —
     every ~N/n_train-th vector by id hash, independent of partition layout
-    (same recipe as ivf_topk's inline sampler).  Rows are sorted by id AFTER
+    (the quantizer sample of ivf_topk and ivf_near_dups).  Rows are sorted by id AFTER
     collection: k-means init indexes into this matrix, so the ROW ORDER must be
     partition-independent too, not just the row multiset (collect order follows
     task completion order on a multi-file scan).  Returns (sample, n_total) —
@@ -578,10 +535,7 @@ def _verify_cosine_pairs(
                 continue
             va = _list_to_matrix(batch.column("_va"))
             vb = _list_to_matrix(batch.column("_vb"))
-            dots = np.einsum("ij,ij->i", va, vb)
-            denom = np.sqrt((va * va).sum(axis=1)) * np.sqrt((vb * vb).sum(axis=1))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(denom > 0, dots / denom, 0.0)
+            cos = _ratio(np.einsum("ij,ij->i", va, vb), _norms(va) * _norms(vb))
             keep = np.isfinite(cos) & (cos >= threshold)
             sel = pa.array(keep)
             yield pa.RecordBatch.from_arrays(
@@ -639,9 +593,7 @@ def ivf_near_dups(
     vid_type = dict(v.dtypes)["vec_id"]
     train, n_total = _training_sample(v, train_size)
     if len(train) == 0:
-        return spark.createDataFrame(
-            [], f"id_a {vid_type}, id_b {vid_type}, cosine double"
-        )
+        return _empty_pairs(spark, vid_type)
     cents = _kmeans_fit(train, n_lists, n_iter, seed)
     n_probe = min(n_probe, len(cents))
     bc = spark.sparkContext.broadcast((cents, n_probe))
@@ -655,11 +607,7 @@ def ivf_near_dups(
             if n == 0:
                 continue
             vm = _list_to_matrix(batch.column("_v"))
-            d2 = (
-                (vm * vm).sum(axis=1)[:, None]
-                - 2.0 * (vm @ cen.T)
-                + (cen * cen).sum(axis=1)[None, :]
-            )
+            d2 = _sq_dists(vm, cen)
             lists = np.argpartition(d2, p - 1, axis=1)[:, :p].astype(np.int32)
             idx = np.repeat(np.arange(n, dtype=np.int64), p)
             yield pa.RecordBatch.from_arrays(

@@ -342,6 +342,33 @@ def test_cosine_topk_nan_batch_not_poisoned(spark, embeddings):
         assert (grp["vec_id"] < 900000).all()
 
 
+def test_batch_topk_tie_safe_finite_mask():
+    """The per-batch top-k mask behind cosine_topk and ivf_topk's per-list path:
+    per column it keeps every finite cosine >= the column's k-th largest finite
+    value (all of them when n <= k or fewer than k are finite), nothing below
+    it, and never a NaN or +-inf."""
+    rng = np.random.default_rng(5)
+    k = 4
+    tied = np.array([[0.5], [0.5], [0.9], [0.5], [0.5], [0.1]])
+    rows, _ = S._batch_topk(tied, 2)
+    assert sorted(rows.tolist()) == [0, 1, 2, 3, 4]  # every tie at the k-th kept
+    for n in (1, 3, 4, 5, 9, 40):
+        for _ in range(25):
+            cos = np.round(rng.uniform(-1, 1, (n, 6)), 1)  # 21 values: many ties
+            bad = rng.random(cos.shape) < 0.2
+            cos[bad] = rng.choice([np.nan, np.inf, -np.inf], bad.sum())
+            rows, cols = S._batch_topk(cos, k)
+            kept = np.zeros(cos.shape, dtype=bool)
+            kept[rows, cols] = True
+            finite = np.isfinite(cos)
+            assert not (kept & ~finite).any()
+            for j in range(cos.shape[1]):
+                vals = np.sort(cos[finite[:, j], j])
+                kth = vals[-k] if n > k and len(vals) >= k else -np.inf
+                want = finite[:, j] & (np.where(finite[:, j], cos[:, j], 0) >= kth)
+                assert (kept[:, j] == want).all(), (n, j, cos[:, j], kept[:, j])
+
+
 def test_cosine_topk_inf_rows_partition_independent(spark, embeddings):
     """Vectors with inf components (dot=NaN, denom=inf>0) are excluded from top-k
     regardless of Arrow batch/partition layout (ADVICE r2: the n<=k branch used
@@ -871,6 +898,20 @@ def test_dedup_components_matches_union_find(spark):
     assert (1012, 1000) in got  # chain fully collapsed to its min id
     empty = D.dedup_components(pairs.filter(F.lit(False)))
     assert empty.count() == 0 and empty.columns == ["doc_id", "component"]
+
+
+def test_dedup_components_releases_checkpoints(spark):
+    """Each superseded round's labels checkpoint and the edges checkpoint are
+    freed: after collect only the returned labels' RDD stays persisted.  A
+    13-node chain runs 12 label rounds; leaking them leaves 11 RDDs, not 1."""
+    jsc = spark.sparkContext._jsc
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "doc_a long, doc_b long"
+    )
+    before = set(jsc.getPersistentRDDs().keys())
+    comps = D.dedup_components(pairs)
+    assert {r["component"] for r in comps.collect()} == {0}
+    assert len(set(jsc.getPersistentRDDs().keys()) - before) == 1
 
 
 def test_capped_pairs_n_ids_skip_identical(spark):

@@ -224,17 +224,3 @@ def test_heavy_entries_reclaim_session_cache(spark, sf_dir):
     ALL_QUERIES["minhash_near_dups"](spark, sf_dir)
     # building the entry's frame (no action needed) must have dropped the cache
     assert not leftover.storageLevel.useMemory and not leftover.storageLevel.useDisk
-
-
-def test_reclaim_env_flag_disables_clearcache(spark, sf_dir, monkeypatch):
-    """SPARK_GRAFT_NO_RECLAIM=1 lets a concurrent harness keep its caches."""
-    from pyspark.sql import functions as F
-
-    monkeypatch.setenv("SPARK_GRAFT_NO_RECLAIM", "1")
-    leftover = spark.range(0, 10).select(F.col("id").alias("x")).cache()
-    leftover.count()
-    try:
-        ALL_QUERIES["minhash_near_dups"](spark, sf_dir)
-        assert leftover.storageLevel.useMemory  # cache survived
-    finally:
-        leftover.unpersist()
