@@ -467,17 +467,14 @@ def oracle_spatial_join_multipolygon() -> str:
 
 
 def q_knn_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grid kNN join (k-ring expansion + exact sparse fallback) — oracle is the
+    """Grid kNN join (k-ring expansion + exact exhaustive pass) — oracle is the
     brute-force window.  zoom 7 tiles (~3 deg) suit the sparse derived target grid."""
     from geojson_utility_spark.operators.knn import knn_join
 
     register_views(spark, sf_dir)
     pts = spark.sql(PTS_CUSTOMER)
     tgt = spark.sql(TGT_SUPPLIER)
-    return knn_join(pts, tgt, k=3, zoom=7, max_radius=32,
-                    brute_force_threshold=0).select(
-        "point_id", "target_id", "knn_rank"
-    )
+    return knn_join(pts, tgt, k=3, zoom=7).select("point_id", "target_id", "knn_rank")
 
 
 def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -24,10 +24,12 @@ def knn_data(spark):
     return pts_df, tgt_df
 
 
-def test_knn_matches_brute_force(spark, knn_data):
+def test_knn_matches_brute_force(spark, knn_data, monkeypatch):
+    # force the ring rounds: 40 targets would otherwise take the exhaustive pass
+    monkeypatch.setattr(K, "_EXHAUSTIVE_MAX_TARGETS", 0)
     pts_df, tgt_df = knn_data
     k = 3
-    got = K.knn_join(pts_df, tgt_df, k=k, brute_force_threshold=0).toPandas()
+    got = K.knn_join(pts_df, tgt_df, k=k).toPandas()
     want = K.knn_brute_force(pts_df, tgt_df, k=k).toPandas()
     got_m = {(r.point_id, r.knn_rank): r.target_id for r in got.itertuples()}
     want_m = {(r.point_id, r.knn_rank): r.target_id for r in want.itertuples()}
@@ -36,11 +38,12 @@ def test_knn_matches_brute_force(spark, knn_data):
     assert not diffs, f"{len(diffs)} rank mismatches, e.g. {sorted(diffs)[:5]}"
 
 
-def test_knn_k1_and_large_k(spark, knn_data):
+def test_knn_k1_and_large_k(spark, knn_data, monkeypatch):
+    monkeypatch.setattr(K, "_EXHAUSTIVE_MAX_TARGETS", 0)
     pts_df, tgt_df = knn_data
     pts_small = pts_df.limit(100)
     for k in (1, 10):
-        got = K.knn_join(pts_small, tgt_df, k=k, brute_force_threshold=0).toPandas()
+        got = K.knn_join(pts_small, tgt_df, k=k).toPandas()
         want = K.knn_brute_force(pts_small, tgt_df, k=k).toPandas()
         m_g = {(r.point_id, r.knn_rank): r.target_id for r in got.itertuples()}
         m_w = {(r.point_id, r.knn_rank): r.target_id for r in want.itertuples()}
@@ -104,14 +107,14 @@ def test_rasterize_masks_match_pip(spark):
 
 
 def test_knn_arrow_matches_window_brute_force(spark, knn_data):
-    """The zero-shuffle Arrow brute-force kernel (the small-target short-circuit)
-    must reproduce the JVM window formulation exactly: same (point, rank) -> target
-    assignment, distances equal to float tolerance (numpy vs JVM libm)."""
+    """knn_join's exhaustive pass (40 targets, under the cutover) must reproduce the
+    JVM window formulation exactly: same (point, rank) -> target assignment,
+    distances equal to float tolerance (numpy vs JVM libm)."""
     import numpy as np
 
     pts_df, tgt_df = knn_data
     k = 3
-    got = K.knn_brute_force_arrow(pts_df, tgt_df, k=k).toPandas()
+    got = K.knn_join(pts_df, tgt_df, k=k).toPandas()
     want = K.knn_brute_force(pts_df, tgt_df, k=k).toPandas()
     got_m = {(r.point_id, r.knn_rank): r.target_id for r in got.itertuples()}
     want_m = {(r.point_id, r.knn_rank): r.target_id for r in want.itertuples()}
@@ -120,15 +123,51 @@ def test_knn_arrow_matches_window_brute_force(spark, knn_data):
     wd = want.sort_values(["point_id", "knn_rank"])["dist_km"].to_numpy()
     assert np.allclose(gd, wd, rtol=1e-12, atol=1e-9)
     # plan shape: no exchange — the kernel emits final rows from the scan partition
-    plan = K.knn_brute_force_arrow(pts_df, tgt_df, k=k)._jdf.queryExecution().executedPlan().toString()
+    plan = K.knn_join(pts_df, tgt_df, k=k)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and "Window" not in plan
 
 
 def test_knn_arrow_k_exceeds_targets(spark, knn_data):
     pts_df, tgt_df = knn_data
     n_tgt = tgt_df.count()
-    got = K.knn_brute_force_arrow(pts_df.limit(5), tgt_df, k=n_tgt + 10).toPandas()
+    got = K.knn_join(pts_df.limit(5), tgt_df, k=n_tgt + 10).toPandas()
     assert set(got["knn_rank"].unique()) == set(range(1, n_tgt + 1))
+
+
+def test_knn_join_runs_two_jobs(spark, knn_data, monkeypatch):
+    """One job collects the targets, one runs the Arrow pass — however many ring
+    rounds the points need."""
+    monkeypatch.setattr(K, "_EXHAUSTIVE_MAX_TARGETS", 0)
+    pts_df, tgt_df = knn_data
+    sc = spark.sparkContext
+    sc.setJobGroup("knn_join_jobs", "knn_join job count")
+    try:
+        rows = K.knn_join(pts_df, tgt_df, k=3).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 3 * pts_df.count()
+    assert len(sc.statusTracker().getJobIdsForGroup("knn_join_jobs")) <= 2
+
+
+@pytest.mark.parametrize("exhaustive_max", [0, 300])
+def test_knn_null_coordinates_get_and_give_no_rows(spark, monkeypatch, exhaustive_max):
+    """A target with null lat/lon is never a neighbour (it used to rank first with a
+    null dist_km), and a point with null lat/lon gets no rows — in knn_join on both
+    passes and in the knn_brute_force reference."""
+    monkeypatch.setattr(K, "_EXHAUSTIVE_MAX_TARGETS", exhaustive_max)
+    tgt = spark.createDataFrame(
+        [("t1", 10.0, 10.0), ("t2", 10.5, 10.5), ("t3", 11.0, 11.0), ("tnull", None, None)],
+        "target_id string, lat double, lon double",
+    )
+    pts = spark.createDataFrame(
+        [("p", 50.0, 50.0), ("q", 10.49, 10.49), ("pnull", None, None), ("plat", None, 3.0)],
+        "point_id string, lat double, lon double",
+    )
+    want = [("p", "t3", 1), ("p", "t2", 2), ("q", "t2", 1), ("q", "t1", 2)]
+    for out in (K.knn_join(pts, tgt, k=2, zoom=12), K.knn_brute_force(pts, tgt, k=2)):
+        rows = out.collect()
+        assert sorted((r.point_id, r.target_id, r.knn_rank) for r in rows) == sorted(want)
+        assert all(r.dist_km is not None and np.isfinite(r.dist_km) for r in rows)
 
 
 def test_within_distance_join_matches_brute_force(spark, knn_data):
