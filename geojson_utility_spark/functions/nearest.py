@@ -3,7 +3,7 @@
 starts it cheaply.
 
 A grid index over the targets (:func:`knn_index`) sorts them by (tile row, tile
-column, target_id) at a zoom.  Per batch of points, :func:`knn_arrays` runs rounds
+column, target_id) at a zoom.  Per block of points, :func:`knn_blocks` runs rounds
 at ring radius R = 2, 8, 32.  A round gathers, for each unresolved point, the
 targets in the (2R+1)^2 tiles around its own tile (one ``searchsorted`` span per
 tile row, wrapping at the antimeridian) and keeps its first k candidates by
@@ -121,41 +121,45 @@ def _ring_round(pts, px, py, plat, plon, index, k, zoom, r):
     return np.concatenate(done), np.concatenate(tops_t), np.concatenate(tops_d)
 
 
-def knn_arrays(plat, plon, index, k, zoom):
+def knn_blocks(plat, plon, index, k, zoom):
     """Exact kNN of points against a :func:`knn_index`, ties to the smaller target_id.
 
-    Returns ``(row, tpos, dist_km, rank, radius)``: per output row the point's input
-    row, the target's position in target_id order, haversine km and rank
-    1..min(k, M); and per point the ring radius that resolved it (0: exhaustive).
+    A generator over blocks of output rows, so a caller can stream each block out
+    while the next computes.  Each yields ``(row, tpos, dist_km, rank, radius)``:
+    per output row the point's input row, the target's position in target_id order,
+    haversine km and rank 1..min(k, M); and the ring radius R that resolved the
+    block's points (0: the exhaustive pass).  Points run ``BLOCK`` at a time; the
+    exhaustive pass takes fewer per block when M is large (``CAND_MAX`` bounds its
+    block x M distance matrix).  A point with a NaN or infinite coordinate (a null
+    read from Arrow is NaN) gets no rows.
     """
     tlat, tlon, keys, _ = index
     m = tlat.size
-    radius = np.zeros(plat.size, dtype=np.int64)
+    if not m:
+        return
     kk = min(k, m)
-    rows, tpos, dist = [np.empty(0, np.int64)], [np.empty(0, np.int64)], [np.empty(0)]
-    todo = np.arange(plat.size)
+    ranks = np.tile(np.arange(1, kk + 1, dtype=np.int32), BLOCK)
+    step = max(1, min(BLOCK, CAND_MAX // m))
     if keys is not None:
-        _, px, py = unpack_cell(latlng_to_cell(plat, plon, zoom))
-        for r in RING_RADII:
-            for s in range(0, todo.size, BLOCK):
-                done, best_t, best_d = _ring_round(
-                    todo[s : s + BLOCK], px, py, plat, plon, index, k, zoom, r
-                )
-                radius[done] = r
-                rows.append(np.repeat(done, k))
-                tpos.append(best_t.ravel())
-                dist.append(best_d.ravel())
-            todo = todo[radius[todo] == 0]
-    if m and todo.size:
-        block = max(1, min(BLOCK, CAND_MAX // m))
-        for s in range(0, todo.size, block):
-            p = todo[s : s + block]
-            d = haversine_km(plat[p, None], plon[p, None], tlat[None, :], tlon[None, :])
+        with np.errstate(invalid="ignore"):  # non-finite points get cells, never used
+            _, px, py = unpack_cell(latlng_to_cell(plat, plon, zoom))
+    for s in range(0, plat.size, BLOCK):
+        todo = s + np.flatnonzero(np.isfinite(plat[s : s + BLOCK] + plon[s : s + BLOCK]))
+        if keys is not None:
+            for r in RING_RADII:
+                done, best_t, best_d = _ring_round(todo, px, py, plat, plon, index, k, zoom, r)
+                if done.size:
+                    yield np.repeat(done, k), best_t.ravel(), best_d.ravel(), ranks[: done.size * k], r
+                    todo = todo[~np.isin(todo, done, assume_unique=True)]
+        for e in range(0, todo.size, step):
+            p = todo[e : e + step]
+            d = haversine_km(plat[p][:, None], plon[p][:, None], tlat[None, :], tlon[None, :])
             # stable sort + id-ordered targets == (dist asc, target_id asc)
             order = np.argsort(d, axis=1, kind="stable")[:, :kk]
-            rows.append(np.repeat(p, kk))
-            tpos.append(order.ravel())
-            dist.append(np.take_along_axis(d, order, 1).ravel())
-    rows = np.concatenate(rows)
-    rank = np.tile(np.arange(1, kk + 1, dtype=np.int32), rows.size // max(kk, 1))
-    return rows, np.concatenate(tpos), np.concatenate(dist), rank, radius
+            yield (
+                np.repeat(p, kk),
+                order.ravel(),
+                np.take_along_axis(d, order, 1).ravel(),
+                ranks[: p.size * kk],
+                0,
+            )

@@ -23,10 +23,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from geojson_utility_spark.functions.nearest import (
-    BLOCK,
     EARTH_CIRC_KM,
     SAFETY,
-    knn_arrays,
+    knn_blocks,
     knn_index,
 )
 from geojson_utility_spark.functions.spark_geo import cell_expr, tile_xy_expr
@@ -129,7 +128,7 @@ def knn_join(
         F.col(point_id).alias("point_id"),
         F.col("lat").cast("double").alias("lat"),
         F.col("lon").cast("double").alias("lon"),
-    ).dropna(subset=["lat", "lon"])
+    )  # null or NaN points: dropped in the kernel, cheaper than a JVM dropna
     out_schema = (
         f"point_id {dict(pts.dtypes)['point_id']}, target_id {tid_type.simpleString()}, "
         "dist_km double, knn_rank int"
@@ -138,20 +137,13 @@ def knn_join(
     def kernel(it):
         ids, index = bc.value
         for batch in it:
-            # BLOCK-point slices: each slice's rows stream back to the JVM while
-            # the next one computes
-            for off in range(0, batch.num_rows, BLOCK):
-                part = batch.slice(off, BLOCK)
-                row, tpos, dist, rank, _ = knn_arrays(
-                    part.column("lat").to_numpy(zero_copy_only=False),
-                    part.column("lon").to_numpy(zero_copy_only=False),
-                    index,
-                    k,
-                    zoom,
-                )
+            plat = batch.column("lat").to_numpy(zero_copy_only=False)
+            plon = batch.column("lon").to_numpy(zero_copy_only=False)
+            # each block's rows stream back to the JVM while the next one computes
+            for row, tpos, dist, rank, _ in knn_blocks(plat, plon, index, k, zoom):
                 yield pa.RecordBatch.from_arrays(
                     [
-                        part.column("point_id").take(row),
+                        batch.column("point_id").take(row),
                         ids.take(tpos),
                         pa.array(dist),
                         pa.array(rank),

@@ -11,8 +11,8 @@ of the change's BENCHMARK.json (plus any ``--metric``), it prints each side's
 median and quartiles, the change's win count over the pairs, and whether the
 medians differ by more than the base's interquartile range.  With ``--trace 1``
 the end-to-end metrics are read under their ``traced.`` names, and per-layer
-ones such as ``knn.s`` can be added with ``--metric``.  ``--out`` keeps every
-run's JSON.  Nothing under perfbench/ is changed; each checkout runs its own copy.
+ones such as ``knn.s`` can be added with ``--metric``.  Nothing under perfbench/
+is changed; each checkout runs its own copy.
 """
 
 from __future__ import annotations
@@ -24,6 +24,8 @@ import statistics
 import subprocess
 import sys
 
+RUN_TIMEOUT_S = 1800  # one perfbench run; a hung run counts as an error
+
 
 def parse_seeds(text: str) -> list[int]:
     seeds: list[int] = []
@@ -33,13 +35,13 @@ def parse_seeds(text: str) -> list[int]:
     return seeds
 
 
-def run_once(root: str, workload: str, seed: int, seconds: float, trace: int, timeout: float) -> dict:
+def run_once(root: str, workload: str, seed: int, seconds: float, trace: int) -> dict:
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", str(trace)]
     try:
-        p = subprocess.run(cmd, cwd=root, capture_output=True, text=True, timeout=timeout)
+        p = subprocess.run(cmd, cwd=root, capture_output=True, text=True, timeout=RUN_TIMEOUT_S)
     except subprocess.TimeoutExpired:
-        return {"error": f"timed out after {timeout:.0f} s"}
+        return {"error": f"timed out after {RUN_TIMEOUT_S} s"}
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 or not lines:
         return {"error": f"exit {p.returncode}: {p.stderr.strip()[-500:]}"}
@@ -93,8 +95,6 @@ def main() -> int:
     ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--metric", action="append", default=[], help="extra metric to report")
-    ap.add_argument("--timeout", type=float, default=1800, help="seconds per run")
-    ap.add_argument("--out", help="write every run's JSON here")
     args = ap.parse_args()
 
     with open(os.path.join(args.change, "BENCHMARK.json")) as f:
@@ -107,15 +107,11 @@ def main() -> int:
         order = ["base", "change"] if i % 2 == 0 else ["change", "base"]
         pair = {"seed": seed, "first": order[0]}
         for side in order:
-            res = run_once(sides[side], args.workload, seed, args.seconds, args.trace, args.timeout)
+            res = run_once(sides[side], args.workload, seed, args.seconds, args.trace)
             pair[side] = res
             status = res.get("error") or f"correct={res['correct']} failed={res['failed']}/{res['attempted']}"
             print(f"seed {seed} {side}: {status} op_p50_s={value(res, 'op_p50_s')}", file=sys.stderr, flush=True)
         runs.append(pair)
-    if args.out:
-        with open(args.out, "w") as f:
-            json.dump({"args": vars(args), "runs": runs}, f, indent=1)
-
     report(args.workload, runs, names, better)
     return 0
 

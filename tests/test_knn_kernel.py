@@ -21,14 +21,17 @@ def brute(plat, plon, tlat, tlon, k):
 def run_kernel(plat, plon, tlat, tlon, k, zoom, grid=True):
     """(target positions, km, resolving radius) per point, ranks as columns."""
     plat, plon, tlat, tlon = (np.asarray(v, dtype=np.float64) for v in (plat, plon, tlat, tlon))
-    index = N.knn_index(tlat, tlon, zoom, grid)
-    row, tpos, dist, rank, radius = N.knn_arrays(plat, plon, index, k, zoom)
     kk = min(k, tlat.size)
-    assert row.size == plat.size * kk
     got_t = np.full((plat.size, kk), -1)
     got_d = np.full((plat.size, kk), np.nan)
-    got_t[row, rank - 1] = tpos
-    got_d[row, rank - 1] = dist
+    radius = np.full(plat.size, -1)
+    n_rows = 0
+    for row, tpos, dist, rank, r in N.knn_blocks(plat, plon, N.knn_index(tlat, tlon, zoom, grid), k, zoom):
+        got_t[row, rank - 1] = tpos
+        got_d[row, rank - 1] = dist
+        radius[row] = r
+        n_rows += row.size
+    assert n_rows == plat.size * kk and (got_t >= 0).all()
     return got_t, got_d, radius
 
 
@@ -165,5 +168,29 @@ def test_k_exceeds_targets(n_tgt, k, grid):
 @pytest.mark.parametrize("grid", [False, True])
 def test_no_targets(grid):
     index = N.knn_index(np.empty(0), np.empty(0), 9, grid)
-    row, tpos, dist, rank, radius = N.knn_arrays(np.array([1.0]), np.array([2.0]), index, 3, 9)
-    assert row.size == tpos.size == dist.size == rank.size == 0
+    assert list(N.knn_blocks(np.array([1.0]), np.array([2.0]), index, 3, 9)) == []
+
+
+@pytest.mark.parametrize("grid", [False, True])
+def test_many_blocks_and_chunks(monkeypatch, grid):
+    """Small BLOCK and CAND_MAX: many point blocks, candidate chunks and
+    exhaustive sub-blocks per call give the same rows."""
+    monkeypatch.setattr(N, "BLOCK", 100)
+    monkeypatch.setattr(N, "CAND_MAX", 5000)
+    plat, plon, tlat, tlon = tpch_lattice(1000, 3000)
+    radius = assert_exact(plat, plon, tlat, tlon, 3, 7, grid)
+    assert (radius > 0).any() == grid
+
+
+@pytest.mark.parametrize("grid", [False, True])
+def test_non_finite_points_get_no_rows(grid):
+    rng = np.random.default_rng(11)
+    tlat, tlon = rng.uniform(-50, 50, 400), rng.uniform(-50, 50, 400)
+    plat, plon = rng.uniform(-50, 50, 300), rng.uniform(-50, 50, 300)
+    bad = np.arange(0, 300, 7)
+    plat[bad[::2]], plon[bad[1::2]] = np.nan, np.inf
+    out = list(N.knn_blocks(plat, plon, N.knn_index(tlat, tlon, 9, grid), 3, 9))
+    rows = np.concatenate([row for row, *_ in out])
+    assert not np.isin(rows, bad).any() and rows.size == 3 * (300 - bad.size)
+    good = np.setdiff1d(np.arange(300), bad)
+    assert_exact(plat[good], plon[good], tlat, tlon, 3, 9, grid)
