@@ -351,15 +351,10 @@ def oracle_tile_assignment() -> str:
 
 
 def q_cell_heat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from geojson_utility_spark.functions.spark_geo import cell_expr
+    from geojson_utility_spark.operators.spatial_join import cell_heat_stats
 
     register_views(spark, sf_dir)
-    pts = spark.sql(PTS_EVENTS)
-    return (
-        pts.select(cell_expr(F.col("lat"), F.col("lon"), 8).alias("cell"))
-        .groupBy("cell")
-        .agg(F.count("*").alias("n_points"))
-    )
+    return cell_heat_stats(spark.sql(PTS_EVENTS), zoom=8)
 
 
 def oracle_cell_heat() -> str:

@@ -1,6 +1,6 @@
 """Deterministic fixture generators (FIXTURES.md) — fixed seed, no wall clock, no I/O.
 
-Generates the four fixture tables as pandas frames (Arrow-converted to Spark):
+Generates the fixture tables as pandas frames (Arrow-converted to Spark):
 - ``images``   : input_hint schema; encoded PNG/fake-JPEG pixels + phash; each image_id
                  maps deterministically to a (lat, lon) point clustered around urban
                  hot spots (skew driver) plus a uniform background.
@@ -9,12 +9,10 @@ Generates the four fixture tables as pandas frames (Arrow-converted to Spark):
                  bow-tie, cell-straddling, one oversized skew driver).
 - ``locations``: the reference's upload CSV incl. golden rows from backend/sample.csv
                  and one negative vector per validation predicate P1-P11.
-- ``lineage``  : ~200 run rows mirroring backend/models/csvfile.py metrics columns.
 """
 
 from __future__ import annotations
 
-import datetime as dt
 import json
 
 import numpy as np
@@ -370,63 +368,3 @@ def make_clustered_embeddings(
             "embedding": [[float(x) for x in r] for r in rows],
         }
     )
-
-
-def make_lineage(n: int = 200, seed: int = SEED) -> pd.DataFrame:
-    """~200 seeded run rows across users/statuses/dates (FIXTURES.md §4).
-
-    Anchored at a fixed epoch (2026-01-01) — no wall clock — so 7-day-window queries
-    are computed against that anchor, not now().
-    """
-    rng = np.random.default_rng(seed)
-    anchor = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
-    statuses = ["pending", "processing", "done", "partial", "failed"]
-    rows = []
-    for i in range(n):
-        status = statuses[int(rng.integers(0, 5))]
-        created = anchor - dt.timedelta(hours=float(rng.uniform(0, 24 * 30)))
-        total = int(rng.integers(1, 1000))
-        failed = int(rng.integers(0, total + 1)) if status in ("partial", "failed") else 0
-        done_rows = total - failed if status in ("done", "partial", "failed") else 0
-        started = created + dt.timedelta(seconds=int(rng.integers(1, 60)))
-        completed = (
-            started + dt.timedelta(seconds=int(rng.integers(1, 600)))
-            if status in ("done", "partial", "failed")
-            else None
-        )
-        dl = int(rng.integers(0, 10)) if status == "done" else 0
-        rows.append(
-            {
-                "run_id": i,
-                "filename": f"upload_{i}.csv",
-                "username": f"user{i % 8}",
-                "user_id": i % 8,
-                "created_at": created.replace(tzinfo=None),
-                "status": status,
-                "error": "" if status in ("done", "pending", "processing") else "boom",
-                "total_rows": total,
-                "successful_rows": done_rows,
-                "failed_rows": failed,
-                "processing_started_at": started.replace(tzinfo=None),
-                "processing_completed_at": completed.replace(tzinfo=None) if completed else None,
-                "processing_duration_seconds": (
-                    int((completed - started).total_seconds()) if completed else None
-                ),
-                "download_count": dl,
-                "last_downloaded_at": (
-                    (completed + dt.timedelta(hours=1)).replace(tzinfo=None)
-                    if completed and dl
-                    else None
-                ),
-                "first_downloaded_at": (
-                    (completed + dt.timedelta(minutes=5)).replace(tzinfo=None)
-                    if completed and dl
-                    else None
-                ),
-                "lepton_api_calls_made": done_rows,
-                "tokens_consumed": done_rows,
-                "partition_id": i % 32,
-                "stage": "enrich",
-            }
-        )
-    return pd.DataFrame(rows)

@@ -25,8 +25,9 @@ Physical plan, designed for 10^12 points vs ~10^5 polygons:
 5. **Refine** (two strategies, see ``spatial_join``; one kernel,
    ``functions/pip.refine_mask``): 'broadcast' (default) — rings broadcast,
    zero-shuffle ``mapInArrow`` ray cast over cache-blocked numpy kernels;
-   'cogroup' — salted shuffle for unbroadcastable polygon sets (SURVEY.md §4 skew
-   treatment).
+   'cogroup' — salted shuffle that sends each ring only to the tasks refining it,
+   instead of every ring to every Python worker (SURVEY.md §4 skew treatment).
+   Either way ``prepare_polygons`` collects the valid rings to the driver.
 
 At 1000 executors: everything through refine is map-only — the join's only exchanges
 hash-partition the tiny polygon side.
@@ -300,7 +301,14 @@ def prepare_polygons(
 ) -> PreparedPolygons:
     """Build the reusable polygon index for :func:`spatial_join` (see
     :class:`PreparedPolygons`).  Raises ``ValueError`` when two valid polygons
-    share a ``polygon_id`` (a match could not say which one it hit)."""
+    share a ``polygon_id`` (a match could not say which one it hit), and, before
+    any Spark job, when ``min_zoom`` is given without ``compact=True`` (only a
+    compact cover reads it) or above ``zoom`` (no probe zoom would remain)."""
+    if min_zoom is not None and not (compact and min_zoom <= zoom):
+        raise ValueError(
+            f"min_zoom={min_zoom} needs compact=True and min_zoom <= zoom={zoom} "
+            f"(got compact={compact!r})"
+        )
     spark = polygons.sparkSession
     # polygon side is small: cache so normalize+cover run once, not once per zoom probe
     norm = normalize_polygons(polygons, keep_holes=keep_holes).cache()
@@ -404,8 +412,12 @@ def spatial_join(
         reference's scale).
       'cogroup' — candidates shuffled on (poly_idx, salt) and cogrouped with
         replicated ring rows; the salted-repartition skew treatment (SURVEY.md §4).
-        The fallback when the polygon table itself is too large to broadcast.
+        It avoids the per-Python-worker ring broadcast: each task receives only
+        the rings it refines.  It does not lift the driver bound —
+        ``prepare_polygons`` collects every valid ring to the driver first.
     salt: salt buckets per polygon; read by refine='cogroup' only.
+    min_zoom: with compact=True only, and at most ``zoom``: cover cells coarser
+      than it expand to it (see :func:`polygon_cover`); otherwise ``ValueError``.
     """
     if refine not in ("broadcast", "cogroup"):
         raise ValueError(f"unsupported refine={refine!r}")
@@ -505,8 +517,8 @@ def spatial_join(
         refined = candidates.mapInArrow(refine_arrow, result_schema)
     else:
         # shuffle path: candidates cogrouped with replicated rings on
-        # (poly_idx, salt) — the salted-repartition skew treatment for polygon
-        # tables too large to broadcast.  Each task receives the ring exactly once.
+        # (poly_idx, salt) — the salted-repartition skew treatment, with no ring
+        # broadcast to the Python workers.  Each task receives its ring exactly once.
         n_salt = max(1, salt)
         salted = candidates.withColumn(
             "_salt",

@@ -2,8 +2,7 @@
 
 The ``images`` schema is the BASELINE.json ``input_hint`` verbatim; ``locations`` is the
 reference's upload-CSV contract (reference: backend/sample.csv + required-column set at
-backend/routers/catchment.py:175); ``lineage`` mirrors the reference's ``csv_files``
-metrics model (backend/models/csvfile.py:4-32) plus engine partition/stage columns.
+backend/routers/catchment.py:175).
 """
 
 from __future__ import annotations
@@ -54,33 +53,6 @@ POLYGONS_SCHEMA = T.StructType(
         T.StructField("geojson", T.StringType(), True),
         T.StructField("centroid_lat", T.DoubleType(), True),
         T.StructField("centroid_lon", T.DoubleType(), True),
-    ]
-)
-
-# clone of reference csv_files columns (backend/models/csvfile.py:4-32)
-# + engine additions partition_id/stage (FIXTURES.md §4)
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.IntegerType(), False),
-        T.StructField("filename", T.StringType(), True),
-        T.StructField("username", T.StringType(), True),
-        T.StructField("user_id", T.IntegerType(), True),
-        T.StructField("created_at", T.TimestampType(), True),
-        T.StructField("status", T.StringType(), True),
-        T.StructField("error", T.StringType(), True),
-        T.StructField("total_rows", T.IntegerType(), True),
-        T.StructField("successful_rows", T.IntegerType(), True),
-        T.StructField("failed_rows", T.IntegerType(), True),
-        T.StructField("processing_started_at", T.TimestampType(), True),
-        T.StructField("processing_completed_at", T.TimestampType(), True),
-        T.StructField("processing_duration_seconds", T.IntegerType(), True),
-        T.StructField("download_count", T.IntegerType(), True),
-        T.StructField("last_downloaded_at", T.TimestampType(), True),
-        T.StructField("first_downloaded_at", T.TimestampType(), True),
-        T.StructField("lepton_api_calls_made", T.IntegerType(), True),
-        T.StructField("tokens_consumed", T.IntegerType(), True),
-        T.StructField("partition_id", T.IntegerType(), True),
-        T.StructField("stage", T.StringType(), True),
     ]
 )
 

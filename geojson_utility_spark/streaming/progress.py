@@ -7,8 +7,9 @@ SSE loop emits 30 s heartbeats and closes on terminal status.
 
 Spark shape: batch jobs append JSON progress rows to an event directory (one file per
 emission — the ``foreachBatch`` sink pattern); a Structured Streaming reader tails the
-directory; the transition dedupe is a ``lag(status)`` comparison; event typing is the
-same CASE; terminal detection stops the query.
+directory and emits every event, typed by the trigger's CASE and carrying its progress
+percentage (no transition dedupe: the emitter decides what to publish); terminal
+detection stops the query.
 """
 
 from __future__ import annotations
@@ -72,18 +73,6 @@ def event_type_expr():
         F.when(F.col("status") == "processing", F.lit("start"))
         .when(F.col("status").isin(*TERMINAL_STATUSES), F.lit("complete"))
         .otherwise(F.lit("update"))
-    )
-
-
-def transitions_only(events: DataFrame) -> DataFrame:
-    """Status-transition dedupe: keep rows where status != lag(status) per run —
-    the batch analog of the trigger's NEW.status != OLD.status guard."""
-    w = Window.partitionBy("run_id").orderBy("seq")
-    prev = F.lag("status").over(w)
-    return (
-        events.withColumn("_prev", prev)
-        .filter(F.col("_prev").isNull() | (F.col("_prev") != F.col("status")))
-        .drop("_prev")
     )
 
 
@@ -161,7 +150,7 @@ def read_progress_stream(spark: SparkSession, event_dir: str) -> DataFrame:
 def run_progress_query(
     spark: SparkSession, event_dir: str, sink_table: str = "progress_events"
 ):
-    """Start the streaming query: tail events -> typed/deduped -> in-memory sink.
+    """Start the streaming query: tail events -> every event typed -> in-memory sink.
 
     Heartbeat = trigger interval; callers poll the sink table and stop on terminal
     status (mirrors the SSE loop's complete/heartbeat handling).

@@ -1,83 +1,25 @@
-"""Streaming windowed aggregation over the events stream.
+"""Per-user sessionization over the events table (batch).
 
 The reference has no data windows (its stream is status events only, SURVEY.md §2.8);
-the engine adds the standard Structured Streaming shapes a progress/metrics pipeline
-needs at scale: watermarked tumbling/sliding window counts and per-run sessionization.
+the engine keeps batch-first and sessionizes the events table with Spark's
+``session_window``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
 
 
-def read_events_stream(spark: SparkSession, path_dir: str, max_files: int = 10) -> DataFrame:
-    return (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(path_dir)
-    )
-
-
-def windowed_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str | None = None,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked tumbling (or sliding) window: count + decimal-exact value sum per
-    event_type.  Late rows beyond the watermark are dropped by the engine — the
-    documented contrast to the reference's drop-on-full queue (§2.8)."""
-    w = (
-        F.window("ts", window, slide) if slide else F.window("ts", window)
-    )
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(w.alias("win"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total_value"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
-
-
-def session_counts(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str | None = None,
-) -> DataFrame:
+def session_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Per-user sessionization: events chain into one session while each arrives
     at most ``gap`` after the previous (Spark merges AT exactly the gap — pinned
     by a boundary probe in the entry oracle); session_end = last event + gap
     (Spark ``session_window`` semantics, identical to the gaps-and-islands SQL
     formulation lag/cumsum oracles use).
-
-    Works in batch (no watermark) and streaming (pass ``watermark``; append mode
-    emits a session once the watermark passes its end — the only mode where session
-    state is evicted).
     """
-    src = events.withWatermark("ts", watermark) if watermark else events
     return (
-        src.groupBy(F.session_window("ts", gap), "user_id")
+        events.groupBy(F.session_window("ts", gap), "user_id")
         .agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias(
@@ -92,70 +34,3 @@ def session_counts(
             "total_value",
         )
     )
-
-
-def run_session_query(
-    spark: SparkSession,
-    path_dir: str,
-    sink_table: str = "session_events",
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> "StreamingQuery":  # noqa: F821
-    """Streaming sessionization: append mode so sessions finalize (and their state
-    evicts) when the watermark passes session_end — same flush semantics as
-    run_windowed_query (a quiesced feed holds back its trailing sessions)."""
-    return (
-        session_counts(read_events_stream(spark, path_dir), gap=gap, watermark=watermark)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink_table)
-        .start()
-    )
-
-
-def streaming_dedup(
-    events: DataFrame, id_cols: list[str], watermark: str = "2 hours"
-) -> DataFrame:
-    """Streaming exact dedup — the streaming arm of operators/dedup.dedup_exact.
-
-    ``dropDuplicatesWithinWatermark``: emits the FIRST occurrence of each id-key and
-    suppresses re-deliveries arriving within the watermark of it, while EVICTING
-    each key's state once the watermark passes — bounded state for an unbounded
-    stream (plain dropDuplicates on a stream retains every key forever).  The
-    contract a replayed/at-least-once source needs: duplicates land within the
-    redelivery window; a recurrence AFTER the watermark is treated as a new event
-    by design (state for it was reclaimed).
-    """
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        id_cols
-    )
-
-
-def run_windowed_query(
-    spark: SparkSession,
-    path_dir: str,
-    sink_table: str = "windowed_events",
-    output_mode: str = "append",
-    **kw,
-) -> "StreamingQuery":  # noqa: F821
-    """Start the windowed-count stream.
-
-    ``output_mode='append'`` (default) is the only mode where the watermark does its
-    job: a window is emitted exactly once, when the watermark passes its end, and its
-    state is then EVICTED — bounded state for an unbounded stream, late rows beyond
-    the watermark dropped.  ('complete' re-emits every window each trigger, ignores
-    the watermark for eviction, and grows both state and a memory sink without bound
-    — only suitable for small finite debugging feeds, so it is not the default.)
-
-    Append-mode consequence a caller must know: a window stays unemitted until a
-    LATER event advances the watermark past its end — a quiesced feed holds back its
-    final windows until the next event arrives (tests advance it with a sentinel).
-    """
-    q = (
-        windowed_counts(read_events_stream(spark, path_dir), **kw)
-        .writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(sink_table)
-        .start()
-    )
-    return q

@@ -116,13 +116,6 @@ def test_locations_fixture_has_goldens():
     assert len(df) == len(FX.GOLDEN_LOCATION_ROWS) + len(FX.NEGATIVE_LOCATION_ROWS) + 50
 
 
-def test_lineage_fixture():
-    df = FX.make_lineage()
-    assert len(df) == 200
-    assert set(df["status"]) <= {"pending", "processing", "done", "partial", "failed"}
-    assert df["created_at"].notna().all()
-
-
 def test_png_all_filter_types_roundtrip():
     """decode_png must invert every standard scanline filter (spec §6): forward-filter
     a known image per type, wrap as PNG, decode, require exact pixels."""

@@ -60,8 +60,9 @@ def test_validation_stays_in_codegen(spark):
 
 
 def test_flagship_single_shuffle(spark, tmp_path):
-    """Exactly one Exchange in the inner spatial join (the refine cogroup); the
-    candidate phase is map-only."""
+    """The default (broadcast-refine) inner spatial join never shuffles the point
+    side: candidates come from broadcast hash joins, and every shuffle Exchange
+    is on the tiny polygon side."""
     pts_path = str(tmp_path / "pts2.parquet")
     spark.createDataFrame(
         FX.image_point([f"img_{i:012d}" for i in range(2000)])
@@ -83,43 +84,6 @@ def test_flagship_single_shuffle(spark, tmp_path):
         # polygon side; broadcast exchanges are the candidate broadcast itself
         if "Exchange" in line and "BroadcastExchange" not in line:
             assert "polygon_id" in line, f"point-side shuffle found: {line.strip()}"
-
-
-def test_dashboard_top1_is_take_ordered(spark):
-    """W1 top-1 must be TakeOrderedAndProject (parallel per-partition heaps), never an
-    unpartitioned row_number window (single-task global sort)."""
-    from geojson_utility_spark.operators import dashboard as DB
-
-    lineage = spark.createDataFrame(FX.make_lineage(200))
-    plan = _plan(DB.last_downloaded(lineage, 3))
-    assert "TakeOrderedAndProject" in plan
-    assert "Window" not in plan
-    assert "Exchange SinglePartition" not in plan
-
-
-def test_keyset_pagination_no_global_sort(spark):
-    """Keyset page = pushdown range predicate + TakeOrdered; no Window, no global
-    sort exchange, and the cursor predicate reaches the parquet scan."""
-    import datetime as dt
-
-    from geojson_utility_spark.operators import dashboard as DB
-
-    lineage = spark.createDataFrame(FX.make_lineage(200))
-    cursor = dt.datetime(2025, 12, 20)
-    plan = _plan(DB.uploads_before_cursor(lineage, 3, cursor, 42, per_page=5))
-    assert "TakeOrderedAndProject" in plan
-    assert "Window" not in plan
-
-
-def test_paged_window_bounded_by_page_depth(spark):
-    """recent_uploads_page's window ranks only the TakeOrdered head (<= offset+per_page
-    rows), so the single-partition stage is bounded by page depth, not table size."""
-    from geojson_utility_spark.operators import dashboard as DB
-
-    lineage = spark.createDataFrame(FX.make_lineage(200))
-    plan = _plan(DB.recent_uploads_page(lineage, 3, page=2, per_page=5))
-    # the limit must sit BELOW the window in the plan (TakeOrdered feeds the window)
-    assert "TakeOrderedAndProject" in plan
 
 
 def test_prepared_index_join_plan_shape(spark, tmp_path):

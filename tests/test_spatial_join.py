@@ -178,6 +178,24 @@ def test_spatial_join_rejects_unknown_refine(spark):
         SJ.spatial_join(pts, polys, refine="expr")
 
 
+@pytest.mark.parametrize("compact,min_zoom", [(True, 16), (False, 12)])
+def test_min_zoom_outside_compact_cover_is_rejected(spark, data, compact, min_zoom):
+    """min_zoom above zoom would leave no probe zoom (an empty join), and without
+    compact=True no cover reads it: both raise ValueError before any Spark job."""
+    pts, polys = data
+    pts_df = spark.createDataFrame(pts).withColumnRenamed("image_id", "point_id")
+    polys_df = spark.createDataFrame(polys[["polygon_id", "geojson"]])
+    group = f"min_zoom_{compact}_{min_zoom}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "must launch no job")
+    try:
+        with pytest.raises(ValueError, match="min_zoom"):
+            SJ.spatial_join(pts_df, polys_df, zoom=14, compact=compact, min_zoom=min_zoom)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup(group)
+
+
 def test_polygon_intersect_join_matches_bruteforce(spark):
     """Cover-candidate + exact kernel == all-pairs kernel on mixed fixture rings."""
     import itertools
@@ -451,12 +469,13 @@ def test_prepared_min_zoom_static_range_matches_oracle(spark, data, oracle_pairs
 
 
 def test_streaming_spatial_join_matches_batch(spark, tmp_path):
-    """File-source stream through the prepared-index join == batch join on the
-    same rows; the plan is stateless (no watermark, no state store)."""
+    """A file-source stream through spatial_join's prepared index == the batch
+    join on the same rows: the plan is stateless (broadcast joins and a map-only
+    refine, no watermark, no state store), so Structured Streaming runs it in
+    append mode."""
     import time
 
     from geojson_utility_spark.operators.spatial_join import prepare_polygons
-    from geojson_utility_spark.streaming.spatial import streaming_spatial_join
 
     pts = FX.image_point([f"img_{i:012d}" for i in range(4000)]).rename(
         columns={"image_id": "point_id"}
@@ -473,7 +492,7 @@ def test_streaming_spatial_join_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    out = streaming_spatial_join(stream, prep)
+    out = SJ.spatial_join(stream, prepared=prep)
     q = (
         out.writeStream.format("memory")
         .queryName("sj_stream")
@@ -501,9 +520,6 @@ def test_streaming_spatial_join_matches_batch(spark, tmp_path):
         ).collect()
     }
     assert got == want and len(want) > 50
-    # batch input is rejected with a clear error
-    with pytest.raises(ValueError, match="streaming"):
-        streaming_spatial_join(spark.createDataFrame(pts), prep)
     prep.unpersist()
 
 

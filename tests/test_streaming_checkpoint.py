@@ -2,9 +2,7 @@
 
 import json
 import os
-import time
 
-import pytest
 from pyspark.sql import functions as F
 
 from geojson_utility_spark.plans.checkpoint import StageCheckpointer
@@ -16,7 +14,7 @@ def test_progress_stream_end_to_end(spark, tmp_path):
     em = PR.ProgressEmitter(event_dir)
     em.emit(1, "pending", 0, 0, 10, emitted_at=1.0)
     em.emit(1, "processing", 0, 0, 10, emitted_at=2.0)
-    em.emit(1, "processing", 5, 1, 10, emitted_at=3.0)  # same status -> deduped
+    em.emit(1, "processing", 5, 1, 10, emitted_at=3.0)  # same status -> still emitted
     em.emit(1, "done", 10, 1, 10, emitted_at=4.0)
     q = PR.run_progress_query(spark, event_dir, sink_table="prog_test")
     try:
@@ -27,10 +25,6 @@ def test_progress_stream_end_to_end(spark, tmp_path):
     assert len(out) == 4
     assert out["event_type"].tolist() == ["update", "start", "start", "complete"]
     assert out["progress_pct"].iloc[2] == 50.0
-    trans = PR.transitions_only(
-        spark.createDataFrame(out[["run_id", "seq", "status"]])
-    ).toPandas()
-    assert trans["status"].tolist() == ["pending", "processing", "done"]
 
 
 def test_checkpoint_resume_skips_completed_stage(spark, tmp_path):
@@ -90,107 +84,6 @@ def test_locations_csv_roundtrip(spark, tmp_path):
     assert sample.iloc[0]["location_gps"] == "28.5065162,77.073938"
 
 
-def test_windowed_streaming_matches_batch(spark, tmp_path, sf_dir):
-    """Streaming windowed agg over the events parquet == equivalent batch query."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from geojson_utility_spark.streaming.windows import (
-        run_windowed_query,
-        windowed_counts,
-    )
-
-    import datetime as dt
-
-    src = str(tmp_path / "events_stream")
-    os.makedirs(src, exist_ok=True)
-    shutil.copy(f"{sf_dir}/events.parquet", src + "/events.parquet")
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    max_ts = events.agg(F.max("ts")).first()[0]
-    # append mode emits a window only when the watermark passes its end — a sentinel
-    # event far past max_ts flushes every real window (and is itself never emitted)
-    sentinel_ts = max_ts + dt.timedelta(hours=48)
-    sentinel = spark.createDataFrame(
-        [(10**9, sentinel_ts, 0, "sentinel", 0.0, "{}")], schema=events.schema
-    )
-
-    def feed(df, name):
-        # the file source lists FILES in src, not nested dirs — stage the parquet
-        # and move its part file in flat
-        import glob
-
-        out = str(tmp_path / f"_stage_{name}")
-        df.coalesce(1).write.parquet(out)
-        shutil.copy(glob.glob(out + "/part-*.parquet")[0], f"{src}/{name}.parquet")
-    q = run_windowed_query(spark, src, sink_table="win_test", window="6 hours")
-    try:
-        q.processAllAvailable()
-        # windows ending within the 2 h watermark of max_ts are still open —
-        # the tail of the feed must be held back until the watermark passes it
-        n_before = spark.sql("SELECT count(*) FROM win_test").first()[0]
-        feed(sentinel, "sentinel")
-        q.processAllAvailable()
-        got = spark.sql("SELECT * FROM win_test").toPandas()
-        # watermark behavior: a row older than the watermark must be DROPPED —
-        # its (already-emitted) window shows no second emission
-        late = spark.createDataFrame(
-            [(10**9 + 1, max_ts - dt.timedelta(hours=30), 0, "late_evt", 1.0, "{}")],
-            schema=events.schema,
-        )
-        feed(late, "late")
-        q.processAllAvailable()
-        got_after_late = spark.sql("SELECT * FROM win_test").toPandas()
-    finally:
-        q.stop()
-    batch = (
-        windowed_counts(spark.read.parquet(f"{sf_dir}/events.parquet"), window="6 hours")
-        .toPandas()
-    )
-    key = ["window_start", "event_type"]
-    got_s = got.sort_values(key).reset_index(drop=True)
-    want_s = batch.sort_values(key).reset_index(drop=True)
-    assert n_before < len(want_s)  # tail windows were held back pre-sentinel
-    assert len(got_s) == len(want_s)
-    assert (got_s["n"].to_numpy() == want_s["n"].to_numpy()).all()
-    assert (abs(got_s["total_value"].to_numpy() - want_s["total_value"].to_numpy()) < 1e-9).all()
-    assert len(got_after_late) == len(got_s)  # late row dropped, nothing re-emitted
-    assert "late_evt" not in set(got_after_late["event_type"])
-
-
-def test_stateful_transitions(spark, tmp_path):
-    """applyInPandasWithState transition tracker: state persists across micro-batches."""
-    from geojson_utility_spark.streaming.progress import ProgressEmitter, read_progress_stream
-    from geojson_utility_spark.streaming.stateful import status_transitions_stateful
-
-    event_dir = str(tmp_path / "events_stateful")
-    em = ProgressEmitter(event_dir)
-    em.emit(1, "pending", emitted_at=1.0)
-    em.emit(1, "processing", emitted_at=2.0)
-    q = (
-        status_transitions_stateful(read_progress_stream(spark, event_dir))
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("trans_test")
-        .option("checkpointLocation", str(tmp_path / "ckpt_state"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # second micro-batch: a duplicate status (suppressed) + a transition
-        em.emit(1, "processing", completed=5, emitted_at=3.0)
-        em.emit(1, "done", emitted_at=4.0)
-        em.emit(2, "pending", emitted_at=5.0)
-        q.processAllAvailable()
-        out = spark.sql("SELECT * FROM trans_test ORDER BY run_id, seq").toPandas()
-    finally:
-        q.stop()
-    r1 = out[out["run_id"] == 1]
-    assert r1["status"].tolist() == ["pending", "processing", "done"]
-    assert r1["prev_status"].tolist() == [None, "pending", "processing"]
-    assert out[out["run_id"] == 2]["status"].tolist() == ["pending"]
-
-
 def test_heartbeat_rows(spark):
     """Explicit heartbeat events for idle gaps (reference catchment.py:601-609):
     one per 30 s of silence between events, trailing beats for open runs, none
@@ -228,87 +121,3 @@ def test_heartbeat_rows(spark):
     # feed ordering: heartbeats interleave chronologically per run
     per_run = out[out["run_id"] == 1]["emitted_at"].tolist()
     assert per_run == sorted(per_run)
-
-
-def test_session_streaming_matches_batch(spark, tmp_path, sf_dir):
-    """Streaming session_window == batch sessionization after a watermark flush."""
-    import datetime as dt
-    import glob
-    import shutil
-
-    from geojson_utility_spark.streaming.windows import run_session_query, session_counts
-
-    src = str(tmp_path / "events_sess")
-    os.makedirs(src, exist_ok=True)
-    shutil.copy(f"{sf_dir}/events.parquet", src + "/events.parquet")
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    max_ts = events.agg(F.max("ts")).first()[0]
-    sentinel = spark.createDataFrame(
-        [(10**9, max_ts + dt.timedelta(hours=48), 0, "sentinel", 0.0, "{}")],
-        schema=events.schema,
-    )
-    q = run_session_query(spark, src, sink_table="sess_test", gap="30 minutes")
-    try:
-        q.processAllAvailable()
-        out = str(tmp_path / "_stage_sess")
-        sentinel.coalesce(1).write.parquet(out)
-        shutil.copy(glob.glob(out + "/part-*.parquet")[0], src + "/sentinel.parquet")
-        q.processAllAvailable()
-        got = spark.sql("SELECT * FROM sess_test").toPandas()
-    finally:
-        q.stop()
-    batch = session_counts(events, gap="30 minutes").toPandas()
-    key = ["user_id", "session_start"]
-    # drop the sentinel's own session from the streaming result
-    got = got[got["session_start"] <= max_ts].sort_values(key).reset_index(drop=True)
-    want = batch.sort_values(key).reset_index(drop=True)
-    assert len(got) == len(want)
-    assert (got["n_events"].to_numpy() == want["n_events"].to_numpy()).all()
-    assert (got["session_end"].to_numpy() == want["session_end"].to_numpy()).all()
-
-
-def test_streaming_dedup_within_watermark(spark, tmp_path, sf_dir):
-    """dropDuplicatesWithinWatermark: re-delivered events within the watermark are
-    suppressed across micro-batches; state is evicted (bounded) by the watermark."""
-    import datetime as dt
-    import glob
-    import shutil
-
-    from geojson_utility_spark.streaming.windows import EVENTS_SCHEMA, streaming_dedup
-
-    src = str(tmp_path / "events_dedup")
-    os.makedirs(src, exist_ok=True)
-    base = dt.datetime(2024, 3, 1, 12, 0, 0)
-    rows1 = [(1, base, 7, "a", 1.0, "{}"), (2, base + dt.timedelta(minutes=5), 7, "b", 2.0, "{}")]
-    rows2 = [(1, base, 7, "a", 1.0, "{}"),  # exact redelivery of event 1
-             (3, base + dt.timedelta(minutes=10), 7, "c", 3.0, "{}")]
-
-    def feed(rows, name):
-        df = spark.createDataFrame(rows, schema=EVENTS_SCHEMA)
-        out = str(tmp_path / f"_stage_{name}")
-        df.coalesce(1).write.parquet(out)
-        shutil.copy(glob.glob(out + "/part-*.parquet")[0], f"{src}/{name}.parquet")
-
-    feed(rows1, "b1")
-    from pyspark.sql import functions as F  # noqa: F401
-
-    stream = streaming_dedup(
-        spark.readStream.schema(EVENTS_SCHEMA).option("maxFilesPerTrigger", 1).parquet(src),
-        ["event_id"],
-        watermark="1 hour",
-    )
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_test")
-        .option("checkpointLocation", str(tmp_path / "ckpt_dedup"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        feed(rows2, "b2")  # second micro-batch carries the duplicate
-        q.processAllAvailable()
-        out = spark.sql("SELECT event_id FROM dedup_test ORDER BY event_id").toPandas()
-    finally:
-        q.stop()
-    assert out["event_id"].tolist() == [1, 2, 3]  # the redelivered 1 was suppressed
