@@ -3,7 +3,7 @@
 An H3/S2-style discrete global grid implemented as a Web-Mercator quadtree (the public
 XYZ/quadkey tiling scheme): a *cell* is a (zoom, x, y) tile packed into one int64.  The
 API surface deliberately mirrors the h3-py vocabulary (``latlng_to_cell``,
-``cell_to_parent``, ``grid_disk``/k-ring, ``polygon_to_cells``, ``compact_cells``) so the
+``cell_to_parent``, ``polygon_to_cells``, ``compact_cells``) so the
 engine's spatial-join semantics (SURVEY.md §2.3) read like an H3 pipeline, but everything
 is numpy arithmetic — no native libraries — so it ships via ``spark-submit --py-files``
 and runs inside Arrow-batched pandas UDFs with zero per-row Python.
@@ -27,17 +27,11 @@ from __future__ import annotations
 
 import numpy as np
 
-MAX_ZOOM = 29
 # Web-Mercator latitude clamp (tan() diverges at the poles).
 MAX_LAT = 85.05112878
 _Z_SHIFT = 58
 _X_SHIFT = 29
 _XY_MASK = (1 << 29) - 1
-
-# Engine-default resolutions (≈ H3 res 7-9 per SURVEY.md §2.3 "res 7-9").
-RES_COARSE = 13
-RES_MID = 15
-RES_FINE = 17
 
 
 def pack_cell(z: np.ndarray | int, x: np.ndarray | int, y: np.ndarray | int) -> np.ndarray:
@@ -100,40 +94,6 @@ def cell_bounds(cell) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     lat_n = _lat(y.astype(np.float64))
     lat_s = _lat((y + 1).astype(np.float64))
     return lon_w, lat_s, lon_e, lat_n
-
-
-def cell_center(cell) -> tuple[np.ndarray, np.ndarray]:
-    """(lat, lon) of cell centers."""
-    w, s, e, n = cell_bounds(cell)
-    return (s + n) / 2.0, (w + e) / 2.0
-
-
-def grid_disk(cell: int, k: int) -> np.ndarray:
-    """k-ring: all cells at the same zoom within Chebyshev distance k (x wraps around
-    the antimeridian, y clamped at the poles).  The kNN expansion primitive
-    (SURVEY.md §2.3 'kNN via k-ring expansion')."""
-    z, x, y = (int(v) for v in unpack_cell(np.int64(cell)))
-    n = 1 << z
-    dx = np.arange(-k, k + 1, dtype=np.int64)
-    dy = np.arange(-k, k + 1, dtype=np.int64)
-    gx, gy = np.meshgrid((x + dx) % n, y + dy, indexing="ij")
-    keep = (gy >= 0) & (gy < n)
-    return pack_cell(z, gx[keep], gy[keep])
-
-
-def grid_ring(cell: int, k: int) -> np.ndarray:
-    """Hollow ring at exactly Chebyshev distance k (k=0 -> the cell itself)."""
-    if k == 0:
-        return np.asarray([cell], dtype=np.int64)
-    z, x, y = (int(v) for v in unpack_cell(np.int64(cell)))
-    n = 1 << z
-    dx = np.arange(-k, k + 1, dtype=np.int64)
-    dy = np.arange(-k, k + 1, dtype=np.int64)
-    gx, gy = np.meshgrid(x + dx, y + dy, indexing="ij")
-    on_ring = (np.abs(gx - x) == k) | (np.abs(gy - y) == k)
-    gx, gy = gx[on_ring] % n, gy[on_ring]
-    keep = (gy >= 0) & (gy < n)
-    return pack_cell(z, gx[keep], gy[keep])
 
 
 # ---------------------------------------------------------------------------

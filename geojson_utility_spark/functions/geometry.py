@@ -49,16 +49,7 @@ def extract_outer_ring(geojson: str | dict) -> list[list[float]]:
     (reference: backend/routers/catchment.py:94-99); non-Polygon geometry types
     additionally get the specific :func:`_check_polygon_type` message.
     """
-    doc = json.loads(geojson) if isinstance(geojson, str) else geojson
-    features = doc.get("features", [])
-    if not features:
-        raise GeometryError("No features found in GeoJSON response")
-    geom = features[0].get("geometry", {}) or {}
-    _check_polygon_type(geom)
-    coords = geom.get("coordinates")
-    if not coords or not isinstance(coords, list):
-        raise GeometryError("Invalid or missing coordinates in geometry")
-    return coords[0]
+    return extract_rings(geojson)[0]
 
 
 def extract_rings(geojson: str | dict) -> list[list[list[float]]]:
@@ -118,12 +109,6 @@ def wrap_polygon_feature_collection(outer_ring) -> dict:
             }
         ],
     }
-
-
-def normalize_feature_collection(geojson: str | dict) -> str:
-    """extract + rewrap + serialize, matching ``json.dumps`` defaults the reference
-    uses when writing the geojson CSV cell (backend/routers/catchment.py:303)."""
-    return json.dumps(wrap_polygon_feature_collection(extract_outer_ring(geojson)))
 
 
 # ---------------------------------------------------------------------------

@@ -218,15 +218,3 @@ def phash64(pixels: np.ndarray) -> int:
         if b:
             val |= np.uint64(1) << np.uint64(i)
     return int(val.astype(np.int64))
-
-
-def hamming64(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Vectorized Hamming distance between int64 hash columns."""
-    x = (np.asarray(a, dtype=np.int64).astype(np.uint64)) ^ (
-        np.asarray(b, dtype=np.int64).astype(np.uint64)
-    )
-    # SWAR popcount
-    x = x - ((x >> np.uint64(1)) & np.uint64(0x5555555555555555))
-    x = (x & np.uint64(0x3333333333333333)) + ((x >> np.uint64(2)) & np.uint64(0x3333333333333333))
-    x = (x + (x >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
-    return ((x * np.uint64(0x0101010101010101)) >> np.uint64(56)).astype(np.int64)

@@ -93,37 +93,3 @@ def decode_fvid(data: bytes) -> tuple[np.ndarray, float]:
     raw = zlib.decompress(data[14:])
     frames = np.frombuffer(raw, dtype=np.uint8).reshape(n, h, w, 3)
     return frames, fps_milli / 1000.0
-
-
-def decode_media(data: bytes, fmt: str):
-    if fmt == "wav":
-        return decode_wav(data)
-    if fmt == "fvid":
-        return decode_fvid(data)
-    raise NotImplementedError(
-        f"format {fmt!r}: real decoders for mp3/aac/mp4/h264 need codec libraries "
-        "not present in this container — plumbing is format-agnostic, add a codec here"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Feature kernels (pure numpy, called from Arrow batches)
-# ---------------------------------------------------------------------------
-
-
-def audio_rms_db(samples: np.ndarray) -> float:
-    """RMS level in dBFS relative to int16 full scale (-inf-safe floor at -120)."""
-    x = samples.astype(np.float64) / 32768.0
-    rms = float(np.sqrt(np.mean(x * x)))
-    if rms <= 1e-6:
-        return -120.0
-    return 20.0 * float(np.log10(rms))
-
-
-def zero_crossing_rate(samples: np.ndarray) -> float:
-    """Mean per-channel fraction of sign changes between consecutive samples."""
-    x = samples.astype(np.int32)
-    if x.shape[0] < 2:
-        return 0.0
-    signs = np.signbit(x[:-1]) != np.signbit(x[1:])
-    return float(signs.mean())

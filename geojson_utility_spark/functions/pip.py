@@ -94,11 +94,6 @@ def _ring_tests(px, py, ring) -> tuple[np.ndarray, np.ndarray]:
     return inside, on_edge
 
 
-def points_on_ring_edges(px, py, ring) -> np.ndarray:
-    """True where (px, py) lies exactly on a segment of ``ring``. (P,) bool."""
-    return _ring_tests(px, py, ring)[1]
-
-
 def points_in_ring(px, py, ring, boundary: str = "include") -> np.ndarray:
     """Even-odd ray cast of P points against one closed ring. (P,) bool.
 
@@ -187,28 +182,6 @@ def refine_mask(lon, lat, codes, rings, kernels: dict) -> np.ndarray:
             ins, edg = kern.test_block(lon[b], lat[b])
             keep[b] = ins | edg
     return keep
-
-
-def point_ring_distance_sq(px, py, ring) -> np.ndarray:
-    """Min squared euclidean (planar lon/lat) distance from each point to the ring's
-    segments — used by kNN tie-breaking/top-k ordering. (P,) float64."""
-    ring = _closed(ring)
-    ax = ring[:-1, 0][None, :]
-    ay = ring[:-1, 1][None, :]
-    bx = ring[1:, 0][None, :]
-    by = ring[1:, 1][None, :]
-    pxc = np.asarray(px, dtype=np.float64)[:, None]
-    pyc = np.asarray(py, dtype=np.float64)[:, None]
-    dx = bx - ax
-    dy = by - ay
-    seg_len_sq = dx * dx + dy * dy
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = ((pxc - ax) * dx + (pyc - ay) * dy) / seg_len_sq
-    t = np.nan_to_num(np.clip(t, 0.0, 1.0))
-    cx = ax + t * dx
-    cy = ay + t * dy
-    d2 = (pxc - cx) ** 2 + (pyc - cy) ** 2
-    return d2.min(axis=1)
 
 
 def haversine_km(lat1, lon1, lat2, lon2) -> np.ndarray:

@@ -351,15 +351,6 @@ def dedup_exact(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
     return df.join(winners, [content_col, id_col], "left_semi").dropDuplicates([id_col])
 
 
-def exact_dup_groups(df: DataFrame, content_col: str) -> DataFrame:
-    """(content, n_copies) for duplicated content — the P4/P5 duplicate-report shape."""
-    return (
-        df.groupBy(content_col)
-        .agg(F.count("*").alias("n_copies"))
-        .filter(F.col("n_copies") > 1)
-    )
-
-
 def _normalized(text_col: str):
     """The one text normalization every shingle producer shares: lowercase,
     whitespace runs collapsed to one space."""
@@ -1015,17 +1006,6 @@ def hamming_pairs(
             "id_a", "id_b", hamming_expr(F.col("_h_a"), F.col("_h_b")).alias("hamming")
         )
         .filter(F.col("hamming") <= max_distance)
-    )
-
-
-def simhash_near_dups(
-    df: DataFrame, text_col: str, id_col: str, max_distance: int = 6
-) -> DataFrame:
-    """Near-dup pairs by simhash hamming <= max_distance — EXACT recall via
-    :func:`hamming_pairs` (n_chunks = max_distance + 2 pigeonhole guarantee)."""
-    sims = simhash64(df, text_col, id_col)
-    return hamming_pairs(sims, "doc_id", "simhash", max_distance).select(
-        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "hamming"
     )
 
 

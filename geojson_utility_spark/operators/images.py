@@ -13,10 +13,8 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from geojson_utility_spark.functions import imaging as I
@@ -72,81 +70,3 @@ def decode_and_verify(images: DataFrame) -> DataFrame:
             )
 
     return images.mapInPandas(batches, VERIFY_SCHEMA)
-
-
-FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType()),
-        T.StructField("mean_r", T.DoubleType()),
-        T.StructField("mean_g", T.DoubleType()),
-        T.StructField("mean_b", T.DoubleType()),
-        T.StructField("luma_std", T.DoubleType()),
-        T.StructField("phash_recalc", T.LongType()),
-    ]
-)
-
-
-def extract_features(images: DataFrame) -> DataFrame:
-    """Feature extraction over the binary column (decode -> channel stats + phash)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                try:
-                    px = I.decode_image(bytes(r.bytes), r.fmt).astype(np.float64)
-                except Exception:
-                    continue
-                luma = px @ np.array([0.299, 0.587, 0.114])
-                rows.append(
-                    (
-                        r.image_id,
-                        float(px[..., 0].mean()),
-                        float(px[..., 1].mean()),
-                        float(px[..., 2].mean()),
-                        float(luma.std()),
-                        I.phash64(px.astype(np.uint8)),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "mean_r", "mean_g", "mean_b", "luma_std", "phash_recalc"],
-            )
-
-    return images.mapInPandas(batches, FEATURES_SCHEMA)
-
-
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType()),
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("w", T.IntegerType()),
-        T.StructField("h", T.IntegerType()),
-        T.StructField("fmt", T.StringType()),
-    ]
-)
-
-
-def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Nearest-neighbor resize (pure numpy indexing) -> re-encoded PNG.
-
-    Stand-in for a real resampling kernel (no image libs in container) — the Spark
-    plumbing (binary in/out, Arrow batching, schema) is the real contract.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                try:
-                    px = I.decode_image(bytes(r.bytes), r.fmt)
-                except Exception:
-                    continue
-                h, w, _ = px.shape
-                yi = (np.arange(out_h) * h) // out_h
-                xi = (np.arange(out_w) * w) // out_w
-                small = px[yi][:, xi]
-                rows.append((r.image_id, I.encode_png(small), out_w, out_h, "png"))
-            yield pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt"])
-
-    return images.mapInPandas(batches, RESIZE_SCHEMA)

@@ -179,7 +179,9 @@ def within_distance_join(
     pair within radius_km is a candidate; exactness is pinned against the
     brute-force oracle in tests and the driver contract.
 
-    zoom=None picks the zoom where an equator tile ~ radius (R stays ~2-4).
+    zoom=None picks the zoom where an equator tile ~ radius (R stays ~2-4), and
+    the finest auto zoom (18) for radius_km=0 (coincident pairs).  A negative,
+    NaN or infinite radius raises ``ValueError`` before any Spark job.
 
     Polar domain: the Mercator tile grid ends at ±MAX_LAT (~85.05°); points
     poleward of it are clamped into the last tile row, where tile distance no
@@ -193,8 +195,12 @@ def within_distance_join(
     """
     import math
 
+    if not (math.isfinite(radius_km) and radius_km >= 0.0):
+        raise ValueError(f"radius_km must be a finite number >= 0, got {radius_km!r}")
     if zoom is None:
-        zoom = max(1, min(18, int(math.floor(math.log2(EARTH_CIRC_KM / radius_km)))))
+        zoom = 18 if radius_km == 0.0 else max(
+            1, min(18, int(math.floor(math.log2(EARTH_CIRC_KM / radius_km))))
+        )
     tile_deg = 360.0 / (1 << zoom)
     pts = points.select(
         F.col(point_id).alias("point_id"),

@@ -1,9 +1,8 @@
 """Multimodal audio/video column operators — mapInPandas over opaque binary columns.
 
 Completes the image/audio/video triad (operators/images.py covers images): typed
-metadata schemas, decode-and-verify with per-row invariants, feature extraction, and
-frame sampling — all Arrow-batched mapInPandas, never per-row Python at the
-DataFrame layer.  Codecs from functions/media.py (REAL RIFF/WAVE PCM16; clearly
+metadata schemas, decode-and-verify with per-row invariants, and frame sampling —
+all Arrow-batched mapInPandas, never per-row Python at the DataFrame layer.  Codecs from functions/media.py (REAL RIFF/WAVE PCM16; clearly
 labeled deterministic stand-in for video containers — no codec libs in this
 container; the plumbing is the real contract).
 """
@@ -94,51 +93,6 @@ def decode_and_verify_audio(audio: DataFrame) -> DataFrame:
     return audio.mapInPandas(batches, AUDIO_VERIFY_SCHEMA)
 
 
-AUDIO_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("audio_id", T.StringType()),
-        T.StructField("duration_ms", T.DoubleType()),
-        T.StructField("rms_db", T.DoubleType()),
-        T.StructField("zero_crossing_rate", T.DoubleType()),
-        T.StructField("peak", T.IntegerType()),
-    ]
-)
-
-
-def audio_features(audio: DataFrame) -> DataFrame:
-    """Per-clip features (decode -> numpy kernels): duration, RMS dBFS, ZCR, peak.
-
-    Undecodable clips are OMITTED from the output (a feature row has no sensible
-    error shape) — run :func:`decode_and_verify_audio` first for the per-row error
-    report; the same contract applies to frame_sample/video_features."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                try:
-                    samples, sr = M.decode_wav(bytes(r.bytes))
-                except Exception:
-                    continue
-                rows.append(
-                    (
-                        r.audio_id,
-                        1000.0 * samples.shape[0] / sr,
-                        M.audio_rms_db(samples),
-                        M.zero_crossing_rate(samples),
-                        int(np.abs(samples.astype(np.int32)).max(initial=0)),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "audio_id", "duration_ms", "rms_db", "zero_crossing_rate", "peak",
-                ],
-            )
-
-    return audio.mapInPandas(batches, AUDIO_FEATURES_SCHEMA)
-
-
 FRAME_SAMPLE_SCHEMA = T.StructType(
     [
         T.StructField("video_id", T.StringType()),
@@ -176,52 +130,3 @@ def frame_sample(videos: DataFrame, every_n: int = 10) -> DataFrame:
             yield pd.DataFrame(out)
 
     return videos.mapInPandas(batches, FRAME_SAMPLE_SCHEMA)
-
-
-VIDEO_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("video_id", T.StringType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("duration_ms", T.DoubleType()),
-        T.StructField("mean_frame_diff", T.DoubleType()),
-        T.StructField("meta_ok", T.BooleanType()),
-    ]
-)
-
-
-def video_features(videos: DataFrame) -> DataFrame:
-    """Per-video features + metadata verification (dims/fps/frame count)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                try:
-                    frames, fps = M.decode_fvid(bytes(r.bytes))
-                except Exception:
-                    continue
-                n, h, w, _ = frames.shape
-                meta_ok = (
-                    n == r.n_frames
-                    and w == r.w
-                    and h == r.h
-                    and abs(fps - r.fps) < 1e-3
-                )
-                diff = (
-                    float(
-                        np.abs(np.diff(frames.astype(np.int16), axis=0)).mean()
-                    )
-                    if n > 1
-                    else 0.0
-                )
-                rows.append(
-                    (r.video_id, n, 1000.0 * n / fps, diff, meta_ok)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "video_id", "n_frames", "duration_ms", "mean_frame_diff", "meta_ok",
-                ],
-            )
-
-    return videos.mapInPandas(batches, VIDEO_FEATURES_SCHEMA)

@@ -5,11 +5,10 @@ partition-layout- and seed-stream-dependent): held-out splits must be a PURE
 FUNCTION of row identity so every run, engine, and backfill selects the same
 rows.  These operators key every decision on a hash of the row's id:
 
-- :func:`hash_sample` — deterministic Bernoulli: keep iff
-  ``bucket(hash(key, seed)) < fraction * 1e6``.  A pure codegen filter: zero
-  shuffle, predicate evaluated at the scan, scales embarrassingly.
-- :func:`stratified_sample` — per-stratum fractions via one CASE over the same
-  bucket; unlisted strata keep fraction 0.  Still a zero-shuffle filter.
+- :func:`stratified_sample` — deterministic Bernoulli per stratum: keep iff
+  ``bucket(hash(key, seed)) < fraction * 1e6``, the fraction picked by one CASE
+  over the stratum; unlisted strata keep fraction 0.  A pure codegen filter:
+  zero shuffle, predicate evaluated at the scan, scales embarrassingly.
 - :func:`reservoir_k` — EXACT k rows per stratum, deterministically: rank by
   (hash, key) within the stratum and keep rank <= k ("deterministic
   reservoir").  One window shuffle keyed on the stratum; for degenerate
@@ -67,19 +66,6 @@ def _threshold(fraction: float) -> int:
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction must be in [0, 1], got {fraction}")
     return int(round(fraction * _BUCKETS))
-
-
-def hash_sample(
-    df: DataFrame,
-    key_col: str,
-    fraction: float,
-    seed: int = 42,
-    hash_family: str = "xxhash64",
-) -> DataFrame:
-    """Deterministic Bernoulli sample: the SAME rows on every run and engine."""
-    return df.filter(
-        _bucket(F.col(key_col), seed, hash_family) < F.lit(_threshold(fraction))
-    )
 
 
 def stratified_sample(

@@ -344,8 +344,9 @@ def prepare_polygons(
         zooms = sorted(
             r["cell_zoom"] for r in cover.select("cell_zoom").distinct().collect()
         )
+    # explicit schema: with no valid polygon there are no rows to infer from
     pid_map = spark.createDataFrame(
-        [(i, pid) for i, pid in enumerate(pid_rows)], ["poly_idx", "polygon_id"]
+        list(enumerate(pid_rows)), "poly_idx long, polygon_id string"
     )
     cover_idx = cover.join(F.broadcast(pid_map), "polygon_id").select(
         F.col("poly_idx").cast("int").alias("poly_idx"),

@@ -39,8 +39,6 @@ from pyspark.sql import types as T
 
 from geojson_utility_spark.schemas import REQUIRED_LOCATION_COLUMNS
 
-ID_COLUMNS = ("snp_id", "provider_id", "location_id")
-
 GPS_ERROR = (
     "location_gps must be a string with two comma-separated floats, "
     "each with at least 4 decimals, valid range."

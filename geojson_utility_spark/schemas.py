@@ -1,8 +1,8 @@
 """Explicit StructType schemas — the engine never infers schemas (SURVEY.md §1.3).
 
-The ``images`` schema is the BASELINE.json ``input_hint`` verbatim; ``locations`` is the
-reference's upload-CSV contract (reference: backend/sample.csv + required-column set at
-backend/routers/catchment.py:175).
+The ``images`` schema is the BASELINE.json ``input_hint`` verbatim;
+``REQUIRED_LOCATION_COLUMNS`` is the reference's upload-CSV contract (reference:
+backend/sample.csv + required-column set at backend/routers/catchment.py:175).
 """
 
 from __future__ import annotations
@@ -24,17 +24,6 @@ IMAGES_SCHEMA = T.StructType(
 )
 
 # reference upload CSV: required columns at backend/routers/catchment.py:175
-LOCATIONS_SCHEMA = T.StructType(
-    [
-        T.StructField("snp_id", T.StringType(), True),
-        T.StructField("provider_id", T.StringType(), True),
-        T.StructField("location_id", T.StringType(), True),
-        T.StructField("location_gps", T.StringType(), True),
-        T.StructField("drive_distance", T.StringType(), True),
-        T.StructField("drive_time", T.StringType(), True),
-    ]
-)
-
 REQUIRED_LOCATION_COLUMNS = {
     "snp_id",
     "provider_id",
@@ -43,32 +32,3 @@ REQUIRED_LOCATION_COLUMNS = {
     "drive_distance",
     "drive_time",
 }
-
-POLYGONS_SCHEMA = T.StructType(
-    [
-        T.StructField("polygon_id", T.StringType(), False),
-        T.StructField("snp_id", T.StringType(), True),
-        T.StructField("provider_id", T.StringType(), True),
-        T.StructField("location_id", T.StringType(), True),
-        T.StructField("geojson", T.StringType(), True),
-        T.StructField("centroid_lat", T.DoubleType(), True),
-        T.StructField("centroid_lon", T.DoubleType(), True),
-    ]
-)
-
-# enrichment output: input columns + geojson + errors (backend/routers/catchment.py:373-374)
-ENRICHED_SCHEMA = T.StructType(
-    LOCATIONS_SCHEMA.fields
-    + [
-        T.StructField("geojson", T.StringType(), True),
-        T.StructField("errors", T.StringType(), True),
-    ]
-)
-
-POINTS_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType(), False),
-        T.StructField("lat", T.DoubleType(), False),
-        T.StructField("lon", T.DoubleType(), False),
-    ]
-)

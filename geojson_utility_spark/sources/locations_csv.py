@@ -9,11 +9,9 @@ as a manifest check, not hidden I/O.
 
 from __future__ import annotations
 
-import io
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from geojson_utility_spark.operators.validation import normalize_headers
 
@@ -54,16 +52,3 @@ def write_locations_csv(df: DataFrame, path: str) -> None:
     """Header CSV sink (single directory of part files — the distributed contract;
     the reference's single-blob output is the coalesce(1) special case)."""
     df.write.mode("overwrite").option("header", True).csv(path)
-
-
-def sample_csv_frame(spark: SparkSession) -> DataFrame:
-    """S4: the 2-row template (reference: catchment.py:118-132, verbatim values)."""
-    rows = [
-        ("snp_1.com", "provider1", "L1", "28.5065162,77.073938", "500.5", ""),
-        ("snp_2.com", "provider2", "L2", "30.7135305,76.7454157", "", "20.5"),
-    ]
-    return spark.createDataFrame(
-        rows,
-        ["snp_id", "provider_id", "location_id", "location_gps",
-         "drive_distance", "drive_time"],
-    )

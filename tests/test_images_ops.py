@@ -28,28 +28,6 @@ def test_decode_and_verify_invariants(images):
     assert (png["psnr_vs_reencode"] == 1e9).any()
 
 
-def test_extract_features_deterministic(images):
-    f1 = IMG.extract_features(images).orderBy("image_id").toPandas()
-    f2 = IMG.extract_features(images).orderBy("image_id").toPandas()
-    assert f1.equals(f2)
-    assert len(f1) == 60
-    assert (f1["mean_r"].between(0, 255)).all()
-    # phash recompute matches the stored column
-    stored = images.select("image_id", "phash").orderBy("image_id").toPandas()
-    np.testing.assert_array_equal(
-        f1["phash_recalc"].to_numpy(), stored["phash"].to_numpy()
-    )
-
-
-def test_resize_images(spark, images):
-    small = IMG.resize_images(images, 16, 16)
-    out = small.toPandas()
-    assert len(out) == 60
-    assert (out["w"] == 16).all() and (out["h"] == 16).all()
-    px = I.decode_png(bytes(out.iloc[0]["bytes"]))
-    assert px.shape == (16, 16, 3)
-
-
 def test_phash_near_dups_finds_planted(spark):
     pdf = FX.make_images(40)
     # plant a near-dup: re-encode image 0's pixels with tiny noise

@@ -210,6 +210,40 @@ def test_within_distance_join_empty_targets(spark, knn_data):
     assert out.count() == 0
 
 
+def test_within_distance_join_radius_zero_returns_coincident_pairs(spark):
+    """radius_km=0 is the coincident-pair query: it takes the finest auto zoom
+    and keeps exactly the pairs at distance 0."""
+    pts = spark.createDataFrame(
+        [("a", 10.0, 20.0), ("b", 10.001, 20.0), ("c", -30.0, 40.0)],
+        ["point_id", "lat", "lon"],
+    )
+    tgt = spark.createDataFrame(
+        [("x", 10.0, 20.0), ("y", -30.0, 40.0), ("z", 50.0, 60.0)],
+        ["target_id", "lat", "lon"],
+    )
+    got = K.within_distance_join(pts, tgt, radius_km=0.0).collect()
+    assert sorted((r.point_id, r.target_id, r.dist_km) for r in got) == [
+        ("a", "x", 0.0),
+        ("c", "y", 0.0),
+    ]
+
+
+@pytest.mark.parametrize("radius", [-1.0, float("nan"), float("inf")])
+def test_within_distance_join_rejects_bad_radius(spark, knn_data, radius):
+    """A negative, NaN or infinite radius raises ValueError naming the argument
+    before any Spark job."""
+    pts_df, tgt_df = knn_data
+    group = f"bad_radius_{radius}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "must launch no job")
+    try:
+        with pytest.raises(ValueError, match="radius_km"):
+            K.within_distance_join(pts_df, tgt_df, radius_km=radius)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup(group)
+
+
 def test_within_distance_join_polar_targets(spark):
     """Targets past the Mercator clamp take the exact branch — pairs poleward of
     ~85 deg are no longer missed (ADVICE r2)."""

@@ -1,7 +1,5 @@
 """PIP + polygon normalize/validate tests, incl. property tests vs a scalar oracle."""
 
-import json
-
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -70,8 +68,8 @@ def test_polygon_with_hole():
 def test_pip_matches_scalar_oracle(px, py):
     for ring in (SQUARE, CONCAVE):
         got = P.points_in_ring(np.array([px]), np.array([py]), ring, boundary="exclude")
-        on_edge = P.points_on_ring_edges(np.array([px]), np.array([py]), ring)
-        if not on_edge[0]:  # oracle is half-open on edges; compare interior only
+        covers = P.points_in_ring(np.array([px]), np.array([py]), ring, boundary="include")
+        if got[0] == covers[0]:  # off the edges: the oracle is half-open on them
             assert got[0] == scalar_pip_oracle(px, py, ring)
 
 
@@ -141,7 +139,7 @@ def test_extract_outer_ring_reference_contract():
             {"type": "Feature", "geometry": {"type": "Point", "coordinates": [0, 0]}},
         ],
     }
-    out = json.loads(G.normalize_feature_collection(doc))
+    out = G.wrap_polygon_feature_collection(G.extract_outer_ring(doc))
     assert out == {
         "type": "FeatureCollection",
         "features": [
@@ -174,9 +172,3 @@ def test_synth_catchment_deterministic_and_valid():
     assert P.points_in_ring(np.array([77.0739]), np.array([28.5065]), r1)[0]
     r3 = G.synth_catchment_ring(28.5065, 77.0739, 600, "drive_distance")
     assert not np.array_equal(r1, r3)
-
-
-def test_point_ring_distance():
-    d2 = P.point_ring_distance_sq(np.array([5.0, 15.0]), np.array([5.0, 5.0]), SQUARE)
-    assert abs(d2[0] - 25.0) < 1e-12  # center -> nearest edge dist 5
-    assert abs(d2[1] - 25.0) < 1e-12  # outside, 5 right of right edge

@@ -5,11 +5,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from geojson_utility_spark.operators.sampling import (
-    hash_sample,
-    reservoir_k,
-    stratified_sample,
-)
+from geojson_utility_spark.operators.sampling import reservoir_k, stratified_sample
 
 
 @pytest.fixture(scope="module")
@@ -19,32 +15,24 @@ def orders(spark, sf_dir):
 
 @pytest.mark.parametrize("family", ["xxhash64", "md5"])
 def test_hash_sample_deterministic_and_bounded(spark, orders, family):
+    """The hash Bernoulli sample: ``stratified_sample`` over one stratum."""
     n = orders.count()
     frac = 0.3
-    a = sorted(
-        r.o_orderkey
-        for r in hash_sample(orders, "o_orderkey", frac, seed=11, hash_family=family)
-        .select("o_orderkey")
-        .collect()
-    )
-    b = sorted(
-        r.o_orderkey
-        for r in hash_sample(orders, "o_orderkey", frac, seed=11, hash_family=family)
-        .select("o_orderkey")
-        .collect()
-    )
+    one = orders.withColumn("stratum", F.lit("all"))
+
+    def keys(seed):
+        out = stratified_sample(
+            one, "stratum", {"all": frac}, key_col="o_orderkey", seed=seed, hash_family=family
+        )
+        return sorted(r.o_orderkey for r in out.select("o_orderkey").collect())
+
+    a, b = keys(11), keys(11)
     assert a == b, "same (key, seed) must select the same rows"
     # binomial 5-sigma bound on the sample size
     sigma = math.sqrt(n * frac * (1 - frac))
     assert abs(len(a) - n * frac) < 5 * sigma + 1
     # a different seed selects a different set
-    c = set(
-        r.o_orderkey
-        for r in hash_sample(orders, "o_orderkey", frac, seed=12, hash_family=family)
-        .select("o_orderkey")
-        .collect()
-    )
-    assert set(a) != c
+    assert set(a) != set(keys(12))
 
 
 def test_stratified_fractions_respected(spark, orders):

@@ -178,6 +178,22 @@ def test_spatial_join_rejects_unknown_refine(spark):
         SJ.spatial_join(pts, polys, refine="expr")
 
 
+@pytest.mark.parametrize("compact", [False, True])
+@pytest.mark.parametrize(
+    "rows", [[], [("bad", "{}"), ("bowtie", "not json")]], ids=["empty", "all_invalid"]
+)
+def test_spatial_join_without_valid_polygons_matches_nothing(spark, compact, rows):
+    """An empty polygon table, or one whose every row is invalid, leaves no
+    polygon to index: the join has no matches and left_anti returns every point."""
+    pts = spark.createDataFrame(
+        [("p", 0.5, 0.5), ("q", 10.0, 20.0)], ["point_id", "lat", "lon"]
+    )
+    polys = spark.createDataFrame(rows, "polygon_id string, geojson string")
+    assert SJ.spatial_join(pts, polys, zoom=12, compact=compact).count() == 0
+    anti = SJ.spatial_join(pts, polys, zoom=12, compact=compact, how="left_anti")
+    assert sorted(r["point_id"] for r in anti.collect()) == ["p", "q"]
+
+
 @pytest.mark.parametrize("compact,min_zoom", [(True, 16), (False, 12)])
 def test_min_zoom_outside_compact_cover_is_rejected(spark, data, compact, min_zoom):
     """min_zoom above zoom would leave no probe zoom (an empty join), and without
