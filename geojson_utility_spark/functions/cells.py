@@ -102,8 +102,12 @@ def cell_bounds(cell) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
 
 def _points_in_ring(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
     """Even-odd ray cast of points against one ring.  Kept apart from pip's
-    ``RingKernel`` on purpose: this computes the crossing x as mul-then-div, and
-    the ``rasterize_masks`` oracle SQL mirrors that exact op order."""
+    ``RingKernel`` and its row-wise ``covers_grid`` on purpose: this computes the
+    crossing x as mul-then-div, ``(py - y1) * (x2 - x1) / (y2 - y1)``, where the
+    kernel multiplies by a precomputed slope, and the ``rasterize_masks`` oracle SQL
+    mirrors each op order at its site.  The cover's probes are tile corners and
+    centres scattered over many distinct latitudes, so a row-wise cast would not
+    share work here (measured slower)."""
     x1 = ring[:-1, 0][None, :]
     y1 = ring[:-1, 1][None, :]
     x2 = ring[1:, 0][None, :]
@@ -117,39 +121,100 @@ def _points_in_ring(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndar
     return (crossings % 2) == 1
 
 
-def _segments_intersect(a1, a2, b1, b2) -> np.ndarray:
-    """Vectorized proper/improper segment intersection. a*: (N,2); b*: (M,2) -> (N,M)."""
-    def cross(o, d, p):
-        return (d[..., 0] - o[..., 0]) * (p[..., 1] - o[..., 1]) - (
-            d[..., 1] - o[..., 1]
-        ) * (p[..., 0] - o[..., 0])
+def _cross(ox, oy, dx, dy, px, py):
+    """Orientation of point p against the directed segment o -> d: (d - o) x (p - o)."""
+    return (dx - ox) * (py - oy) - (dy - oy) * (px - ox)
 
-    a1e = a1[:, None, :]
-    a2e = a2[:, None, :]
-    b1e = b1[None, :, :]
-    b2e = b2[None, :, :]
-    d1 = cross(a1e, a2e, b1e)
-    d2 = cross(a1e, a2e, b2e)
-    d3 = cross(b1e, b2e, a1e)
-    d4 = cross(b1e, b2e, a2e)
-    proper = ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
-    # collinear-touch cases: endpoint on the other segment
-    def on_seg(o, d, p):
-        return (
-            (cross(o, d, p) == 0)
-            & (np.minimum(o[..., 0], d[..., 0]) <= p[..., 0])
-            & (p[..., 0] <= np.maximum(o[..., 0], d[..., 0]))
-            & (np.minimum(o[..., 1], d[..., 1]) <= p[..., 1])
-            & (p[..., 1] <= np.maximum(o[..., 1], d[..., 1]))
-        )
 
-    touch = (
-        on_seg(a1e, a2e, b1e)
-        | on_seg(a1e, a2e, b2e)
-        | on_seg(b1e, b2e, a1e)
-        | on_seg(b1e, b2e, a2e)
+def _orientations(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Every cross product the segment-pair test needs, each computed once.
+
+    a: (..., N+1, 2) vertices of chains of N segments (leading axes batch chains);
+    b: (M+1, 2) one chain of M segments.  Returns (va, vb):
+    va (..., N, M+1): a-segment i against b vertex j — d1 of pair (i, j), d2 of (i, j-1);
+    vb (..., N+1, M): a vertex i against b-segment j — d3 of pair (i, j), d4 of (i-1, j).
+    """
+    ax, ay = a[..., :, None, 0], a[..., :, None, 1]
+    bx, by = b[:, 0], b[:, 1]
+    va = _cross(ax[..., :-1, :], ay[..., :-1, :], ax[..., 1:, :], ay[..., 1:, :], bx, by)
+    vb = _cross(bx[:-1], by[:-1], bx[1:], by[1:], ax, ay)
+    return va, vb
+
+
+def _in_box(o: np.ndarray, d: np.ndarray, p: np.ndarray) -> np.ndarray:
+    """Point p within the bounding box of segment o -> d; all (K, 2)."""
+    return (
+        (np.minimum(o[:, 0], d[:, 0]) <= p[:, 0])
+        & (p[:, 0] <= np.maximum(o[:, 0], d[:, 0]))
+        & (np.minimum(o[:, 1], d[:, 1]) <= p[:, 1])
+        & (p[:, 1] <= np.maximum(o[:, 1], d[:, 1]))
     )
-    return proper | touch
+
+
+def _chains_meet(
+    va: np.ndarray, vb: np.ndarray, a: np.ndarray, b: np.ndarray
+) -> np.ndarray:
+    """(..., N, M) boolean: segment i of chain a meets segment j of chain b, touching
+    and collinear overlap included.  va, vb from :func:`_orientations` (a, b).
+
+    A pair meets on a proper crossing ((d1 > 0) != (d2 > 0) and (d3 > 0) != (d4 > 0))
+    or when one endpoint lies on the other segment: that d is exactly 0 and the
+    endpoint is within the segment's bounding box.  The box test runs only on pairs
+    with a zero d that are not already proper crossings.
+    """
+    pos_a, pos_b = va > 0, vb > 0
+    hit = (pos_a[..., :-1] != pos_a[..., 1:]) & (pos_b[..., :-1, :] != pos_b[..., 1:, :])
+    zero_a, zero_b = va == 0, vb == 0
+    if not (zero_a.any() or zero_b.any()):
+        return hit
+    z1, z2 = zero_a[..., :-1], zero_a[..., 1:]
+    z3, z4 = zero_b[..., :-1, :], zero_b[..., 1:, :]
+    pair = np.nonzero(~hit & (z1 | z2 | z3 | z4))
+    if pair[0].size:
+        *lead, i, j = pair
+        a1, a2 = a[(*lead, i)], a[(*lead, i + 1)]
+        b1, b2 = b[j], b[j + 1]
+        hit[pair] = (
+            (z1[pair] & _in_box(a1, a2, b1))
+            | (z2[pair] & _in_box(a1, a2, b2))
+            | (z3[pair] & _in_box(b1, b2, a1))
+            | (z4[pair] & _in_box(b1, b2, a2))
+        )
+    return hit
+
+
+def _tiles_meet_ring(w, s, e, n, ring: np.ndarray) -> np.ndarray:
+    """(T,) boolean: some side of tile t meets some edge of the closed ring.
+
+    The tile outlines SW -> SE -> NE -> NW -> SW are the chains a of
+    :func:`_orientations`, computed bit for bit as it would, but with the differences
+    that sides and corners share taken once: va (T, 4, E+1) is each side against every
+    ring vertex, vb (T, 5, E) each corner against every ring edge (the closing SW row
+    is a copy of the first).  Each corner thus serves as d3 of one side and d4 of the
+    side before it.
+    """
+    bx, by = ring[:, 0], ring[:, 1]
+    outline = np.stack(
+        [np.stack([w, e, e, w, w], axis=1), np.stack([s, s, n, n, s], axis=1)], axis=2
+    )
+    w, s, e, n = w[:, None], s[:, None], e[:, None], n[:, None]
+    dys, dyn, dxw, dxe = by - s, by - n, bx - w, bx - e
+    va = np.empty((w.shape[0], 4, bx.shape[0]))
+    va[:, 0] = (e - w) * dys - (s - s) * dxw
+    va[:, 1] = (e - e) * dys - (n - s) * dxe
+    va[:, 2] = (w - e) * dyn - (n - n) * dxe
+    va[:, 3] = (w - w) * dyn - (s - n) * dxw
+    x1, y1 = bx[:-1], by[:-1]
+    ex, ey = bx[1:] - x1, by[1:] - y1
+    south, north = ex * (s - y1), ex * (n - y1)
+    west, east = ey * (w - x1), ey * (e - x1)
+    vb = np.empty((w.shape[0], 5, x1.shape[0]))
+    np.subtract(south, west, out=vb[:, 0])
+    np.subtract(south, east, out=vb[:, 1])
+    np.subtract(north, east, out=vb[:, 2])
+    np.subtract(north, west, out=vb[:, 3])
+    vb[:, 4] = vb[:, 0]
+    return _chains_meet(va, vb, outline, ring).any(axis=(1, 2))
 
 
 def polygon_to_cells(ring: np.ndarray, zoom: int) -> np.ndarray:
@@ -170,12 +235,23 @@ def _classify_tiles(cand: np.ndarray, ring: np.ndarray) -> tuple[np.ndarray, np.
     fully_inside: every corner inside AND no ring edge crosses the tile AND no ring
     vertex inside (sufficient for a simple polygon without holes).
     intersecting: tile ∩ polygon ≠ ∅ (corners inside OR vertex in tile OR edge cross).
+
+    Every value is computed once: a grid vertex shared by adjacent tiles is ray-cast
+    once, and the side-vs-edge test (:func:`_tiles_meet_ring`) shares its cross
+    products — each tile side against each ring vertex (d1/d2 of two neighbouring
+    edges) and each tile corner against each ring edge (d3/d4 of the two sides that
+    meet there).
     """
     w, s, e, n = cell_bounds(cand)
-    c_in = []
-    for px, py in ((w, s), (w, n), (e, s), (e, n)):
-        c_in.append(_points_in_ring(px, py, ring))
-    corners_in = np.stack(c_in, axis=0)
+    # adjacent tiles share corners: ray-cast each distinct grid vertex (x, y) once
+    _, x, y = unpack_cell(cand)
+    keys = np.concatenate(
+        [x << 30 | (y + 1), x << 30 | y, (x + 1) << 30 | (y + 1), (x + 1) << 30 | y]
+    )
+    _, first, inv = np.unique(keys, return_index=True, return_inverse=True)
+    px = np.concatenate([w, w, e, e])[first]
+    py = np.concatenate([s, n, s, n])[first]
+    corners_in = _points_in_ring(px, py, ring)[inv].reshape(4, -1)
     all_corners = corners_in.all(axis=0)
     any_corner = corners_in.any(axis=0)
 
@@ -190,20 +266,7 @@ def _classify_tiles(cand: np.ndarray, ring: np.ndarray) -> tuple[np.ndarray, np.
     edge_cross = np.zeros(cand.shape[0], dtype=bool)
     idx = np.nonzero(~vert_in | all_corners)[0]
     if idx.size:
-        r1 = ring[:-1]
-        r2 = ring[1:]
-        wi, si, ei, ni = w[idx], s[idx], e[idx], n[idx]
-        hit = np.zeros(idx.shape[0], dtype=bool)
-        for (ax, ay, bx, by) in (
-            (wi, si, ei, si),
-            (ei, si, ei, ni),
-            (ei, ni, wi, ni),
-            (wi, ni, wi, si),
-        ):
-            a1 = np.stack([ax, ay], axis=1)
-            a2 = np.stack([bx, by], axis=1)
-            hit |= _segments_intersect(a1, a2, r1, r2).any(axis=1)
-        edge_cross[idx] = hit
+        edge_cross[idx] = _tiles_meet_ring(w[idx], s[idx], e[idx], n[idx], ring)
 
     fully_inside = all_corners & ~vert_in & ~edge_cross
     # tile center inside catches the tile-engulfs-nothing corner case conservatively

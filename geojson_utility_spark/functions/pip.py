@@ -48,14 +48,31 @@ class RingKernel:
         self.y2 = ring[1:, 1].copy()
         dx = self.x2 - self.x1
         dy = self.y2 - self.y1
-        with np.errstate(divide="ignore", invalid="ignore"):
-            self.slope = np.where(dy != 0.0, dx / np.where(dy == 0.0, 1.0, dy), 0.0)
+        with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+            slope = np.where(dy != 0.0, dx / np.where(dy == 0.0, 1.0, dy), 0.0)
+        # dx / dy overflows when dy is subnormal: such edges take their crossing from
+        # (py - y1) / dy, which stays within [0, 1] on the rows the edge straddles
+        self.steep = ~np.isfinite(slope)
+        self.any_steep = bool(self.steep.any())
+        self.slope = np.where(self.steep, 0.0, slope)
         self.dx = dx
         self.dy = dy
         self.exmin = np.minimum(self.x1, self.x2)
         self.exmax = np.maximum(self.x1, self.x2)
         self.eymin = np.minimum(self.y1, self.y2)
         self.eymax = np.maximum(self.y1, self.y2)
+
+    def _xint(self, py, e=slice(None)):
+        """Crossing x of the horizontal line y = py with edges ``e``: the finite-slope
+        ``x1 + (py - y1) * slope`` (the flagship oracle mirrors it), or
+        ``x1 + ((py - y1) / dy) * dx`` on the edges whose slope overflowed."""
+        x1, y1 = self.x1[e], self.y1[e]
+        xint = x1 + (py - y1) * self.slope[e]
+        if self.any_steep:
+            with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+                alt = x1 + ((py - y1) / self.dy[e]) * self.dx[e]
+            xint = np.where(self.steep[e], alt, xint)
+        return xint
 
     def test_block(
         self, px: np.ndarray, py: np.ndarray
@@ -65,7 +82,7 @@ class RingKernel:
         pyc = py[:, None]
         # crossing count (half-open rule: y1 <= py != y2 <= py)
         straddle = (self.y1 <= pyc) != (self.y2 <= pyc)
-        xint = self.x1 + (pyc - self.y1) * self.slope
+        xint = self._xint(pyc)
         inside = ((straddle & (pxc < xint)).sum(axis=1) & 1).astype(bool)
         # exact on-edge: collinear and within the edge bbox
         cross = self.dx * (pyc - self.y1) - self.dy * (pxc - self.x1)
@@ -77,6 +94,30 @@ class RingKernel:
             & (pyc <= self.eymax)
         ).any(axis=1)
         return inside, on_edge
+
+    def covers_grid(self, px: np.ndarray, py: np.ndarray) -> np.ndarray:
+        """Covers mask (len(py), len(px)) of the pixel grid px x py, equal to
+        :meth:`test_block`'s ``inside | on_edge`` over the meshgrid.
+
+        Ray-cast one row at a time: a row's crossings depend only on its y, so each
+        row computes ``xint`` only for the edges that straddle it, with
+        :meth:`_xint`'s expression, and compares its pixels' x against only those;
+        the on-edge test runs only against the edges whose y-range holds the row.
+        """
+        nr, m = py.shape[0], px.shape[0]
+        yc = py[:, None]
+        ri, ei = np.nonzero((self.y1 <= yc) != (self.y2 <= yc))
+        left = px[None, :] < self._xint(py[ri], ei)[:, None]
+        pi, pj = np.nonzero(left)
+        crossings = np.bincount(ri[pi] * m + pj, minlength=nr * m)
+        covers = (crossings & 1).astype(bool).reshape(nr, m)
+        bi, be = np.nonzero((self.eymin <= yc) & (yc <= self.eymax))
+        e, pxr = be[:, None], px[None, :]
+        cross = self.dx[e] * (py[bi, None] - self.y1[e]) - self.dy[e] * (pxr - self.x1[e])
+        on_edge = (cross == 0.0) & (pxr >= self.exmin[e]) & (pxr <= self.exmax[e])
+        oi, oj = np.nonzero(on_edge)
+        covers[bi[oi], oj] = True
+        return covers
 
 
 def _ring_tests(px, py, ring) -> tuple[np.ndarray, np.ndarray]:

@@ -6,9 +6,10 @@ Two simple polygons intersect (share any point, boundary-inclusive) iff
   (c) any edge of A intersects any edge of B (incl. touching/collinear overlap).
 (a)/(b) catch full containment; (c) catches boundary crossings with no contained
 vertex.  Vertex tests reuse the ray-cast PIP kernel; the edge test is
-``cells._segments_intersect``, the orientation/on-segment predicate the tile cover
-uses, vectorized over the full E_a x E_b grid (ring sizes are tens of vertices, so
-the grid is tiny per pair).
+``cells._chains_meet``, the orientation/on-segment predicate the tile cover uses,
+vectorized over the full E_a x E_b grid (ring sizes are tens of vertices, so the grid
+is tiny per pair), with each edge-vs-vertex cross product computed once by
+``cells._orientations``.
 """
 
 from __future__ import annotations
@@ -34,4 +35,5 @@ def rings_intersect(a: np.ndarray, b: np.ndarray) -> bool:
     if P.points_in_ring(a[:, 0], a[:, 1], b, boundary="include").any():
         return True
     ra, rb = P._closed(a), P._closed(b)
-    return bool(C._segments_intersect(ra[:-1], ra[1:], rb[:-1], rb[1:]).any())
+    va, vb = C._orientations(ra, rb)
+    return bool(C._chains_meet(va, vb, ra, rb).any())

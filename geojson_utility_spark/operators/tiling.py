@@ -64,8 +64,12 @@ def rasterize_polygons(
     pixel-center containment (np.packbits row-major).
 
     Pixel grid: tile rect in (lon, lat), pixel centers at (i+0.5)/mask_size — matches
-    XYZ raster-tile convention of sampling at pixel centers.
+    XYZ raster-tile convention of sampling at pixel centers.  Each polygon builds one
+    ``RingKernel`` and takes its tiles' bounds in one vectorized ``cell_bounds``; each
+    tile is then ray-cast one pixel row at a time (``RingKernel.covers_grid``): a row
+    computes its crossings only with the ring edges that straddle its latitude.
     """
+    ii = (np.arange(mask_size) + 0.5) / mask_size
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -74,17 +78,13 @@ def rasterize_polygons(
                 if rj is None:
                     continue
                 ring = np.asarray(json.loads(rj), dtype=np.float64)
+                kern = P.RingKernel(ring)
                 cover = C.polygon_to_cells(ring, zoom)
-                for cell in cover.tolist():
-                    z, x, y = (int(v) for v in C.unpack_cell(np.int64(cell)))
-                    w, s, e, n = (float(v) for v in C.cell_bounds(np.int64(cell)))
-                    ii = (np.arange(mask_size) + 0.5) / mask_size
+                cols = (cover, *C.unpack_cell(cover), *C.cell_bounds(cover))
+                for cell, z, x, y, w, s, e, n in zip(*(c.tolist() for c in cols)):
                     lons = w + ii * (e - w)
                     lats = n + ii * (s - n)  # row 0 = north (raster convention)
-                    glon, glat = np.meshgrid(lons, lats)
-                    inside = P.points_in_polygon(
-                        glon.ravel(), glat.ravel(), [ring]
-                    ).reshape(mask_size, mask_size)
+                    inside = kern.covers_grid(lons, lats)
                     rows.append(
                         (
                             pid,

@@ -6,7 +6,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from geojson_utility_spark.functions import cells as C
-from geojson_utility_spark.functions import pip as P
+
+pytestmark = pytest.mark.filterwarnings("error::RuntimeWarning")
 
 
 def test_pack_unpack_roundtrip():

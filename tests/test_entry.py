@@ -1,8 +1,6 @@
 """Replicates the driver's correctness gate: every queries() entry runs, and every
 oracle_sql() entry matches the Spark result (row count + sorted-value comparison)."""
 
-import math
-
 import duckdb
 import pandas as pd
 import pytest

@@ -2,7 +2,6 @@
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from geojson_utility_spark import fixtures as FX
 from geojson_utility_spark.functions import imaging as I

@@ -9,6 +9,8 @@ import pytest
 from geojson_utility_spark.functions import nearest as N
 from geojson_utility_spark.functions.pip import haversine_km
 
+pytestmark = pytest.mark.filterwarnings("error::RuntimeWarning")
+
 
 def brute(plat, plon, tlat, tlon, k):
     """(target positions, km) of each point's k nearest: by km, then position."""

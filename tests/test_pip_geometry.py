@@ -1,11 +1,14 @@
 """PIP + polygon normalize/validate tests, incl. property tests vs a scalar oracle."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from geojson_utility_spark.functions import geometry as G
 from geojson_utility_spark.functions import pip as P
+
+pytestmark = pytest.mark.filterwarnings("error::RuntimeWarning")
 
 SQUARE = np.array([[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [0.0, 10.0], [0.0, 0.0]])
 CONCAVE = np.array(  # C-shape

@@ -6,7 +6,6 @@ prune to the referenced columns (an image-table query that doesn't touch ``bytes
 must not read it), and filters push into the scan.
 """
 
-import pytest
 from pyspark.sql import functions as F
 
 from geojson_utility_spark import fixtures as FX

@@ -7,12 +7,15 @@ numpy functions IS exercising what every executor runs inside the Arrow batches.
 """
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from geojson_utility_spark.functions import imaging as I
 from geojson_utility_spark.functions import media as M
 from geojson_utility_spark.functions import pip as P
+
+pytestmark = pytest.mark.filterwarnings("error::RuntimeWarning")
 
 
 @st.composite

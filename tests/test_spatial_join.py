@@ -1,7 +1,5 @@
 """Flagship spatial join vs brute-force numpy PIP oracle."""
 
-import json
-
 import numpy as np
 import pandas as pd
 import pytest
