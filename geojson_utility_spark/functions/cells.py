@@ -115,7 +115,9 @@ def _points_in_ring(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndar
     pxc = px[:, None]
     pyc = py[:, None]
     straddle = (y1 <= pyc) != (y2 <= pyc)
-    with np.errstate(divide="ignore", invalid="ignore"):
+    # only a pair whose edge does not straddle the point can overflow here (a
+    # subnormal dy under a far py), and the straddle mask drops those pairs
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
         xint = x1 + (pyc - y1) * (x2 - x1) / (y2 - y1)
     crossings = (straddle & (pxc < xint)).sum(axis=1)
     return (crossings % 2) == 1

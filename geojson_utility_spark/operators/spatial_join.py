@@ -22,12 +22,11 @@ Physical plan, designed for 10^12 points vs ~10^5 polygons:
    matches with NO refinement and never cross the Python boundary (which costs a JVM
    feeder thread + a Python worker per task — the scarcest resource of the join).
    Only the O(perimeter) boundary band is refined.
-5. **Refine** (two strategies, see ``spatial_join``; one kernel,
-   ``functions/pip.refine_mask``): 'broadcast' (default) — rings broadcast,
-   zero-shuffle ``mapInArrow`` ray cast over cache-blocked numpy kernels;
-   'cogroup' — salted shuffle that sends each ring only to the tasks refining it,
-   instead of every ring to every Python worker (SURVEY.md §4 skew treatment).
-   Either way ``prepare_polygons`` collects the valid rings to the driver.
+5. **Refine**: the valid rings (collected once by ``prepare_polygons``, at most
+   ``PREPARED_POLYGONS_MAX``) are broadcast to every Python worker, and a
+   zero-shuffle ``mapInArrow`` ray-casts each boundary candidate with
+   ``functions/pip.refine_mask`` — work follows partition size, so no polygon can
+   skew it.
 
 At 1000 executors: everything through refine is map-only — the join's only exchanges
 hash-partition the tiny polygon side.
@@ -53,6 +52,7 @@ from geojson_utility_spark.functions.spark_geo import cell_expr, cell_parent_exp
 DEFAULT_JOIN_ZOOM = 16  # finest boundary-cell zoom (~600 m tiles ≈ H3 res 9).
 # Interior cells stay coarse (adaptive cover), so a fine max zoom shrinks the
 # boundary band that needs Python ray-casting ~4x per level at O(perimeter) cover cost.
+PREPARED_POLYGONS_MAX = 1_000_000  # valid rings prepare_polygons may collect and broadcast
 
 POLYGON_NORM_SCHEMA = T.StructType(
     [
@@ -146,12 +146,7 @@ def polygon_cover(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out_pid, out_cell, out_zoom, out_int = [], [], [], []
-            holes_col = (
-                pdf["holes_json"]
-                if "holes_json" in pdf.columns
-                else pd.Series([None] * len(pdf))
-            )
-            for pid, rj, hj in zip(pdf["polygon_id"], pdf["ring_json"], holes_col):
+            for pid, rj, hj in zip(pdf["polygon_id"], pdf["ring_json"], pdf["holes_json"]):
                 if rj is None:
                     continue
                 ring = np.asarray(json.loads(rj), dtype=np.float64)
@@ -216,28 +211,6 @@ def polygon_cover(
     return valid.repartition(n_part, "polygon_id").mapInPandas(batches, COVER_SCHEMA)
 
 
-def _refine_cogroup(cand: pd.DataFrame, rings: pd.DataFrame) -> pd.DataFrame:
-    """Exact PIP for one (poly_idx, salt) cogroup — covers semantics
-    (boundary-inclusive).  ``cand`` holds the candidate points, ``rings`` the
-    polygon's replicated ring row."""
-    if cand.empty or rings.empty:
-        return pd.DataFrame({"point_id": [], "lat": [], "lon": [], "poly_idx": []})
-    ring_of = {
-        i: P.rings_from_json(r, h)
-        for i, r, h in zip(
-            rings["poly_idx"].tolist(), rings["ring_json"], rings["holes_json"]
-        )
-    }
-    keep = P.refine_mask(
-        cand["lon"].to_numpy(np.float64),
-        cand["lat"].to_numpy(np.float64),
-        cand["poly_idx"].to_numpy(),
-        ring_of,
-        {},
-    )
-    return cand.loc[keep, ["point_id", "lat", "lon", "poly_idx"]]
-
-
 class PreparedPolygons:
     """A reusable polygon-side index: normalized rings + multi-zoom cover +
     dense-id broadcast frames, built ONCE and shared across many spatial_join
@@ -250,46 +223,20 @@ class PreparedPolygons:
     Construct with :func:`prepare_polygons`; pass as ``spatial_join(...,
     prepared=...)`` (geometry parameters travel with the object)."""
 
-    def __init__(self, spark, zoom, compact, min_zoom, keep_holes,
-                 norm, cover, zooms, pid_rows, pid_map, cover_idx, norm_rows):
-        self.spark = spark
+    def __init__(self, zoom, zooms, norm, pid_map, cover_idx, rings):
         self.zoom = zoom
-        self.compact = compact
-        self.min_zoom = min_zoom
-        self.keep_holes = keep_holes
-        self.norm = norm
-        self.cover = cover
         self.zooms = zooms
-        self.pid_rows = pid_rows
-        self.idx_of = {pid: i for i, pid in enumerate(pid_rows)}
+        self.norm = norm
         self.pid_map = pid_map
         self.cover_idx = cover_idx
-        # the (polygon_id, ring_json, holes_json) rows prepare_polygons already
-        # collected for the pid list — reused by rings_broadcast so the
-        # broadcast build is driver-local, not another Spark job per call (r7)
-        self._norm_rows = norm_rows
-        self._bc_rings = None
-
-    def rings_broadcast(self):
-        """sc.broadcast of per-poly_idx ring lists ([outer] or [outer, *holes]),
-        built lazily (only the broadcast refine path needs it) and cached."""
-        if self._bc_rings is None:
-            rings_list = [None] * len(self.pid_rows)
-            for r in self._norm_rows:
-                rings_list[self.idx_of[r["polygon_id"]]] = P.rings_from_json(
-                    r["ring_json"], r["holes_json"]
-                )
-            self._bc_rings = self.spark.sparkContext.broadcast(rings_list)
-        return self._bc_rings
+        # sc.broadcast of per-poly_idx ring lists ([outer] or [outer, *holes])
+        self.rings = rings
 
     def unpersist(self):
-        """Release the cached frames and the ring broadcast."""
+        """Release the cached frames and destroy the ring broadcast."""
         self.norm.unpersist()
-        self.cover.unpersist()
         self.cover_idx.unpersist()
-        if self._bc_rings is not None:
-            self._bc_rings.unpersist()
-            self._bc_rings = None
+        self.rings.destroy()
 
 
 def prepare_polygons(
@@ -301,9 +248,11 @@ def prepare_polygons(
 ) -> PreparedPolygons:
     """Build the reusable polygon index for :func:`spatial_join` (see
     :class:`PreparedPolygons`).  Raises ``ValueError`` when two valid polygons
-    share a ``polygon_id`` (a match could not say which one it hit), and, before
-    any Spark job, when ``min_zoom`` is given without ``compact=True`` (only a
-    compact cover reads it) or above ``zoom`` (no probe zoom would remain)."""
+    share a ``polygon_id`` (a match could not say which one it hit) or when there
+    are more than ``PREPARED_POLYGONS_MAX`` valid polygons (their rings are
+    collected to the driver), and, before any Spark job, when ``min_zoom`` is
+    given without ``compact=True`` (only a compact cover reads it) or above
+    ``zoom`` (no probe zoom would remain)."""
     if min_zoom is not None and not (compact and min_zoom <= zoom):
         raise ValueError(
             f"min_zoom={min_zoom} needs compact=True and min_zoom <= zoom={zoom} "
@@ -312,23 +261,40 @@ def prepare_polygons(
     spark = polygons.sparkSession
     # polygon side is small: cache so normalize+cover run once, not once per zoom probe
     norm = normalize_polygons(polygons, keep_holes=keep_holes).cache()
-    # ONE collect serves both the dense-id list and (lazily) the ring
-    # broadcast — the r6 shape ran a pid-distinct job here plus a second
-    # norm collect inside rings_broadcast per spatial_join call (r7)
+    # ONE bounded collect serves both the dense-id list and the ring broadcast
     norm_rows = (
         norm.filter(F.col("poly_errors") == "")
         .select("polygon_id", "ring_json", "holes_json")
+        .limit(PREPARED_POLYGONS_MAX + 1)
         .collect()
     )
+    if len(norm_rows) > PREPARED_POLYGONS_MAX:
+        norm.unpersist()
+        raise ValueError(
+            f"prepare_polygons collects the valid rings to the driver: read "
+            f"{len(norm_rows):,} polygons before stopping, over the bound of "
+            f"{PREPARED_POLYGONS_MAX:,}"
+        )
     # dense integer polygon surrogate: candidate rows carry a 4-byte poly_idx instead
     # of the polygon_id string — string columns double the per-row cost of the Python
     # handoff; ids are re-attached JVM-side from a tiny broadcast map at the end.
-    pid_rows = sorted({r["polygon_id"] for r in norm_rows})
-    if len(pid_rows) != len(norm_rows):
+    norm_rows.sort(key=lambda r: r["polygon_id"])
+    pid_rows = [r["polygon_id"] for r in norm_rows]
+    if len(set(pid_rows)) != len(pid_rows):
         norm.unpersist()
-        dup = Counter(r["polygon_id"] for r in norm_rows).most_common(1)[0][0]
+        dup = Counter(pid_rows).most_common(1)[0][0]
         raise ValueError(f"duplicate polygon_id {dup!r}: polygon ids must be unique")
-    cover = polygon_cover(norm, zoom=zoom, compact=compact, min_zoom=min_zoom).cache()
+    # explicit schema: with no valid polygon there are no rows to infer from
+    pid_map = spark.createDataFrame(
+        list(enumerate(pid_rows)), "poly_idx long, polygon_id string"
+    )
+    cover = polygon_cover(norm, zoom=zoom, compact=compact, min_zoom=min_zoom)
+    cover_idx = cover.join(F.broadcast(pid_map), "polygon_id").select(
+        F.col("poly_idx").cast("int").alias("poly_idx"),
+        "cell",
+        "cell_zoom",
+        "interior",
+    ).cache()
     if not compact:
         zooms = [zoom]
     elif min_zoom is not None:
@@ -342,22 +308,12 @@ def prepare_polygons(
         # list); unbounded-coarseness covers can reach any zoom >= 0, so the
         # probe list must come from the data
         zooms = sorted(
-            r["cell_zoom"] for r in cover.select("cell_zoom").distinct().collect()
+            r["cell_zoom"] for r in cover_idx.select("cell_zoom").distinct().collect()
         )
-    # explicit schema: with no valid polygon there are no rows to infer from
-    pid_map = spark.createDataFrame(
-        list(enumerate(pid_rows)), "poly_idx long, polygon_id string"
+    rings = spark.sparkContext.broadcast(
+        [P.rings_from_json(r["ring_json"], r["holes_json"]) for r in norm_rows]
     )
-    cover_idx = cover.join(F.broadcast(pid_map), "polygon_id").select(
-        F.col("poly_idx").cast("int").alias("poly_idx"),
-        "cell",
-        "cell_zoom",
-        "interior",
-    ).cache()
-    return PreparedPolygons(
-        spark, zoom, compact, min_zoom, keep_holes,
-        norm, cover, zooms, pid_rows, pid_map, cover_idx, norm_rows,
-    )
+    return PreparedPolygons(zoom, zooms, norm, pid_map, cover_idx, rings)
 
 
 def _points(points: DataFrame, point_id: str) -> DataFrame:
@@ -371,14 +327,18 @@ def _points(points: DataFrame, point_id: str) -> DataFrame:
     )
 
 
+def _check_how(how: str) -> None:
+    """Reject an unsupported ``how`` before any Spark job runs."""
+    if how not in ("inner", "left_semi", "left_anti"):
+        raise ValueError(f"unsupported how={how!r}")
+
+
 def _apply_how(pts: DataFrame, matches: DataFrame, how: str) -> DataFrame:
     """'inner' -> the matches; 'left_semi' / 'left_anti' -> the points with /
     without any match."""
     if how == "inner":
         return matches
-    if how in ("left_semi", "left_anti"):
-        return pts.join(matches.select("point_id").distinct(), "point_id", how)
-    raise ValueError(f"unsupported how={how!r}")
+    return pts.join(matches.select("point_id").distinct(), "point_id", how)
 
 
 def spatial_join(
@@ -386,10 +346,8 @@ def spatial_join(
     polygons: DataFrame | None = None,
     zoom: int = DEFAULT_JOIN_ZOOM,
     compact: bool = False,
-    salt: int = 8,
     point_id: str = "point_id",
     how: str = "inner",
-    refine: str = "broadcast",
     min_zoom: int | None = None,
     keep_holes: bool = False,
     prepared: PreparedPolygons | None = None,
@@ -403,26 +361,12 @@ def spatial_join(
     every ring.
 
     how: 'inner' -> (point_id, lat, lon, polygon_id) matches;
-         'left_semi' -> served points; 'left_anti' -> serviceability-gap points.
-    refine (both run the same kernel, :func:`pip.refine_mask`):
-      'broadcast' (default) — rings broadcast to every Python worker; refine is a
-        map-only ``mapInArrow`` over the boundary candidate rows, grouped locally
-        per batch.  ZERO shuffles end to end; skew is impossible (work follows
-        partition size).  Right whenever the normalized ring set fits in executor
-        memory (up to ~10^6 typical catchment rings ≈ a few GB; far past the
-        reference's scale).
-      'cogroup' — candidates shuffled on (poly_idx, salt) and cogrouped with
-        replicated ring rows; the salted-repartition skew treatment (SURVEY.md §4).
-        It avoids the per-Python-worker ring broadcast: each task receives only
-        the rings it refines.  It does not lift the driver bound —
-        ``prepare_polygons`` collects every valid ring to the driver first.
-    salt: salt buckets per polygon; read by refine='cogroup' only.
+         'left_semi' -> served points; 'left_anti' -> serviceability-gap points;
+         anything else raises ``ValueError`` before any Spark job.
     min_zoom: with compact=True only, and at most ``zoom``: cover cells coarser
       than it expand to it (see :func:`polygon_cover`); otherwise ``ValueError``.
     """
-    if refine not in ("broadcast", "cogroup"):
-        raise ValueError(f"unsupported refine={refine!r}")
-    spark = points.sparkSession
+    _check_how(how)
     pts = _points(points, point_id)
     if prepared is None:
         if polygons is None:
@@ -435,7 +379,6 @@ def spatial_join(
         # geometry parameters travel with the index (a mismatched zoom would
         # silently probe the wrong cells)
         zoom = prepared.zoom
-    norm = prepared.norm
     zooms = prepared.zooms
     pid_map = prepared.pid_map
     cover_idx = prepared.cover_idx
@@ -485,63 +428,36 @@ def spatial_join(
     pid_type = dict(pts.dtypes)["point_id"]
     result_schema = f"point_id {pid_type}, lat double, lon double, poly_idx int"
 
-    if refine == "broadcast":
-        # map-only refine: all normalized rings broadcast once per executor; each
-        # Arrow batch is grouped locally by poly_idx and ray-cast per group.
-        # No shuffle, no sort, no skew — candidate rows never leave their partition.
-        # mapInArrow, NOT mapInPandas: at ~10^8 candidate rows the Arrow->pandas
-        # conversion materializes billions of Python string objects (id columns) and
-        # becomes the memory-bandwidth ceiling of the whole join; in Arrow the ids
-        # stay in columnar buffers and only lat/lon are viewed as numpy.
-        bc_rings = prepared.rings_broadcast()
+    # map-only refine: all normalized rings broadcast once per executor; each
+    # Arrow batch is grouped locally by poly_idx and ray-cast per group.
+    # No shuffle, no sort, no skew — candidate rows never leave their partition.
+    # mapInArrow, NOT mapInPandas: at ~10^8 candidate rows the Arrow->pandas
+    # conversion materializes billions of Python string objects (id columns) and
+    # becomes the memory-bandwidth ceiling of the whole join; in Arrow the ids
+    # stay in columnar buffers and only lat/lon are viewed as numpy.
+    bc_rings = prepared.rings  # a local: the closure must not capture the frames
 
-        def refine_arrow(it):
-            import pyarrow as pa
+    def refine_arrow(it):
+        import pyarrow as pa
 
-            rings = bc_rings.value
-            kernels: dict[int, object] = {}
-            for batch in it:
-                if batch.num_rows == 0:
-                    continue
-                # asarray(float64): decimal-typed lat/lon (e.g. SQL-derived) arrive
-                # as object arrays of Decimal — coerce before the numpy kernel
-                lon = np.asarray(
-                    batch.column("lon").to_numpy(zero_copy_only=False), dtype=np.float64
-                )
-                lat = np.asarray(
-                    batch.column("lat").to_numpy(zero_copy_only=False), dtype=np.float64
-                )
-                codes = batch.column("poly_idx").to_numpy(zero_copy_only=False)
-                keep = P.refine_mask(lon, lat, codes, rings, kernels)
-                yield batch.filter(pa.array(keep))
-
-        refined = candidates.mapInArrow(refine_arrow, result_schema)
-    else:
-        # shuffle path: candidates cogrouped with replicated rings on
-        # (poly_idx, salt) — the salted-repartition skew treatment, with no ring
-        # broadcast to the Python workers.  Each task receives its ring exactly once.
-        n_salt = max(1, salt)
-        salted = candidates.withColumn(
-            "_salt",
-            F.pmod(F.xxhash64(F.col("point_id").cast("string")), F.lit(n_salt)),
-        )
-        rings_salted = (
-            norm.filter(F.col("poly_errors") == "")
-            .join(F.broadcast(pid_map), "polygon_id")
-            .select(
-                F.col("poly_idx").cast("int").alias("poly_idx"),
-                "ring_json",
-                "holes_json",
+        rings = bc_rings.value
+        kernels: dict[int, object] = {}
+        for batch in it:
+            if batch.num_rows == 0:
+                continue
+            # asarray(float64): decimal-typed lat/lon (e.g. SQL-derived) arrive
+            # as object arrays of Decimal — coerce before the numpy kernel
+            lon = np.asarray(
+                batch.column("lon").to_numpy(zero_copy_only=False), dtype=np.float64
             )
-            .crossJoin(
-                spark.range(n_salt).select(F.col("id").cast("long").alias("_salt"))
+            lat = np.asarray(
+                batch.column("lat").to_numpy(zero_copy_only=False), dtype=np.float64
             )
-        )
-        refined = (
-            salted.groupBy("poly_idx", "_salt")
-            .cogroup(rings_salted.groupBy("poly_idx", "_salt"))
-            .applyInPandas(_refine_cogroup, result_schema)
-        )
+            codes = batch.column("poly_idx").to_numpy(zero_copy_only=False)
+            keep = P.refine_mask(lon, lat, codes, rings, kernels)
+            yield batch.filter(pa.array(keep))
+
+    refined = candidates.mapInArrow(refine_arrow, result_schema)
 
     # cover cells are disjoint, so interior and boundary matches cannot overlap;
     # polygon_id strings re-attach here, JVM-side, from the tiny broadcast map
@@ -618,36 +534,20 @@ def spatial_join_multi(
 
     Physical shape: parts exploded to independent rows (the polygon side stays the
     small side — parts multiply it by the part count, not the point count), joined
-    with the regular two-phase engine under synthetic part ids, then matches are
-    mapped back to feature ids through a broadcast of the tiny (part_id ->
-    polygon_id) table and deduped per (point, feature).  Composes with
-    ``keep_holes=True`` — every part carries its own interior rings.
-
-    Cache lifetime: each call caches the exploded parts frame plus the inner
-    prepare_polygons frames for the duration of the query; long-lived sessions
-    issuing many multipolygon joins against CHANGING polygon sets should
-    ``spark.catalog.clearCache()`` between batches (for a FIXED polygon set,
-    explode once and reuse a prepared index via :func:`spatial_join` instead)."""
-    parts = explode_multipolygon_parts(polygons).cache()
-    tagged = parts.select(
+    with the regular two-phase engine under part ids ``<polygon_id>#<part_idx>``,
+    then each match is mapped back to its feature id by stripping that suffix and
+    deduped per (point, feature).  Composes with ``keep_holes=True`` — every part
+    carries its own interior rings."""
+    _check_how(how)
+    parts = explode_multipolygon_parts(polygons).select(
         F.concat_ws("#", "polygon_id", F.col("part_idx").cast("string")).alias(
             "polygon_id"
         ),
         "geojson",
     )
-    part_map = parts.select(
-        F.concat_ws("#", "polygon_id", F.col("part_idx").cast("string")).alias(
-            "_part_id"
-        ),
-        F.col("polygon_id").alias("_feature_id"),
-    )
-    m = spatial_join(points, tagged, how="inner", **kwargs)
     matches = (
-        m.withColumnRenamed("polygon_id", "_part_id")
-        .join(F.broadcast(part_map), "_part_id")
-        .select(
-            "point_id", "lat", "lon", F.col("_feature_id").alias("polygon_id")
-        )
+        spatial_join(points, parts, how="inner", **kwargs)
+        .withColumn("polygon_id", F.regexp_replace("polygon_id", "#[0-9]+$", ""))
         .dropDuplicates(["point_id", "polygon_id"])
     )
     pts = _points(points, kwargs.get("point_id", "point_id"))
@@ -677,8 +577,6 @@ def polygon_intersect_join(
     join; intersection semantics match the box-overlap oracle (entry
     ``polygon_intersect_join``) and the brute-force kernel pytest.
     """
-    import json as _json
-
     # normalize_polygons carries polygon_id as string internally; the final select
     # casts a_id/b_id back to the INPUT id types so non-string ids round-trip
     a_id_type = dict(polys_a.dtypes).get("polygon_id", "string")
@@ -689,12 +587,10 @@ def polygon_intersect_join(
     nb = normalize_polygons(
         polys_b.withColumn("polygon_id", F.col("polygon_id").cast("string"))
     ).filter(F.col("poly_errors") == "")
-    ca = polygon_cover(na.select("polygon_id", "ring_json", "poly_errors"),
-                       zoom=zoom, compact=False).select(
+    ca = polygon_cover(na, zoom=zoom, compact=False).select(
         F.col("polygon_id").alias("a_id"), "cell"
     )
-    cb = polygon_cover(nb.select("polygon_id", "ring_json", "poly_errors"),
-                       zoom=zoom, compact=False).select(
+    cb = polygon_cover(nb, zoom=zoom, compact=False).select(
         F.col("polygon_id").alias("b_id"), "cell"
     )
     cand = ca.join(cb, "cell").select("a_id", "b_id").dropDuplicates(["a_id", "b_id"])
@@ -711,8 +607,8 @@ def polygon_intersect_join(
         for pdf in it:
             keep = []
             for ra, rb in zip(pdf["_ra"], pdf["_rb"]):
-                a = np.asarray(_json.loads(ra), dtype=np.float64)
-                b = np.asarray(_json.loads(rb), dtype=np.float64)
+                a = np.asarray(json.loads(ra), dtype=np.float64)
+                b = np.asarray(json.loads(rb), dtype=np.float64)
                 keep.append(rings_intersect(a, b))
             yield pdf.loc[keep, ["a_id", "b_id"]]
 

@@ -59,9 +59,9 @@ def test_validation_stays_in_codegen(spark):
 
 
 def test_flagship_single_shuffle(spark, tmp_path):
-    """The default (broadcast-refine) inner spatial join never shuffles the point
-    side: candidates come from broadcast hash joins, and every shuffle Exchange
-    is on the tiny polygon side."""
+    """The inner spatial join never shuffles the point side: candidates come from
+    broadcast hash joins, the refine is map-only, and every shuffle Exchange is on
+    the tiny polygon side."""
     pts_path = str(tmp_path / "pts2.parquet")
     spark.createDataFrame(
         FX.image_point([f"img_{i:012d}" for i in range(2000)])

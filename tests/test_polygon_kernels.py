@@ -201,10 +201,16 @@ def test_covers_grid_matches_meshgrid_on_tile_pixels():
 
 def test_subnormal_dy_edge_crossing():
     """dx / dy overflows on the edge (0, 0) -> (10, 1e-310); its crossing must
-    still land at x = 5 on the row y = 5e-311."""
+    still land at x = 5 on the row y = 5e-311.  The cover's ray cast computes
+    (py - y1) * dx / dy for every (point, edge) pair, so a point far above the
+    edge overflows there too, without a warning."""
     tri = np.array([[0.0, 0.0], [10.0, 1e-310], [5.0, 5.0]])
     px, py = np.array([20.0, 3.0]), np.array([5e-311, 5e-311])
     np.testing.assert_array_equal(P.points_in_ring(px, py, tri), [False, True])
     np.testing.assert_array_equal(
         P.RingKernel(tri).covers_grid(px[::-1], py[:1]), [[True, False]]
+    )
+    closed = np.vstack([tri, tri[:1]])
+    np.testing.assert_array_equal(
+        C._points_in_ring(px, np.array([1.0, 5e-311]), closed), [False, True]
     )

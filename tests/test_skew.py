@@ -1,9 +1,10 @@
-"""Skew-handling smoke test (SURVEY.md §5): salting must split hot-cell load.
+"""The image-point fixture is skewed: hot polygons get many times the median's
+candidates.
 
-The image-point fixture concentrates ~30% of points in the Delhi blob; hotspot
-polygons then see candidate groups orders of magnitude larger than median.  Salted
-refine groups must stay balanced: max group size with salt=8 should be ~1/8 of the
-unsalted hot group (the per-task input-balance criterion 'no task >4x median').
+About 30% of its points sit in the Delhi blob, so the polygons over it see
+candidate groups far larger than the median.  The join's refine is map-only, so
+its work follows partition size, not per-polygon load; the tests that feed it
+urban hot cells rely on this fixture property, and this module pins it.
 """
 
 import pytest
@@ -37,23 +38,3 @@ def candidates(spark):
 def test_candidate_skew_exists(candidates):
     sizes = candidates.groupBy("polygon_id").count().toPandas()["count"]
     assert sizes.max() > 4 * sizes.median(), "fixture should be skewed (hot polygons)"
-
-
-def test_salting_balances_groups(candidates):
-    salt = 8
-    salted_sizes = (
-        candidates.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col("point_id").cast("string")), F.lit(salt))
-        )
-        .groupBy("polygon_id", "_salt")
-        .count()
-        .toPandas()["count"]
-    )
-    unsalted_max = (
-        candidates.groupBy("polygon_id").count().agg({"count": "max"}).collect()[0][0]
-    )
-    # the hot group must actually split ~salt-ways
-    assert salted_sizes.max() < unsalted_max / (salt / 2)
-    # task-balance criterion: no salted group more than 4x the mean of the top half
-    top = salted_sizes.sort_values(ascending=False)
-    assert top.iloc[0] <= 4 * top.iloc[: max(len(top) // 2, 1)].mean()

@@ -39,22 +39,12 @@ def oracle_pairs(data):
     return want
 
 
-@pytest.mark.parametrize(
-    "compact,salt,refine",
-    [
-        (False, 1, "broadcast"),
-        (False, 8, "cogroup"),
-        (True, 8, "broadcast"),
-        (True, 8, "cogroup"),
-    ],
-)
-def test_spatial_join_matches_oracle(spark, data, oracle_pairs, compact, salt, refine):
+@pytest.mark.parametrize("compact", [False, True])
+def test_spatial_join_matches_oracle(spark, data, oracle_pairs, compact):
     pts, polys = data
     pts_df = spark.createDataFrame(pts).withColumnRenamed("image_id", "point_id")
     polys_df = spark.createDataFrame(polys[["polygon_id", "geojson"]])
-    got_df = SJ.spatial_join(
-        pts_df, polys_df, compact=compact, salt=salt, refine=refine
-    )
+    got_df = SJ.spatial_join(pts_df, polys_df, compact=compact)
     got = {(r["point_id"], r["polygon_id"]) for r in got_df.collect()}
     assert got == oracle_pairs
 
@@ -166,14 +156,39 @@ def test_prepare_polygons_rejects_duplicate_ids(spark):
     with pytest.raises(ValueError, match="duplicate polygon_id 'x'"):
         SJ.prepare_polygons(polys, zoom=12)
     with pytest.raises(ValueError, match="duplicate polygon_id 'x'"):
-        SJ.spatial_join(pts, polys, zoom=12, refine="cogroup")
+        SJ.spatial_join(pts, polys, zoom=12)
 
 
-def test_spatial_join_rejects_unknown_refine(spark):
-    pts = spark.createDataFrame([("p", 0.5, 0.5)], ["point_id", "lat", "lon"])
-    polys = spark.createDataFrame([("a", "{}")], ["polygon_id", "geojson"])
-    with pytest.raises(ValueError, match="refine='expr'"):
-        SJ.spatial_join(pts, polys, refine="expr")
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+# polygon sets no other test here uses: a plan-equal frame cached by another
+# test would be shared with, and released by, the index under test
+def test_prepare_polygons_bounds_its_collect(spark, monkeypatch):
+    """More valid polygons than PREPARED_POLYGONS_MAX raise ValueError naming the
+    count read and the bound, and leave nothing cached."""
+    polys = spark.createDataFrame(FX.make_polygons(12)[["polygon_id", "geojson"]])
+    before = _persistent_rdds(spark)
+    monkeypatch.setattr(SJ, "PREPARED_POLYGONS_MAX", 5)
+    with pytest.raises(ValueError, match="read 6 polygons .* bound of 5"):
+        SJ.prepare_polygons(polys, zoom=12)
+    assert _persistent_rdds(spark) == before
+
+
+def test_prepared_polygons_unpersist_releases_everything(spark, data):
+    """prepare -> join caches two frames (norm, cover_idx); unpersist() frees
+    both and destroys the ring broadcast."""
+    pts, _ = data
+    pts_df = spark.createDataFrame(pts).withColumnRenamed("image_id", "point_id")
+    polys = spark.createDataFrame(FX.make_polygons(14)[["polygon_id", "geojson"]])
+    before = _persistent_rdds(spark)
+    prep = SJ.prepare_polygons(polys, compact=True)
+    assert SJ.spatial_join(pts_df, prepared=prep).count() > 0
+    assert len(_persistent_rdds(spark) - before) == 2
+    prep.unpersist()
+    assert _persistent_rdds(spark) == before
+    assert not prep.rings._jbroadcast.isValid()
 
 
 @pytest.mark.parametrize("compact", [False, True])
@@ -192,22 +207,35 @@ def test_spatial_join_without_valid_polygons_matches_nothing(spark, compact, row
     assert sorted(r["point_id"] for r in anti.collect()) == ["p", "q"]
 
 
-@pytest.mark.parametrize("compact,min_zoom", [(True, 16), (False, 12)])
-def test_min_zoom_outside_compact_cover_is_rejected(spark, data, compact, min_zoom):
-    """min_zoom above zoom would leave no probe zoom (an empty join), and without
-    compact=True no cover reads it: both raise ValueError before any Spark job."""
+@pytest.mark.parametrize(
+    "kwargs,match",
+    [
+        pytest.param({"compact": True, "min_zoom": 16}, "min_zoom", id="True-16"),
+        pytest.param({"compact": False, "min_zoom": 12}, "min_zoom", id="False-12"),
+        pytest.param({"how": "outer"}, "how='outer'", id="how-outer"),
+    ],
+)
+def test_min_zoom_outside_compact_cover_is_rejected(spark, data, kwargs, match):
+    """min_zoom above zoom would leave no probe zoom (an empty join), without
+    compact=True no cover reads it, and spatial_join has no 'outer' join: each
+    raises ValueError before any Spark job runs or any frame is cached."""
     pts, polys = data
     pts_df = spark.createDataFrame(pts).withColumnRenamed("image_id", "point_id")
     polys_df = spark.createDataFrame(polys[["polygon_id", "geojson"]])
-    group = f"min_zoom_{compact}_{min_zoom}"
+    group = "rejected_" + "_".join(f"{k}_{v}" for k, v in kwargs.items())
     sc = spark.sparkContext
+    before = _persistent_rdds(spark)
     sc.setJobGroup(group, "must launch no job")
     try:
-        with pytest.raises(ValueError, match="min_zoom"):
-            SJ.spatial_join(pts_df, polys_df, zoom=14, compact=compact, min_zoom=min_zoom)
+        with pytest.raises(ValueError, match=match):
+            SJ.spatial_join(pts_df, polys_df, zoom=14, **kwargs)
+        if "how" in kwargs:
+            with pytest.raises(ValueError, match=match):
+                SJ.spatial_join_multi(pts_df, polys_df, zoom=14, **kwargs)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert not sc.statusTracker().getJobIdsForGroup(group)
+    assert _persistent_rdds(spark) == before
 
 
 def test_polygon_intersect_join_matches_bruteforce(spark):
@@ -322,13 +350,11 @@ def test_spatial_join_keep_holes_matches_bruteforce(spark):
         pts["lon"].to_numpy(), pts["lat"].to_numpy(), rings
     )
     want = set(pts.loc[want_mask, "point_id"])
-    for kwargs in ({}, {"refine": "cogroup"}):
-        got = {
-            r["point_id"]
-            for r in spatial_join(pts_df, polys, zoom=14, keep_holes=True,
-                                  **kwargs).collect()
-        }
-        assert got == want, f"{kwargs}: {len(got)} vs {len(want)}"
+    got = {
+        r["point_id"]
+        for r in spatial_join(pts_df, polys, zoom=14, keep_holes=True).collect()
+    }
+    assert got == want, f"{len(got)} vs {len(want)}"
     # planted semantics: strictly inside hole -> out; ON hole edge -> in (covers)
     assert 600 not in want        # (3,3) strictly inside hole1
     assert 601 in want            # (2,3) on hole1 edge
@@ -473,7 +499,7 @@ def test_prepared_min_zoom_static_range_matches_oracle(spark, data, oracle_pairs
     prep = SJ.prepare_polygons(polys_df, zoom=z, compact=True, min_zoom=z - 2)
     assert prep.zooms == list(range(z - 2, z + 1))
     cover_zooms = {
-        r["cell_zoom"] for r in prep.cover.select("cell_zoom").distinct().collect()
+        r["cell_zoom"] for r in prep.cover_idx.select("cell_zoom").distinct().collect()
     }
     assert cover_zooms <= set(prep.zooms)
     got = {(r["point_id"], r["polygon_id"])
