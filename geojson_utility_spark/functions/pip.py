@@ -64,9 +64,14 @@ class RingKernel:
     def _xint(self, py, e=slice(None)):
         """Crossing x of the horizontal line y = py with edges ``e``: the finite-slope
         ``x1 + (py - y1) * slope`` (the flagship oracle mirrors it), or
-        ``x1 + ((py - y1) / dy) * dx`` on the edges whose slope overflowed."""
+        ``x1 + ((py - y1) / dy) * dx`` on the edges whose slope overflowed.
+
+        A finite but huge slope (``dy`` near the smallest normal) overflows only where
+        the edge does not straddle ``py``; callers drop those pairs by the straddle
+        mask, so the overflow is ignored."""
         x1, y1 = self.x1[e], self.y1[e]
-        xint = x1 + (py - y1) * self.slope[e]
+        with np.errstate(over="ignore"):
+            xint = x1 + (py - y1) * self.slope[e]
         if self.any_steep:
             with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
                 alt = x1 + ((py - y1) / self.dy[e]) * self.dx[e]

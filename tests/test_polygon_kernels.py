@@ -214,3 +214,16 @@ def test_subnormal_dy_edge_crossing():
     np.testing.assert_array_equal(
         C._points_in_ring(px, np.array([1.0, 5e-311]), closed), [False, True]
     )
+
+
+def test_min_normal_dy_edge_crossing():
+    """On the edge (0, 0) -> (2, 2**-1022) dx / dy = 2**1023 is finite, so
+    ``(py - y1) * slope`` overflows for a point far above the edge; that pair does
+    not straddle and must be dropped without a warning."""
+    tri = np.array([[0.0, 0.0], [2.0, 2.0**-1022], [1.0, 5.0]])
+    px, py = np.array([3.0, 0.5, 1.0]), np.array([2.0**-1023, 2.0**-1023, 4.0])
+    np.testing.assert_array_equal(P.points_in_ring(px, py, tri), [False, True, True])
+    np.testing.assert_array_equal(
+        P.RingKernel(tri).covers_grid(np.array([0.5, 3.0]), np.array([2.0**-1023, 4.0])),
+        [[True, False], [False, False]],
+    )
