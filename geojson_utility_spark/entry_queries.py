@@ -38,31 +38,23 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 
 
 def _reclaim(spark: SparkSession) -> None:
-    """Unpersist every cached frame left by EARLIER entries.  The driver runs all
-    50 entries sequentially in ONE session; the persisting pipelines (shingle
-    frames, candidate caches) would otherwise accumulate across entries —
-    measured: a default-heap (1g) bare session OOMs around entry ~36, with or
-    without the round-5 shingle rework.  By the time entry N runs, the driver
-    has already collected entry N-1's result, so dropping those caches is pure
-    reclamation (nothing can trigger a recompute).  Called at the START of the
-    heavy pipelines only — cheap entries leave the session untouched.
+    """At the START of the heavy pipelines, release the engine state earlier
+    entries deferred (a caller's own caches survive): the driver runs all 50
+    entries in ONE session, where a default-heap (1g) bare session OOMed
+    around entry ~36 without it.  A released checkpoint cannot be recomputed:
+    safe ONLY under the driver's collect-then-construct contract, where entry
+    N-1's result is collected before entry N is built and nothing reruns it."""
+    from geojson_utility_spark.operators.dedup import sweep_stale_shingle_tables
+    from geojson_utility_spark.session import release_deferred
 
-    The clearCache() is session-global: safe ONLY under the sequential
-    collect-then-construct contract above."""
-    spark.catalog.clearCache()
-    from geojson_utility_spark.operators.dedup import (
-        cleanup_shingle_tables,
-        sweep_stale_shingle_tables,
-    )
-
-    cleanup_shingle_tables(spark)
+    release_deferred()
     sweep_stale_shingle_tables(spark)
     # Minimal-heap hardening (r6): in a bare default-heap session (~1g, the
-    # driver-stress envelope) the composite pipelines' localCheckpoint blocks
+    # driver-stress envelope) the composite pipelines' local checkpoint blocks
     # compete with the 32-thread execution pool for a ~300 MB storage budget.
-    # Setting a checkpoint dir switches every dedup _stage_checkpoint to a
+    # Setting a checkpoint dir switches every session.stage to a
     # RELIABLE disk checkpoint (heap-neutral, restart-survivable).  Driver runs
-    # with real heap keep the faster localCheckpoint path.
+    # with real heap keep the faster local checkpoint path.
     sc = spark.sparkContext
     if sc._jvm.java.lang.Runtime.getRuntime().maxMemory() < 1600 * 1024 * 1024:
         if not sc._jsc.sc().getCheckpointDir().isDefined():

@@ -23,13 +23,15 @@ from __future__ import annotations
 
 import math
 import os
-from functools import reduce
+from functools import partial, reduce
 from itertools import count
 from operator import and_
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from geojson_utility_spark.session import defer, release_staged, stage
 
 # Upper bound on the over-cap bucket list the driver will hold: beyond this the
 # machinery falls back to keeping the list distributed (broadcast of the agg).
@@ -92,7 +94,8 @@ def _capped_self_pairs(
     # then read the materialized partitions instead of re-evaluating the
     # banding/assignment subtree (measured at sf0.1: recompute 4.4 s vs
     # checkpoint 2.8 s for the full minhash near-dup pipeline)
-    banded = _stage_checkpoint(banded, eager=False)
+    banded = stage(banded, eager=False)
+    defer(partial(release_staged, banded))
 
     def pair_sel(joined: DataFrame) -> DataFrame:
         sel = [
@@ -150,12 +153,7 @@ def _capped_self_pairs(
     return cand_small.unionByName(cand_hot), n_hot
 
 
-#: Bucketed shingle tables created by :func:`_materialize_shingles` (name ->
-#: still-registered).  Sequential pipelines overwrite nothing: every call gets
-#: a fresh table name; call :func:`cleanup_shingle_tables` (the heavy entries'
-#: ``_reclaim`` does) to drop them once their pipeline has been consumed.
-_BUCKETED_SHINGLE_TABLES: list[str] = []
-_BUCKETED_SEQ = count()
+_BUCKETED_SEQ = count()  # every bucketed shingle table gets a fresh name
 
 
 def _materialize_shingles(sh: DataFrame, n_buckets: int, bucketed: bool = True):
@@ -179,10 +177,12 @@ def _materialize_shingles(sh: DataFrame, n_buckets: int, bucketed: bool = True):
     durable shared storage (the same contract as any Spark managed table).
 
     The bucket count equals the pre-write hash partitioning's count, so every
-    write task holds exactly one bucket — no per-task file explosion."""
+    write task holds exactly one bucket — no per-task file explosion.  Either
+    store is released by ``session.release_deferred``."""
     if not bucketed:
         # explicit level, not cache(): cache() picks MEMORY_AND_DISK_DESER
         p = sh.persist(StorageLevel.MEMORY_AND_DISK)
+        defer(p.unpersist)
         return lambda: p
     spark = sh.sparkSession
     # pid in the name: a killed session leaves its warehouse dir behind, and a
@@ -195,32 +195,19 @@ def _materialize_shingles(sh: DataFrame, n_buckets: int, bucketed: bool = True):
         .sortBy("doc_id", "shingle")
         .saveAsTable(tbl)
     )
-    _BUCKETED_SHINGLE_TABLES.append(tbl)
+    defer(lambda: spark.sql(f"DROP TABLE IF EXISTS {tbl}"))
     return lambda: spark.table(tbl)
-
-
-def cleanup_shingle_tables(spark) -> None:
-    """Drop every bucketed shingle table materialized so far (managed tables —
-    DROP deletes the warehouse files).  Safe only once their pipelines have
-    been fully consumed (the sequential driver contract; see ``_reclaim``)."""
-    while _BUCKETED_SHINGLE_TABLES:
-        tbl = _BUCKETED_SHINGLE_TABLES.pop()
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
 def sweep_stale_shingle_tables(spark) -> list[str]:
     """Remove warehouse directories of ``gjus_shingles_<pid>_*`` tables whose
-    owning process is DEAD (a killed session cannot run its own cleanup — a
+    owning process is DEAD (a killed session runs no deferred release — a
     single interrupted 4M-doc run strands ~3 GB; five of them filled 19 GB of
     this host before this janitor existed).  Returns the removed dir names.
 
-    Local-filesystem warehouses only (the dev / single-node case where the
-    leak actually accumulates unattended): pid liveness is only meaningful on
-    the machine that created the table, and cluster deployments point
-    ``spark.sql.warehouse.dir`` at shared storage where an age- or run-id-based
-    retention policy belongs to the orchestrator, not this process.  Called by
-    the heavy driver entries' ``_reclaim`` — a few os.listdir/kill(0) calls,
-    free next to the pipelines it guards."""
+    Local-filesystem warehouses only: pid liveness is only meaningful on the
+    machine that created the table, and a shared-storage warehouse's retention
+    policy belongs to the orchestrator, not this process."""
     import re
     import shutil
 
@@ -248,32 +235,6 @@ def sweep_stale_shingle_tables(spark) -> list[str]:
         except PermissionError:
             pass  # pid alive under another uid — leave it
     return removed
-
-
-def _stage_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """localCheckpoint, upgraded to a RELIABLE checkpoint when the session has
-    a checkpoint dir set (``sc.setCheckpointDir``).
-
-    localCheckpoint blocks live in executor storage memory (MEMORY_AND_DISK) —
-    fine at normal heap, but they compete with the 32-thread execution pool in
-    a minimal-heap driver (the 1g stress-harness OOM class, BENCH.md round-5
-    addendum 3), and they are lost on executor failure.  A reliable checkpoint
-    writes the partitions to the checkpoint filesystem instead: heap-neutral,
-    restart-survivable — the production choice for a 10^9-doc components loop
-    (the north rule's "resumable from checkpoint").  Low-heap sessions are
-    auto-detected by the heavy driver entries (see entry_queries._reclaim),
-    which set a /tmp checkpoint dir before building the composite pipelines."""
-    sc = df.sparkSession.sparkContext
-    if sc._jsc.sc().getCheckpointDir().isDefined():
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
-
-
-def _release_checkpoint(df: DataFrame) -> None:
-    """Free the blocks of a :func:`_stage_checkpoint` frame.  ``df.unpersist()``
-    does not: it drops cache-manager entries, and a checkpoint's blocks belong to
-    the RDD under its ``LogicalRDD`` plan node instead."""
-    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def _parallel_target(df: DataFrame) -> int:
@@ -515,12 +476,15 @@ def jaccard_pairs(
       reference joins sort-free with no exchange (requires the session's
       subset-co-partition conf — session.py).  Measured at 1M docs, ABAB
       probe-bracketed: minhash pipeline 76.9 -> 47.3 s, identical pair
-      outputs.  The write is EAGER and leaves a managed table behind; drop it
-      via :func:`cleanup_shingle_tables` when done.
+      outputs.  The write is EAGER.
+
+    ``session.release_deferred`` frees the shingle store and the pairs (a cache,
+    not a checkpoint: only a counted cache gives the small plan its statistics).
     """
     # the count materializes the cache AND gives the planner accurate pairs
     # statistics for the unhinted small plan
     pairs = pairs.cache()
+    defer(pairs.unpersist)
     bucketed = pairs.count() > _SMALL_CANDS_MAX
     needed = (
         pairs.select(F.col("doc_a").alias(id_col))
@@ -661,10 +625,11 @@ def minhash_near_dups(
     # whole signature pipeline instead of an eager-checkpoint job plus a count
     # job (r7; the uncapped mode keeps the eager checkpoint because its first
     # consumer is the banding SELF-join, which would race two materializations)
-    sigs = _stage_checkpoint(
+    sigs = stage(
         minhash_signatures(df, text_col, id_col, n_hashes, shingle_n),
         eager=bucket_cap is None,
     )
+    defer(partial(release_staged, sigs))
     # the count is near-free on the checkpointed frame and lets the banding skip
     # the whole cap machinery when n_docs <= bucket_cap (no bucket CAN be hot);
     # not needed at all in the uncapped mode
@@ -714,10 +679,9 @@ def dedup_components(
     quadratic pair list into a linear keep/drop decision.
 
     Physical shape: min-label propagation over symmetrized edges — per round ONE
-    shuffle (groupBy node over label messages), labels localCheckpoint'ed each
-    round (an (id, component) pair per node, the same ids-only diet as the kNN
-    escalation loop — never a wide table), early exit via a per-round count of
-    changed labels.  Rounds needed = graph diameter; near-dup clusters are
+    shuffle (groupBy node over label messages), labels checkpointed each
+    round (an (id, component) pair per node — never a wide table), early exit
+    via a per-round count of changed labels.  Rounds needed = graph diameter; near-dup clusters are
     clique-ish (diameter 1-3).  For adversarially long chain graphs at extreme
     scale, swap in alternating large-star/small-star (Kiveris et al., "Connected
     Components in MapReduce") — same join/agg primitives, O(log n) rounds;
@@ -733,14 +697,13 @@ def dedup_components(
         )
         .distinct()
     )
-    edges = _stage_checkpoint(edges, eager=False)
-    labels = _stage_checkpoint(
+    edges = stage(edges, eager=False)
+    labels = stage(
         edges.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("component")),
         eager=False,
     )
-    converged = False
     try:
         for _ in range(max_iter):
             msgs = edges.join(
@@ -751,7 +714,7 @@ def dedup_components(
                 .groupBy("node")
                 .agg(F.min("component").alias("component"))
             )
-            new_labels = _stage_checkpoint(new_labels)
+            new_labels = stage(new_labels)
             changed = (
                 new_labels.join(labels.withColumnRenamed("component", "_old"), "node")
                 .filter(F.col("component") != F.col("_old"))
@@ -760,25 +723,23 @@ def dedup_components(
             # the superseded round's checkpoint is dead once `changed` is
             # computed — release it or a high-diameter graph pins one
             # label-set copy per round
-            _release_checkpoint(labels)
+            release_staged(labels)
             labels = new_labels
             if changed == 0:
-                converged = True
+                # the result reads this checkpoint: it lives until the caller is done
+                defer(partial(release_staged, labels))
                 return labels.select(F.col("node").alias("doc_id"), "component")
+        raise RuntimeError(
+            f"dedup_components did not converge in {max_iter} rounds — graph "
+            "diameter exceeds the bound; use a larger max_iter or a star-contraction "
+            "variant for pathological chain graphs"
+        )
+    except BaseException:
+        # a long-lived session that catches the error must not keep it pinned
+        release_staged(labels)
+        raise
     finally:
-        if not converged:
-            # the non-convergence raise (and any mid-loop failure) must not
-            # leave the edges / last-round labels checkpoints pinned in a
-            # long-lived session that catches the error.  On success the
-            # returned frame reads the final labels checkpoint (truncated
-            # lineage), so only edges is safe to drop there.
-            _release_checkpoint(labels)
-        _release_checkpoint(edges)
-    raise RuntimeError(
-        f"dedup_components did not converge in {max_iter} rounds — graph "
-        "diameter exceeds the bound; use a larger max_iter or a star-contraction "
-        "variant for pathological chain graphs"
-    )
+        release_staged(edges)
 
 
 def simhash64(
@@ -1205,7 +1166,7 @@ def ngram_jaccard_pairs_exact(
     exists, so unlike :func:`jaccard_pairs` there is no pair count to choose a
     plan by.  Measured at 1M docs, ABAB probe-bracketed: 144-158 s persisted ->
     60-66 s bucketed, identical pairs.  EAGER (the write happens at call time);
-    drop the table via :func:`cleanup_shingle_tables` when done.
+    ``session.release_deferred`` drops the table.
     """
     # _spread_keyed: the pre-explode corpus shuffles ONCE by doc_id so that the
     # distinct below — whose keys (doc_id, shingle) are clustered by doc_id —

@@ -18,6 +18,7 @@ Output contract (pinned by golden tests):
 from __future__ import annotations
 
 import json
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -26,6 +27,7 @@ from pyspark.sql import types as T
 
 from geojson_utility_spark.functions import geometry as G
 from geojson_utility_spark.operators.validation import validate_locations
+from geojson_utility_spark.session import defer, release_staged, stage
 
 TOKEN_EXHAUSTED_ERROR = "Your token allocation has been exhausted"
 
@@ -70,7 +72,8 @@ def enrich_locations(
         # per-partition valid counts -> driver prefix sums -> partition-local window
         # rank + broadcast offset.  No single-partition global window; row_idx
         # (monotonically_increasing_id) orders rows within AND across partitions.
-        v = v.withColumn("_pid", F.spark_partition_id()).localCheckpoint(eager=False)
+        v = stage(v.withColumn("_pid", F.spark_partition_id()), eager=False)
+        defer(partial(release_staged, v))
         counts = {
             r["_pid"]: r["n"]
             for r in v.filter(is_valid)

@@ -29,6 +29,7 @@ from geojson_utility_spark.functions.nearest import (
     knn_index,
 )
 from geojson_utility_spark.functions.spark_geo import cell_expr, tile_xy_expr
+from geojson_utility_spark.session import defer
 
 DEFAULT_KNN_ZOOM = 11  # ~20 km tiles; targets-per-cell stays small
 BROADCAST_IDS_MAX = 5_000_000  # targets knn_join may collect: tens of MB broadcast
@@ -123,6 +124,7 @@ def knn_join(
     tlon = np.array([r[2] for r in trows], dtype=np.float64)
     index = knn_index(tlat, tlon, zoom, grid=len(trows) > _EXHAUSTIVE_MAX_TARGETS)
     bc = points.sparkSession.sparkContext.broadcast((ids, index))
+    defer(bc.unpersist)
 
     pts = points.select(
         F.col(point_id).alias("point_id"),

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from geojson_utility_spark.operators.dedup import _capped_self_pairs
+from geojson_utility_spark.session import defer
 
 
 def _list_to_matrix(col) -> np.ndarray:
@@ -162,6 +163,7 @@ def cosine_topk(
     if len(qids) == 0:
         return _empty_topk(vectors, queries, id_col, query_id_col)
     bc = spark.sparkContext.broadcast((qmat, qnorm))
+    defer(bc.unpersist)
 
     v = vectors.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v"))
     pid_type = dict(v.dtypes)["vec_id"]
@@ -256,6 +258,7 @@ def ivf_topk(
     # invert: list -> array of query indices probing it
     probing = {c: np.nonzero((probe == c).any(axis=1))[0] for c in range(len(cents))}
     bc = spark.sparkContext.broadcast((cents, qmat, qnorm, probing))
+    defer(bc.unpersist)
 
     pid_type = dict(v.dtypes)["vec_id"]
     out_schema = f"vec_id {pid_type}, _qidx int, cosine double"
@@ -328,6 +331,7 @@ def _signature_scan(
         [np.asarray(_hyperplanes(dim, n_bits, seed + t)) for t in range(n_tables)]
     )
     bc_planes = v.sparkSession.sparkContext.broadcast(planes)
+    defer(bc_planes.unpersist)
     vid_type = dict(v.dtypes)["vec_id"]
 
     def sig_kernel(it):
@@ -401,6 +405,7 @@ def lsh_topk(
     # candidate set (bounded by |queries| * n_tables * N/2^n_bits — small by design)
     # so the big vector table streams map-side and never shuffles
     bc_q = spark.sparkContext.broadcast((qmat, qnorm))
+    defer(bc_q.unpersist)
     cand_v = v.join(F.broadcast(cand), "vec_id", "inner")
 
     def rerank_kernel(it):
@@ -597,6 +602,7 @@ def ivf_near_dups(
     cents = _kmeans_fit(train, n_lists, n_iter, seed)
     n_probe = min(n_probe, len(cents))
     bc = spark.sparkContext.broadcast((cents, n_probe))
+    defer(bc.unpersist)
 
     def assign_kernel(it):
         import pyarrow as pa

@@ -48,6 +48,7 @@ from geojson_utility_spark.functions import cells as C
 from geojson_utility_spark.functions import geometry as G
 from geojson_utility_spark.functions import pip as P
 from geojson_utility_spark.functions.spark_geo import cell_expr, cell_parent_expr
+from geojson_utility_spark.session import defer, release_staged, stage
 
 DEFAULT_JOIN_ZOOM = 16  # finest boundary-cell zoom (~600 m tiles ≈ H3 res 9).
 # Interior cells stay coarse (adaptive cover), so a fine max zoom shrinks the
@@ -121,7 +122,7 @@ def normalize_polygons(polygons: DataFrame, keep_holes: bool = False) -> DataFra
     spark = polygons.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     return (
-        polygons.select("polygon_id", "geojson")
+        polygons.select(F.col("polygon_id").cast("string"), "geojson")
         .repartition(n_part, "polygon_id")
         .mapInPandas(batches, POLYGON_NORM_SCHEMA)
     )
@@ -233,9 +234,10 @@ class PreparedPolygons:
         self.rings = rings
 
     def unpersist(self):
-        """Release the cached frames and destroy the ring broadcast."""
-        self.norm.unpersist()
-        self.cover_idx.unpersist()
+        """Release the staged frames and destroy the ring broadcast.  Only the
+        index's own blocks go: a caller's cache of a plan-equal frame stays."""
+        release_staged(self.norm)
+        release_staged(self.cover_idx)
         self.rings.destroy()
 
 
@@ -259,8 +261,8 @@ def prepare_polygons(
             f"(got compact={compact!r})"
         )
     spark = polygons.sparkSession
-    # polygon side is small: cache so normalize+cover run once, not once per zoom probe
-    norm = normalize_polygons(polygons, keep_holes=keep_holes).cache()
+    # staged: normalize+cover run once; consumers join under broadcast hints
+    norm = stage(normalize_polygons(polygons, keep_holes=keep_holes), eager=False)
     # ONE bounded collect serves both the dense-id list and the ring broadcast
     norm_rows = (
         norm.filter(F.col("poly_errors") == "")
@@ -269,7 +271,7 @@ def prepare_polygons(
         .collect()
     )
     if len(norm_rows) > PREPARED_POLYGONS_MAX:
-        norm.unpersist()
+        release_staged(norm)
         raise ValueError(
             f"prepare_polygons collects the valid rings to the driver: read "
             f"{len(norm_rows):,} polygons before stopping, over the bound of "
@@ -281,7 +283,7 @@ def prepare_polygons(
     norm_rows.sort(key=lambda r: r["polygon_id"])
     pid_rows = [r["polygon_id"] for r in norm_rows]
     if len(set(pid_rows)) != len(pid_rows):
-        norm.unpersist()
+        release_staged(norm)
         dup = Counter(pid_rows).most_common(1)[0][0]
         raise ValueError(f"duplicate polygon_id {dup!r}: polygon ids must be unique")
     # explicit schema: with no valid polygon there are no rows to infer from
@@ -294,7 +296,8 @@ def prepare_polygons(
         "cell",
         "cell_zoom",
         "interior",
-    ).cache()
+    )
+    cover_idx = stage(cover_idx, eager=False)
     if not compact:
         zooms = [zoom]
     elif min_zoom is not None:
@@ -360,11 +363,12 @@ def spatial_join(
     hole's bbox are demoted to the refine path and the kernel ray-casts against
     every ring.
 
-    how: 'inner' -> (point_id, lat, lon, polygon_id) matches;
+    how: 'inner' -> (point_id, lat, lon, polygon_id as a string) matches;
          'left_semi' -> served points; 'left_anti' -> serviceability-gap points;
          anything else raises ``ValueError`` before any Spark job.
     min_zoom: with compact=True only, and at most ``zoom``: cover cells coarser
       than it expand to it (see :func:`polygon_cover`); otherwise ``ValueError``.
+    Without ``prepared``, ``session.release_deferred`` frees the index built here.
     """
     _check_how(how)
     pts = _points(points, point_id)
@@ -375,6 +379,7 @@ def spatial_join(
             polygons, zoom=zoom, compact=compact, min_zoom=min_zoom,
             keep_holes=keep_holes,
         )
+        defer(prepared.unpersist)
     else:
         # geometry parameters travel with the index (a mismatched zoom would
         # silently probe the wrong cells)
@@ -518,7 +523,7 @@ def explode_multipolygon_parts(polygons: DataFrame) -> DataFrame:
                 {"polygon_id": pids, "part_idx": idxs, "geojson": docs}
             )
 
-    return polygons.select("polygon_id", "geojson").mapInPandas(
+    return polygons.select(F.col("polygon_id").cast("string"), "geojson").mapInPandas(
         batches, "polygon_id string, part_idx int, geojson string"
     )
 
@@ -577,16 +582,11 @@ def polygon_intersect_join(
     join; intersection semantics match the box-overlap oracle (entry
     ``polygon_intersect_join``) and the brute-force kernel pytest.
     """
-    # normalize_polygons carries polygon_id as string internally; the final select
-    # casts a_id/b_id back to the INPUT id types so non-string ids round-trip
+    # the final select casts a_id/b_id back to the INPUT id types
     a_id_type = dict(polys_a.dtypes).get("polygon_id", "string")
     b_id_type = dict(polys_b.dtypes).get("polygon_id", "string")
-    na = normalize_polygons(
-        polys_a.withColumn("polygon_id", F.col("polygon_id").cast("string"))
-    ).filter(F.col("poly_errors") == "")
-    nb = normalize_polygons(
-        polys_b.withColumn("polygon_id", F.col("polygon_id").cast("string"))
-    ).filter(F.col("poly_errors") == "")
+    na = normalize_polygons(polys_a).filter(F.col("poly_errors") == "")
+    nb = normalize_polygons(polys_b).filter(F.col("poly_errors") == "")
     ca = polygon_cover(na, zoom=zoom, compact=False).select(
         F.col("polygon_id").alias("a_id"), "cell"
     )

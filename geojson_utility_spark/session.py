@@ -3,15 +3,15 @@
 UTC session timezone mirrors the reference's tz-naive->UTC coercion
 (reference: backend/routers/catchment.py:386-390); Arrow execution is mandatory because
 every geometry/imaging operator runs as an Arrow-batched pandas UDF.
+It also holds the engine's one release policy (:func:`defer`).
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -29,7 +29,7 @@ def get_spark(
     """
     cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]")
-    nshuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    nshuffle = shuffle_partitions or int(cores)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -83,3 +83,39 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+_DEFERRED: list[Callable[[], object]] = []
+
+
+def stage(df: DataFrame, eager: bool = True) -> DataFrame:
+    """localCheckpoint ``df``, or checkpoint it RELIABLY (to disk: heap-neutral,
+    restart-survivable) when the session has a checkpoint dir — the low-heap
+    mode ``entry_queries._reclaim`` sets.  Free it with :func:`release_staged`."""
+    sc = df.sparkSession.sparkContext
+    if sc._jsc.sc().getCheckpointDir().isDefined():
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)
+
+
+def release_staged(df: DataFrame) -> None:
+    """Free the blocks of a :func:`stage` frame.  ``df.unpersist()`` does not:
+    it drops cache-manager entries, and a checkpoint's blocks belong to the RDD
+    under its ``LogicalRDD`` plan node instead."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def defer(release: Callable[[], object]) -> None:
+    """Queue a zero-argument release for :func:`release_deferred`.  An owner
+    that knows when its state's lifetime ends releases it directly; an operator
+    whose lazy result needs its state after the call defers the release.
+    Nothing is freed by plan equality, so a caller's own caches survive."""
+    _DEFERRED.append(release)
+
+
+def release_deferred() -> None:
+    """Run every queued release, newest first, and empty the queue — only once
+    every frame built since the last call is consumed: a released checkpoint,
+    unlike a dropped cache, cannot be recomputed."""
+    while _DEFERRED:
+        _DEFERRED.pop()()

@@ -81,13 +81,12 @@ def pipeline():
     ).collect()[0]
     return r, n_pairs
 
-from geojson_utility_spark.operators.dedup import cleanup_shingle_tables
+from geojson_utility_spark.session import release_deferred
 n_reps = int(os.environ.get("DEDUP_SCALING_REPS", "3"))
 probe_before = round(cpu_probe_best(spark, cores), 3)
 best, stats = None, None
 for rep in range(n_reps):
-    spark.catalog.clearCache()
-    cleanup_shingle_tables(spark)
+    release_deferred()
     t0 = time.perf_counter()
     r, n_pairs = pipeline()
     dt = time.perf_counter() - t0

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from geojson_utility_spark.operators import dedup as D
 from geojson_utility_spark.operators import similarity as S
 from geojson_utility_spark.operators import textops as TX
+from geojson_utility_spark.session import release_deferred
 
 
 @pytest.fixture(scope="module")
@@ -18,6 +19,10 @@ def docs(spark, sf_dir):
 @pytest.fixture(scope="module")
 def docs_pd(docs):
     return docs.toPandas()
+
+
+def _shingle_tables(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.name.startswith("gjus_shingles_")}
 
 
 def _py_shingles(text, n=8):
@@ -473,13 +478,14 @@ def test_minhash_near_dups_auto_store_matches_explicit(spark, docs, monkeypatch)
     persisted plan at the default cutover, the bucketed one when the cutover
     (read at call time) is 0 — identical pair sets, and only the second
     registers a bucketed table."""
-    D.cleanup_shingle_tables(spark)
+    release_deferred()
     small = D.minhash_near_dups(docs, "text", "doc_id", threshold=0.5).toPandas()
-    assert not D._BUCKETED_SHINGLE_TABLES
+    assert not _shingle_tables(spark)
     monkeypatch.setattr(D, "_SMALL_CANDS_MAX", 0)
     large = D.minhash_near_dups(docs, "text", "doc_id", threshold=0.5).toPandas()
-    assert D._BUCKETED_SHINGLE_TABLES
-    D.cleanup_shingle_tables(spark)
+    assert _shingle_tables(spark)
+    release_deferred()
+    assert not _shingle_tables(spark)
     a = set(map(tuple, small[["doc_a", "doc_b"]].values))
     assert a == set(map(tuple, large[["doc_a", "doc_b"]].values))
     assert len(a) > 0
@@ -997,6 +1003,7 @@ def test_bucketed_shingle_store_results_and_plan(spark, monkeypatch):
     cached self-join attribute re-resolution (BENCH.md round-5 addendum)."""
     import itertools
 
+    release_deferred()
     spark.catalog.clearCache()
     rows = [
         (i, f"some repeated text body number {i % 9} padded out to shingles ok")
@@ -1019,8 +1026,9 @@ def test_bucketed_shingle_store_results_and_plan(spark, monkeypatch):
     # the materialized table exists, is bucketed on doc_id, and its scans are
     # exchange-free: the executed plan must contain bucketed FileScans and the
     # string "SelectedBucketsCount"
-    assert D._BUCKETED_SHINGLE_TABLES, "bucketed table not registered"
-    tbl = D._BUCKETED_SHINGLE_TABLES[-1]
+    made = _shingle_tables(spark)
+    assert len(made) == 1, "bucketed table not registered"
+    tbl = made.pop()
     ddl = spark.sql(f"SHOW CREATE TABLE {tbl}").collect()[0][0]
     assert "CLUSTERED BY (doc_id)" in ddl and "SORTED BY (doc_id" in ddl, ddl
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -1029,19 +1037,15 @@ def test_bucketed_shingle_store_results_and_plan(spark, monkeypatch):
     # the pairs the brute force finds
     spark.catalog.clearCache()
     monkeypatch.setattr(D, "_SMALL_CANDS_MAX", 0)
-    n_tables = len(D._BUCKETED_SHINGLE_TABLES)
     mh_got = {
         (r["doc_a"], r["doc_b"])
         for r in D.minhash_near_dups(df, "text", "doc_id", threshold=0.8).collect()
     }
-    assert len(D._BUCKETED_SHINGLE_TABLES) == n_tables + 1
+    assert len(_shingle_tables(spark)) == 2
     assert mh_got == {(a, b) for a, b, _ in want}
-    # cleanup drops every materialized table (managed -> files removed too)
-    made = list(D._BUCKETED_SHINGLE_TABLES)
-    D.cleanup_shingle_tables(spark)
-    assert not D._BUCKETED_SHINGLE_TABLES
-    existing = {t.name for t in spark.catalog.listTables()}
-    assert not (existing & {t.split(".")[-1] for t in made})
+    # the deferred release drops every materialized table (managed -> files too)
+    release_deferred()
+    assert not _shingle_tables(spark)
 
 
 def test_sweep_stale_shingle_tables(spark):

@@ -7,6 +7,7 @@ import pytest
 
 import __spark_entry__ as E
 from geojson_utility_spark.entry_queries import TABLES
+from geojson_utility_spark.session import release_deferred
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -37,9 +38,22 @@ ORACLES = E.oracle_sql()
 ALL_QUERIES = E.queries()
 
 
+def _engine_state(spark) -> tuple[set[int], set[str]]:
+    """Persistent RDD ids and the engine's ``gjus_*`` catalog tables."""
+    rdds = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    tables = {t.name for t in spark.catalog.listTables() if t.name.startswith("gjus_")}
+    return rdds, tables
+
+
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_match(spark, ddb, name):
+    """Each entry matches its oracle, and once its result is collected,
+    ``release_deferred`` leaves no persistent RDD and no shingle table behind."""
+    release_deferred()
+    before = _engine_state(spark)
     got = _canon(ALL_QUERIES[name](spark, SF_DIR).toPandas())
+    release_deferred()
+    assert _engine_state(spark) == before, f"{name}: engine state left behind"
     want = _canon(ddb.execute(ORACLES[name]).fetchdf())
     assert list(got.columns) == list(want.columns), (
         f"{name}: columns {list(got.columns)} vs {list(want.columns)}"
@@ -211,14 +225,21 @@ def test_media_oracle_phash_margins():
 
 
 def test_heavy_entries_reclaim_session_cache(spark, sf_dir):
-    """The heap hardening contract: heavy entries clearCache() on entry so the
-    driver's 50-entry sequence cannot accumulate persisted state (BENCH.md
-    round-5 addendum 3).  Pin one representative entry."""
+    """Heavy entries release the engine state earlier entries left, so the
+    driver's 50-entry sequence cannot accumulate it (BENCH.md round-5 addendum
+    3), and leave a caller's own cache alone.  Pin one representative entry."""
     from pyspark.sql import functions as F
 
-    leftover = spark.range(0, 10).select(F.col("id").alias("x")).cache()
-    leftover.count()
-    assert leftover.storageLevel.useMemory  # registered before the entry runs
+    release_deferred()
+    before = _engine_state(spark)[0]
+    ALL_QUERIES["minhash_near_dups"](spark, sf_dir).collect()
+    left = _engine_state(spark)[0] - before
+    assert left  # the entry's staged signatures, bands and pairs
+    mine = spark.range(0, 10).select(F.col("id").alias("x")).cache()
+    mine.count()
     ALL_QUERIES["minhash_near_dups"](spark, sf_dir)
-    # building the entry's frame (no action needed) must have dropped the cache
-    assert not leftover.storageLevel.useMemory and not leftover.storageLevel.useDisk
+    # building the next entry's frame (no action needed) released the state
+    # the first run left, and only that
+    assert not left & _engine_state(spark)[0]
+    assert mine.storageLevel.useMemory
+    mine.unpersist()

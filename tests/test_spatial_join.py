@@ -1,5 +1,7 @@
 """Flagship spatial join vs brute-force numpy PIP oracle."""
 
+import json
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -9,6 +11,7 @@ from geojson_utility_spark import fixtures as FX
 from geojson_utility_spark.functions import geometry as G
 from geojson_utility_spark.functions import pip as P
 from geojson_utility_spark.operators import spatial_join as SJ
+from geojson_utility_spark.session import release_deferred
 
 
 @pytest.fixture(scope="module")
@@ -163,8 +166,6 @@ def _persistent_rdds(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
-# polygon sets no other test here uses: a plan-equal frame cached by another
-# test would be shared with, and released by, the index under test
 def test_prepare_polygons_bounds_its_collect(spark, monkeypatch):
     """More valid polygons than PREPARED_POLYGONS_MAX raise ValueError naming the
     count read and the bound, and leave nothing cached."""
@@ -189,6 +190,49 @@ def test_prepared_polygons_unpersist_releases_everything(spark, data):
     prep.unpersist()
     assert _persistent_rdds(spark) == before
     assert not prep.rings._jbroadcast.isValid()
+
+
+def test_prepared_polygons_unpersist_keeps_a_callers_cache(spark, data):
+    """The index releases only its own blocks: a caller's cache of the same
+    normalized polygons survives prepare -> join -> unpersist()."""
+    pts, polys = data
+    pts_df = spark.createDataFrame(pts).withColumnRenamed("image_id", "point_id")
+    polys_df = spark.createDataFrame(polys[["polygon_id", "geojson"]])
+    mine = SJ.normalize_polygons(polys_df).cache()
+    mine.count()
+    prep = SJ.prepare_polygons(polys_df, zoom=14)
+    assert SJ.spatial_join(pts_df, prepared=prep).count() > 0
+    prep.unpersist()
+    assert mine.storageLevel.useMemory
+    assert mine.count() == len(polys)
+    mine.unpersist()
+
+
+def test_unprepared_joins_release_their_index(spark, data):
+    """An unprepared spatial_join defers its index's release: once the results
+    are consumed, release_deferred brings persistent RDDs back to baseline."""
+    pts, polys = data
+    pts_df = spark.createDataFrame(pts).withColumnRenamed("image_id", "point_id")
+    polys_df = spark.createDataFrame(polys[["polygon_id", "geojson"]])
+    release_deferred()
+    before = _persistent_rdds(spark)
+    for _ in range(2):
+        assert SJ.spatial_join(pts_df, polys_df, zoom=14).count() > 0
+    assert _persistent_rdds(spark) != before
+    release_deferred()
+    assert _persistent_rdds(spark) == before
+
+
+def test_spatial_join_bigint_polygon_ids(spark):
+    """A non-string polygon_id is joined as its string: both spatial_join and
+    spatial_join_multi return it as one."""
+    ring = [[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 1.0], [0.0, 0.0]]
+    doc = json.dumps(G.wrap_polygon_feature_collection(ring))
+    polys = spark.createDataFrame([(7, doc)], "polygon_id bigint, geojson string")
+    pts = spark.createDataFrame([("in", 0.5, 0.5), ("out", 5.0, 5.0)], ["point_id", "lat", "lon"])
+    for join in (SJ.spatial_join, SJ.spatial_join_multi):
+        got = join(pts, polys, zoom=12).select("point_id", "polygon_id").collect()
+        assert [tuple(r) for r in got] == [("in", "7")], join.__name__
 
 
 @pytest.mark.parametrize("compact", [False, True])
