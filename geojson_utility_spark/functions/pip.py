@@ -1,9 +1,9 @@
 """Exact point-in-polygon — vectorized numpy ray casting, cache-blocked.
 
 This is the refinement half of the two-phase spatial join (SURVEY.md §2.3 "Exact PIP
-refinement"): after the broadcast candidate join on cell ids, each (point, polygon)
-candidate pair is resolved exactly here by :func:`refine_mask`, once per Arrow batch of
-the join's ``mapInArrow`` refine — no per-row Python (BASELINE.json input_hint).
+refinement"): after the cell-cover lookup (functions/contain.py), each (point, polygon)
+pair from a boundary cell is resolved exactly here by :func:`refine_mask`, once per
+block of the join's ``mapInArrow`` pass — no per-row Python (BASELINE.json input_hint).
 
 Boundary semantics: ``covers`` (boundary-inclusive), chosen and documented per SURVEY.md
 §7 hard part (b) — a point exactly on a ring edge or vertex counts as inside.  The

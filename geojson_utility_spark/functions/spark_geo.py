@@ -2,9 +2,9 @@
 
 The point->cell mapping (Web-Mercator tile arithmetic, see functions/cells.py for the
 layout) is expressible entirely with Spark built-ins — ``radians/tan/cos/ln/floor`` and
-bitwise ops — so the *hot* side of the spatial join (trillions of image points) never
-leaves whole-stage codegen: no UDF, no Arrow transfer, full predicate pushdown upstream.
-Only the polygon side (thousands of rows) uses pandas UDFs.
+bitwise ops — so the tiling, the distance range join and the cell heat stats assign
+cells inside whole-stage codegen: no UDF, no Arrow transfer, full predicate pushdown
+upstream.
 
 ``cell_expr`` here and ``cells.latlng_to_cell`` in numpy implement the same function;
 ``tests/test_spark_geo.py`` pins their equality on random points.
@@ -45,21 +45,6 @@ def cell_expr(lat: Column, lon: Column, zoom: int) -> Column:
         F.lit(zoom).cast("long") * F.lit(1 << _Z_SHIFT).cast("long")
         + x * F.lit(1 << _X_SHIFT).cast("long")
         + y
-    )
-
-
-def cell_parent_expr(cell: Column, parent_zoom: int, child_zoom: int) -> Column:
-    """Ancestor cell at ``parent_zoom`` of a cell known to be at ``child_zoom`` —
-    two bit-shifts, no trig (used to join points against a compacted multi-zoom cover)."""
-    dz = child_zoom - parent_zoom
-    if dz < 0:
-        raise ValueError("parent_zoom must be <= child_zoom")
-    x = F.shiftrightunsigned(cell, _X_SHIFT).bitwiseAND(F.lit((1 << 29) - 1))
-    y = cell.bitwiseAND(F.lit((1 << 29) - 1))
-    return (
-        F.lit(parent_zoom).cast("long") * F.lit(1 << _Z_SHIFT).cast("long")
-        + F.shiftrightunsigned(x, dz) * F.lit(1 << _X_SHIFT).cast("long")
-        + F.shiftrightunsigned(y, dz)
     )
 
 

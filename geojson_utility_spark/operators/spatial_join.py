@@ -1,35 +1,28 @@
-"""The flagship two-phase spatial join: broadcast cell-candidate join + exact PIP refine.
+"""The flagship spatial join: a cell-cover lookup + exact PIP refine in one Arrow pass.
 
 Semantics: ``points JOIN polygons ON ST_Covers(polygon, point)`` — the Spark-native
 re-expression of the reference's per-row enrichment join (SURVEY.md §2.3; the reference
 fetches one polygon per point over HTTPS; we invert it into a set-oriented join).
 
-Physical plan, designed for 10^12 points vs ~10^5 polygons:
+Physical plan, for many points against at most ``PREPARED_POLYGONS_MAX`` polygons:
 
-1. **Polygon side (small)**: parse + validate + normalize each GeoJSON document in
-   ``mapInPandas`` batches; cover each polygon via ADAPTIVE QUADTREE DESCENT —
-   O(perimeter) tiles per level, every cell classified interior vs boundary
-   (conservative covering — superset, no false negatives).
-2. **Point side (huge)**: cell assignment is a pure Catalyst expression
-   (functions/spark_geo.py) — stays inside whole-stage codegen, columns pruned to
-   (id, lat, lon), predicate pushdown unaffected.  One probe expression: ancestors
-   at every cover zoom come from bit-shift expressions + one explode (a single
-   probe at one zoom for an uncompacted cover).
-3. **Candidate joins**: two broadcast hash joins of the probe against DISJOINT
-   halves of the cover — interior cells and boundary cells — so ZERO shuffle of
-   the trillion-row side and one cover's worth of broadcast in total.
-4. **Interior short-circuit**: points landing in fully-interior cover cells are
-   matches with NO refinement and never cross the Python boundary (which costs a JVM
-   feeder thread + a Python worker per task — the scarcest resource of the join).
-   Only the O(perimeter) boundary band is refined.
-5. **Refine**: the valid rings (collected once by ``prepare_polygons``, at most
-   ``PREPARED_POLYGONS_MAX``) are broadcast to every Python worker, and a
-   zero-shuffle ``mapInArrow`` ray-casts each boundary candidate with
-   ``functions/pip.refine_mask`` — work follows partition size, so no polygon can
-   skew it.
+1. **Polygon side (small), once per index**: parse + validate + normalize each
+   GeoJSON document in ``mapInPandas`` batches; cover each polygon via ADAPTIVE
+   QUADTREE DESCENT — O(perimeter) tiles per level, every cell classified interior
+   vs boundary (conservative covering — superset, no false negatives).
+   :func:`prepare_polygons` collects the valid rings and the cover (each bounded),
+   sorts the cover by cell and broadcasts it with the rings and the ids ONCE.
+2. **Point side (huge), per call**: ONE zero-shuffle ``mapInArrow`` pass
+   (functions/contain.py).  Per block of points: the cell at the finest zoom, its
+   ancestors at every probe zoom by bit shift, a ``searchsorted`` range per cell;
+   interior-cell hits are matches, boundary-cell hits are ray-cast by
+   ``pip.refine_mask``, and the kernel emits ``polygon_id`` itself.
 
-At 1000 executors: everything through refine is map-only — the join's only exchanges
-hash-partition the tiny polygon side.
+The measured trade (BENCH.md): every point crosses into Python once, and no
+broadcast is built per call.  The former plan kept the point side in the JVM but
+exploded ~6 probe rows per point into two broadcast hash joins rebuilt per call;
+one Arrow pass runs one job per call instead of four and takes 0.6x the time
+per ``bulk_join`` op.  Work follows partition size, so no polygon can skew it.
 """
 
 from __future__ import annotations
@@ -40,6 +33,8 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -47,13 +42,15 @@ from pyspark.sql import types as T
 from geojson_utility_spark.functions import cells as C
 from geojson_utility_spark.functions import geometry as G
 from geojson_utility_spark.functions import pip as P
-from geojson_utility_spark.functions.spark_geo import cell_expr, cell_parent_expr
+from geojson_utility_spark.functions.contain import contain_blocks, cover_index
+from geojson_utility_spark.functions.spark_geo import cell_expr
 from geojson_utility_spark.session import defer, release_staged, stage
 
 DEFAULT_JOIN_ZOOM = 16  # finest boundary-cell zoom (~600 m tiles ≈ H3 res 9).
 # Interior cells stay coarse (adaptive cover), so a fine max zoom shrinks the
 # boundary band that needs Python ray-casting ~4x per level at O(perimeter) cover cost.
 PREPARED_POLYGONS_MAX = 1_000_000  # valid rings prepare_polygons may collect and broadcast
+COVER_CELLS_MAX = 10_000_000  # cover cells it may collect and broadcast: ~130 MB of numpy
 
 POLYGON_NORM_SCHEMA = T.StructType(
     [
@@ -128,6 +125,43 @@ def normalize_polygons(polygons: DataFrame, keep_holes: bool = False) -> DataFra
     )
 
 
+def polygon_cells(
+    rings: list[np.ndarray], zoom: int, compact: bool, min_zoom: int | None
+) -> tuple[np.ndarray, np.ndarray]:
+    """(cells, interior) cover of one polygon ``[outer, *holes]``, as
+    :func:`polygon_cover` describes it."""
+    # adaptive quadtree descent: O(perimeter) work per level, emits an
+    # already-compacted multi-zoom cover (oversized polygons stay cheap)
+    # with per-cell interior/boundary classification
+    cover, interior = C.polygon_to_cells_adaptive(rings[0], zoom, return_interior=True)
+    expand_to = zoom if not compact else min_zoom
+    if expand_to is not None:
+        coarse = C.unpack_cell(cover)[0] < expand_to
+        if coarse.any():
+            parts = [
+                (C.cell_to_children(int(c), expand_to), bool(i))
+                for c, i in zip(cover[coarse].tolist(), interior[coarse].tolist())
+            ]
+            cover = np.concatenate([cover[~coarse]] + [p[0] for p in parts])
+            interior = np.concatenate(
+                [interior[~coarse]] + [np.full(len(p[0]), p[1], dtype=bool) for p in parts]
+            )
+    # hole-aware demotion: an "interior" classification only consults the OUTER
+    # ring — any cell whose bbox touches a hole's bbox must fall back to the
+    # boundary (refine) path, where the even-odd PIP handles the hole exactly.
+    # Conservative (bbox-vs-bbox) and cheap; cells fully inside a hole simply
+    # refine to zero matches.
+    if len(rings) > 1 and interior.any():
+        w_, s_, e_, n_ = C.cell_bounds(cover)
+        demote = np.zeros(len(cover), dtype=bool)
+        for h in rings[1:]:
+            hw, hs = h[:, 0].min(), h[:, 1].min()
+            he, hn = h[:, 0].max(), h[:, 1].max()
+            demote |= (w_ <= he) & (e_ >= hw) & (s_ <= hn) & (n_ >= hs)
+        interior = interior & ~demote
+    return cover, interior
+
+
 def polygon_cover(
     polygons: DataFrame,
     zoom: int = DEFAULT_JOIN_ZOOM,
@@ -150,46 +184,9 @@ def polygon_cover(
             for pid, rj, hj in zip(pdf["polygon_id"], pdf["ring_json"], pdf["holes_json"]):
                 if rj is None:
                     continue
-                ring = np.asarray(json.loads(rj), dtype=np.float64)
-                # adaptive quadtree descent: O(perimeter) work per level, emits an
-                # already-compacted multi-zoom cover (oversized polygons stay cheap)
-                # with per-cell interior/boundary classification
-                cover, interior = C.polygon_to_cells_adaptive(
-                    ring, zoom, return_interior=True
+                cover, interior = polygon_cells(
+                    P.rings_from_json(rj, hj), zoom, compact, min_zoom
                 )
-                expand_to = zoom if not compact else min_zoom
-                if expand_to is not None:
-                    zs0 = C.unpack_cell(cover)[0]
-                    coarse = zs0 < expand_to
-                    if coarse.any():
-                        parts = [
-                            (C.cell_to_children(int(c), expand_to), bool(i))
-                            for c, i in zip(
-                                cover[coarse].tolist(), interior[coarse].tolist()
-                            )
-                        ]
-                        cover = np.concatenate(
-                            [cover[~coarse]] + [p[0] for p in parts]
-                        )
-                        interior = np.concatenate(
-                            [interior[~coarse]]
-                            + [np.full(len(p[0]), p[1], dtype=bool) for p in parts]
-                        )
-                # hole-aware demotion: an "interior" classification only consults
-                # the OUTER ring — any cell whose bbox touches a hole's bbox must
-                # fall back to the boundary (refine) path, where the even-odd PIP
-                # handles the hole exactly.  Conservative (bbox-vs-bbox) and cheap;
-                # cells fully inside a hole simply refine to zero matches.
-                holes = json.loads(hj) if hj else []
-                if holes and interior.any():
-                    w_, s_, e_, n_ = C.cell_bounds(cover)
-                    demote = np.zeros(len(cover), dtype=bool)
-                    for hole in holes:
-                        h = np.asarray(hole, dtype=np.float64)
-                        hw, hs = h[:, 0].min(), h[:, 1].min()
-                        he, hn = h[:, 0].max(), h[:, 1].max()
-                        demote |= (w_ <= he) & (e_ >= hw) & (s_ <= hn) & (n_ >= hs)
-                    interior = interior & ~demote
                 zs = C.unpack_cell(cover)[0]
                 out_pid.extend([pid] * len(cover))
                 out_cell.extend(cover.tolist())
@@ -213,28 +210,27 @@ def polygon_cover(
 
 
 class PreparedPolygons:
-    """A reusable polygon-side index: normalized rings + multi-zoom cover +
-    dense-id broadcast frames, built ONCE and shared across many spatial_join
-    calls.
+    """A reusable polygon-side index: normalized rings + multi-zoom cover, built
+    ONCE and shared across many spatial_join calls.
 
     The production pattern is a FIXED polygon set (serviceability areas) joined
     against many point batches/streams; rebuilding the index per call costs
-    O(polygons) normalize + adaptive-cover + broadcast work (~6 s for 120
-    polygons at z19 on the sandbox) that this object amortizes to zero.
-    Construct with :func:`prepare_polygons`; pass as ``spatial_join(...,
-    prepared=...)`` (geometry parameters travel with the object)."""
+    O(polygons) normalize + adaptive-cover + broadcast work that this object
+    amortizes to zero.  Construct with :func:`prepare_polygons`; pass as
+    ``spatial_join(..., prepared=...)`` (geometry parameters travel with the
+    object)."""
 
-    def __init__(self, zoom, zooms, norm, pid_map, cover_idx, rings):
+    def __init__(self, zoom, zooms, norm, cover_idx, rings):
         self.zoom = zoom
         self.zooms = zooms
         self.norm = norm
-        self.pid_map = pid_map
         self.cover_idx = cover_idx
-        # sc.broadcast of per-poly_idx ring lists ([outer] or [outer, *holes])
+        # sc.broadcast of (per-poly_idx ring lists ([outer] or [outer, *holes]),
+        # contain.cover_index arrays, polygon ids as a pa.array by poly_idx)
         self.rings = rings
 
     def unpersist(self):
-        """Release the staged frames and destroy the ring broadcast.  Only the
+        """Release the staged frames and destroy the index broadcast.  Only the
         index's own blocks go: a caller's cache of a plan-equal frame stays."""
         release_staged(self.norm)
         release_staged(self.cover_idx)
@@ -250,20 +246,20 @@ def prepare_polygons(
 ) -> PreparedPolygons:
     """Build the reusable polygon index for :func:`spatial_join` (see
     :class:`PreparedPolygons`).  Raises ``ValueError`` when two valid polygons
-    share a ``polygon_id`` (a match could not say which one it hit) or when there
-    are more than ``PREPARED_POLYGONS_MAX`` valid polygons (their rings are
-    collected to the driver), and, before any Spark job, when ``min_zoom`` is
-    given without ``compact=True`` (only a compact cover reads it) or above
-    ``zoom`` (no probe zoom would remain)."""
+    share a ``polygon_id`` (a match could not say which one it hit), when there
+    are more than ``PREPARED_POLYGONS_MAX`` valid polygons or more than
+    ``COVER_CELLS_MAX`` cover cells (both are collected to the driver), and,
+    before any Spark job, when ``min_zoom`` is given without ``compact=True``
+    (only a compact cover reads it) or above ``zoom`` (no probe zoom would
+    remain)."""
     if min_zoom is not None and not (compact and min_zoom <= zoom):
         raise ValueError(
             f"min_zoom={min_zoom} needs compact=True and min_zoom <= zoom={zoom} "
             f"(got compact={compact!r})"
         )
-    spark = polygons.sparkSession
-    # staged: normalize+cover run once; consumers join under broadcast hints
+    # staged: normalize+cover run once; the cover job and callers reread them
     norm = stage(normalize_polygons(polygons, keep_holes=keep_holes), eager=False)
-    # ONE bounded collect serves both the dense-id list and the ring broadcast
+    # ONE bounded collect serves both the dense-id list and the rings
     norm_rows = (
         norm.filter(F.col("poly_errors") == "")
         .select("polygon_id", "ring_json", "holes_json")
@@ -277,46 +273,48 @@ def prepare_polygons(
             f"{len(norm_rows):,} polygons before stopping, over the bound of "
             f"{PREPARED_POLYGONS_MAX:,}"
         )
-    # dense integer polygon surrogate: candidate rows carry a 4-byte poly_idx instead
-    # of the polygon_id string — string columns double the per-row cost of the Python
-    # handoff; ids are re-attached JVM-side from a tiny broadcast map at the end.
+    # dense integer polygon surrogate: poly_idx is the position in the sorted ids
     norm_rows.sort(key=lambda r: r["polygon_id"])
     pid_rows = [r["polygon_id"] for r in norm_rows]
     if len(set(pid_rows)) != len(pid_rows):
         release_staged(norm)
         dup = Counter(pid_rows).most_common(1)[0][0]
         raise ValueError(f"duplicate polygon_id {dup!r}: polygon ids must be unique")
-    # explicit schema: with no valid polygon there are no rows to infer from
-    pid_map = spark.createDataFrame(
-        list(enumerate(pid_rows)), "poly_idx long, polygon_id string"
+    ids = pa.array(pid_rows, pa.string())
+    cover_idx = stage(
+        polygon_cover(norm, zoom=zoom, compact=compact, min_zoom=min_zoom), eager=False
     )
-    cover = polygon_cover(norm, zoom=zoom, compact=compact, min_zoom=min_zoom)
-    cover_idx = cover.join(F.broadcast(pid_map), "polygon_id").select(
-        F.col("poly_idx").cast("int").alias("poly_idx"),
-        "cell",
-        "cell_zoom",
-        "interior",
+    cover = (
+        cover_idx.select("polygon_id", "cell", "interior")
+        .limit(COVER_CELLS_MAX + 1)
+        .toArrow()
     )
-    cover_idx = stage(cover_idx, eager=False)
+    if cover.num_rows > COVER_CELLS_MAX:
+        release_staged(norm)
+        release_staged(cover_idx)
+        raise ValueError(
+            f"prepare_polygons collects the cover to the driver: read "
+            f"{cover.num_rows:,} cells before stopping, over the bound of "
+            f"{COVER_CELLS_MAX:,}"
+        )
+    cells = cover["cell"].to_numpy()
+    lookup = cover_index(
+        cells,
+        pc.index_in(cover["polygon_id"], value_set=ids).to_numpy().astype(np.int32),
+        cover["interior"].to_numpy(),
+    )
     if not compact:
         zooms = [zoom]
     elif min_zoom is not None:
-        # static zoom range (r7): the partially-uncompacted cover only emits
-        # cells in [min_zoom, zoom], so probing that whole range needs no
-        # cover-distinct job per call — a probe at a zoom absent from the cover
-        # joins against nothing (identical matches, one fewer Spark job)
+        # the partially-uncompacted cover only emits cells in [min_zoom, zoom]
         zooms = list(range(min_zoom, zoom + 1))
     else:
-        # distinct zooms present in the compacted cover (small driver-side
-        # list); unbounded-coarseness covers can reach any zoom >= 0, so the
-        # probe list must come from the data
-        zooms = sorted(
-            r["cell_zoom"] for r in cover_idx.select("cell_zoom").distinct().collect()
-        )
-    rings = spark.sparkContext.broadcast(
-        [P.rings_from_json(r["ring_json"], r["holes_json"]) for r in norm_rows]
-    )
-    return PreparedPolygons(zoom, zooms, norm, pid_map, cover_idx, rings)
+        # unbounded-coarseness covers can reach any zoom >= 0: probe the
+        # zooms present in the cover
+        zooms = np.unique(C.unpack_cell(cells)[0]).tolist()
+    rings = [P.rings_from_json(r["ring_json"], r["holes_json"]) for r in norm_rows]
+    index = polygons.sparkSession.sparkContext.broadcast((rings, lookup, ids))
+    return PreparedPolygons(zoom, zooms, norm, cover_idx, index)
 
 
 def _points(points: DataFrame, point_id: str) -> DataFrame:
@@ -380,98 +378,27 @@ def spatial_join(
             keep_holes=keep_holes,
         )
         defer(prepared.unpersist)
-    else:
-        # geometry parameters travel with the index (a mismatched zoom would
-        # silently probe the wrong cells)
-        zoom = prepared.zoom
-    zooms = prepared.zooms
-    pid_map = prepared.pid_map
-    cover_idx = prepared.cover_idx
-
-    # candidate join: broadcast ONLY (poly_idx, cell) — rings never enter the
-    # broadcast nor the per-candidate shuffle rows (they weigh KBs vs ~40 B/candidate).
-    # One probe expression: ancestors at every cover zoom come from bit-shift
-    # expressions and one explode multiplies rows JVM-side (cell ids embed their
-    # zoom, so a single join key covers all zooms collision-free).
-    fine = pts.withColumn("_cell_fine", cell_expr(F.col("lat"), F.col("lon"), zoom))
-    ancestors = F.array(
-        *[cell_parent_expr(F.col("_cell_fine"), z, zoom) for z in zooms]
-    )
-    probe = fine.withColumn("_cell", F.explode(ancestors)).drop("_cell_fine")
-
-    # interior/boundary split: a point in a FULLY-INSIDE cover cell is a match with no
-    # refinement — it never crosses the Python boundary (which costs ~5 µs/row of core
-    # time in Spark's row<->Arrow machinery and would otherwise dominate the join);
-    # only boundary-cell candidates — O(perimeter), a small fraction — get ray-cast.
-    # The two broadcast hash joins carry DISJOINT halves of the cover (interior cells
-    # vs boundary cells), so total broadcast volume equals one full cover; each branch
-    # scans the point side.  (A single shared broadcast + post-join filters was tried
-    # and REGRESSED: Catalyst pushes the interior filter into the build side,
-    # defeating ReusedExchange, and each branch then ships the whole cover — 2x the
-    # rows of the disjoint split.  One join keeping the interior flag, with interior
-    # rows passed through the kernel, was 7x slower at 96M points: BENCH.md.)
-    interior_matches = probe.join(
-        F.broadcast(
-            cover_idx.filter(F.col("interior")).select(
-                "poly_idx", F.col("cell").alias("_cell")
-            )
-        ),
-        "_cell",
-        "inner",
-    ).select("point_id", "lat", "lon", "poly_idx")
-    candidates = probe.join(
-        F.broadcast(
-            cover_idx.filter(~F.col("interior")).select(
-                "poly_idx", F.col("cell").alias("_cell")
-            )
-        ),
-        "_cell",
-        "inner",
-    ).select("point_id", "lat", "lon", "poly_idx")
-
+    # geometry parameters travel with the index (a mismatched zoom would
+    # silently probe the wrong cells); locals: the closure must not capture frames
+    zoom, zooms, bc = prepared.zoom, prepared.zooms, prepared.rings
+    names = ["point_id", "lat", "lon", "polygon_id"]
     # result schema tracks the caller's point-id type (string/bigint/...)
-    pid_type = dict(pts.dtypes)["point_id"]
-    result_schema = f"point_id {pid_type}, lat double, lon double, poly_idx int"
+    schema = f"point_id {dict(pts.dtypes)['point_id']}, lat double, lon double, polygon_id string"
 
-    # map-only refine: all normalized rings broadcast once per executor; each
-    # Arrow batch is grouped locally by poly_idx and ray-cast per group.
-    # No shuffle, no sort, no skew — candidate rows never leave their partition.
-    # mapInArrow, NOT mapInPandas: at ~10^8 candidate rows the Arrow->pandas
-    # conversion materializes billions of Python string objects (id columns) and
-    # becomes the memory-bandwidth ceiling of the whole join; in Arrow the ids
-    # stay in columnar buffers and only lat/lon are viewed as numpy.
-    bc_rings = prepared.rings  # a local: the closure must not capture the frames
-
-    def refine_arrow(it):
-        import pyarrow as pa
-
-        rings = bc_rings.value
+    # mapInArrow, not mapInPandas: point ids stay in columnar buffers and only
+    # lat/lon are viewed as numpy
+    def kernel(it):
+        rings, index, ids = bc.value
         kernels: dict[int, object] = {}
         for batch in it:
-            if batch.num_rows == 0:
-                continue
-            # asarray(float64): decimal-typed lat/lon (e.g. SQL-derived) arrive
-            # as object arrays of Decimal — coerce before the numpy kernel
-            lon = np.asarray(
-                batch.column("lon").to_numpy(zero_copy_only=False), dtype=np.float64
-            )
-            lat = np.asarray(
-                batch.column("lat").to_numpy(zero_copy_only=False), dtype=np.float64
-            )
-            codes = batch.column("poly_idx").to_numpy(zero_copy_only=False)
-            keep = P.refine_mask(lon, lat, codes, rings, kernels)
-            yield batch.filter(pa.array(keep))
+            lat = batch.column("lat").to_numpy(zero_copy_only=False)
+            lon = batch.column("lon").to_numpy(zero_copy_only=False)
+            # each block's matches stream back to the JVM while the next computes
+            for row, poly in contain_blocks(lat, lon, index, rings, zoom, zooms, kernels):
+                cols = [batch.column(c).take(row) for c in names[:3]]
+                yield pa.RecordBatch.from_arrays(cols + [ids.take(poly)], names)
 
-    refined = candidates.mapInArrow(refine_arrow, result_schema)
-
-    # cover cells are disjoint, so interior and boundary matches cannot overlap;
-    # polygon_id strings re-attach here, JVM-side, from the tiny broadcast map
-    matches = (
-        interior_matches.unionByName(refined)
-        .join(F.broadcast(pid_map), "poly_idx")
-        .select("point_id", "lat", "lon", "polygon_id")
-    )
-    return _apply_how(pts, matches, how)
+    return _apply_how(pts, pts.mapInArrow(kernel, schema), how)
 
 
 def explode_multipolygon_parts(polygons: DataFrame) -> DataFrame:

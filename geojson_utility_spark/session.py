@@ -99,10 +99,16 @@ def stage(df: DataFrame, eager: bool = True) -> DataFrame:
 
 
 def release_staged(df: DataFrame) -> None:
-    """Free the blocks of a :func:`stage` frame.  ``df.unpersist()`` does not:
-    it drops cache-manager entries, and a checkpoint's blocks belong to the RDD
-    under its ``LogicalRDD`` plan node instead."""
-    df._jdf.queryExecution().logical().rdd().unpersist(False)
+    """Free the blocks of a :func:`stage` frame and delete a RELIABLE checkpoint's
+    files.  ``df.unpersist()`` does neither: it drops cache-manager entries, and a
+    checkpoint belongs to the RDD under its ``LogicalRDD`` plan node instead."""
+    rdd = df._jdf.queryExecution().logical().rdd()
+    rdd.unpersist(False)
+    path = rdd.getCheckpointFile()
+    if path.isDefined():
+        sc = df.sparkSession.sparkContext
+        p = sc._jvm.org.apache.hadoop.fs.Path(path.get())
+        p.getFileSystem(sc._jsc.hadoopConfiguration()).delete(p, True)
 
 
 def defer(release: Callable[[], object]) -> None:

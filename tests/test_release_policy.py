@@ -33,7 +33,8 @@ OWNERS = {
     "operators/spatial_join.py:prepare_polygons:cover_idx": (
         "operators/spatial_join.py:PreparedPolygons.unpersist"
     ),
-    "operators/spatial_join.py:prepare_polygons:rings": (
+    # the one index broadcast (rings, sorted cover, ids) every join reads
+    "operators/spatial_join.py:prepare_polygons:index": (
         "operators/spatial_join.py:PreparedPolygons.unpersist"
     ),
     # each round's labels become `labels`: released the next round, on

@@ -6,7 +6,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from geojson_utility_spark.functions import cells as C
-from geojson_utility_spark.functions.spark_geo import cell_expr, cell_parent_expr, cell_sql
+from geojson_utility_spark.functions.spark_geo import cell_expr, cell_sql
 
 
 def _random_points(n=5000, seed=7):
@@ -30,17 +30,6 @@ def test_cell_expr_matches_numpy(spark):
         )
         want = C.latlng_to_cell(pdf["lat"].to_numpy(), pdf["lon"].to_numpy(), zoom)
         np.testing.assert_array_equal(got, want)
-
-
-def test_cell_parent_expr_matches_numpy(spark):
-    pdf = _random_points(2000)
-    df = spark.createDataFrame(pdf)
-    fine = cell_expr(F.col("lat"), F.col("lon"), 17)
-    got = df.select(cell_parent_expr(fine, 13, 17).alias("p")).toPandas()["p"].to_numpy()
-    want = C.cell_to_parent(
-        C.latlng_to_cell(pdf["lat"].to_numpy(), pdf["lon"].to_numpy(), 17), 13
-    )
-    np.testing.assert_array_equal(got, want)
 
 
 def test_cell_sql_matches_numpy_via_duckdb():

@@ -177,9 +177,20 @@ def test_prepare_polygons_bounds_its_collect(spark, monkeypatch):
     assert _persistent_rdds(spark) == before
 
 
+def test_prepare_polygons_bounds_its_cover_collect(spark, monkeypatch):
+    """More cover cells than COVER_CELLS_MAX raise ValueError naming the count
+    read and the bound, and leave nothing cached."""
+    polys = spark.createDataFrame(FX.make_polygons(3)[["polygon_id", "geojson"]])
+    before = _persistent_rdds(spark)
+    monkeypatch.setattr(SJ, "COVER_CELLS_MAX", 10)
+    with pytest.raises(ValueError, match="read 11 cells .* bound of 10"):
+        SJ.prepare_polygons(polys, zoom=12)
+    assert _persistent_rdds(spark) == before
+
+
 def test_prepared_polygons_unpersist_releases_everything(spark, data):
     """prepare -> join caches two frames (norm, cover_idx); unpersist() frees
-    both and destroys the ring broadcast."""
+    both and destroys the index broadcast."""
     pts, _ = data
     pts_df = spark.createDataFrame(pts).withColumnRenamed("image_id", "point_id")
     polys = spark.createDataFrame(FX.make_polygons(14)[["polygon_id", "geojson"]])
@@ -249,6 +260,28 @@ def test_spatial_join_without_valid_polygons_matches_nothing(spark, compact, row
     assert SJ.spatial_join(pts, polys, zoom=12, compact=compact).count() == 0
     anti = SJ.spatial_join(pts, polys, zoom=12, compact=compact, how="left_anti")
     assert sorted(r["point_id"] for r in anti.collect()) == ["p", "q"]
+
+
+@pytest.mark.parametrize("compact", [False, True])
+def test_null_and_nan_points_match_nothing(spark, compact):
+    """A point with a null or NaN coordinate lies in no polygon: the inner join
+    gives it no row and left_anti returns it."""
+    ring = [[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 1.0], [0.0, 0.0]]
+    doc = json.dumps(G.wrap_polygon_feature_collection(ring))
+    polys = spark.createDataFrame([("sq", doc)], ["polygon_id", "geojson"])
+    nan = float("nan")
+    pts = spark.createDataFrame(
+        [("in", 0.5, 0.5), ("out", 5.0, 5.0), ("null_lat", None, 0.5),
+         ("null_lon", 0.5, None), ("nan_lat", nan, 0.5), ("nan_lon", 0.5, nan),
+         ("nan_both", nan, nan)],
+        "point_id string, lat double, lon double",
+    )
+    inner = SJ.spatial_join(pts, polys, zoom=12, compact=compact)
+    assert [(r["point_id"], r["polygon_id"]) for r in inner.collect()] == [("in", "sq")]
+    anti = SJ.spatial_join(pts, polys, zoom=12, compact=compact, how="left_anti")
+    assert sorted(r["point_id"] for r in anti.collect()) == [
+        "nan_both", "nan_lat", "nan_lon", "null_lat", "null_lon", "out",
+    ]
 
 
 @pytest.mark.parametrize(
@@ -554,9 +587,8 @@ def test_prepared_min_zoom_static_range_matches_oracle(spark, data, oracle_pairs
 
 def test_streaming_spatial_join_matches_batch(spark, tmp_path):
     """A file-source stream through spatial_join's prepared index == the batch
-    join on the same rows: the plan is stateless (broadcast joins and a map-only
-    refine, no watermark, no state store), so Structured Streaming runs it in
-    append mode."""
+    join on the same rows: the plan is stateless (one map-only Arrow pass, no
+    watermark, no state store), so Structured Streaming runs it in append mode."""
     import time
 
     from geojson_utility_spark.operators.spatial_join import prepare_polygons
