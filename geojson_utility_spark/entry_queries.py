@@ -419,7 +419,7 @@ def q_spatial_join_multipolygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle = OR of the two parts' half-plane conjunctions."""
     import json
 
-    from geojson_utility_spark.operators.spatial_join import spatial_join_multi
+    from geojson_utility_spark.operators.spatial_join import spatial_join
 
     register_views(spark, sf_dir)
     pts = spark.sql(PTS_CUSTOMER)
@@ -442,7 +442,7 @@ def q_spatial_join_multipolygon(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
     )
     polys = spark.createDataFrame([("mp_1", gj)], ["polygon_id", "geojson"])
-    return spatial_join_multi(pts, polys, zoom=9).select("point_id", "polygon_id")
+    return spatial_join(pts, polys, zoom=9).select("point_id", "polygon_id")
 
 
 def oracle_spatial_join_multipolygon() -> str:
@@ -1914,7 +1914,7 @@ def q_rasterize_masks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     polys = spark.createDataFrame(FX.make_polygons(20)[["polygon_id", "geojson"]])
     return rasterize_polygons(normalize_polygons(polys), zoom=12, mask_size=32).drop(
-        "mask"
+        "mask", "part_idx"
     )
 
 

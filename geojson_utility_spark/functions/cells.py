@@ -27,6 +27,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from geojson_utility_spark.functions.geometry import ensure_closed
+
 # Web-Mercator latitude clamp (tan() diverges at the poles).
 MAX_LAT = 85.05112878
 _Z_SHIFT = 58
@@ -292,9 +294,7 @@ def polygon_to_cells_adaptive(
     ~10^5 fine tiles) cheap to index.  Superset guarantee preserved: every point of the
     polygon lies in an emitted tile.
     """
-    ring = np.asarray(ring, dtype=np.float64)
-    if not (ring[0] == ring[-1]).all():
-        ring = np.vstack([ring, ring[:1]])
+    ring = ensure_closed(ring)
     lon_min, lat_min = ring.min(axis=0)
     lon_max, lat_max = ring.max(axis=0)
     if coarse_zoom is None:

@@ -2,13 +2,16 @@
 ``mapInArrow`` pass (operators/spatial_join.py).  It imports numpy only, so a Python
 worker starts it cheaply.
 
-The index (:func:`cover_index`) is every polygon's cover sorted by cell: per cover
-cell its ``poly_idx`` and whether the cell lies wholly inside that polygon.  Per
-block of points, :func:`contain_blocks` computes each point's cell at the finest
-zoom and its ancestor at every probe zoom by bit shift, and looks each one up as a
-``searchsorted`` range, since polygons may share a cell.  A hit on an interior cell
-is a match; a hit on a boundary cell is ray-cast by ``pip.refine_mask``.  One
-polygon's cover cells are disjoint, so a point meets each polygon at most once.
+The index (:func:`cover_index`) is every polygon part's cover sorted by cell: per
+cover cell its part and whether the cell lies wholly inside that part.  A feature
+is one part (a Polygon) or several (a MultiPolygon).  Per block of points,
+:func:`contain_blocks` computes each point's cell at the finest zoom and its
+ancestor at every probe zoom by bit shift, and looks each one up as a
+``searchsorted`` range, since parts may share a cell.  A hit on an interior cell is
+a match; a hit on a boundary cell is ray-cast by ``pip.refine_mask``.  One part's
+cover cells are disjoint, so a point meets each part at most once; a point on an
+edge two parts of one feature share meets that feature twice, and only an index
+with a multi-part feature pays for the dedupe.
 """
 
 from __future__ import annotations
@@ -21,23 +24,25 @@ from geojson_utility_spark.functions.pip import refine_mask
 BLOCK = 65536  # points per block: bounds the probe and candidate temporaries
 
 
-def cover_index(cells, poly_idx, interior) -> tuple:
-    """(cells, poly_idx, interior) of the cover rows, sorted by (cell, poly_idx)."""
-    order = np.lexsort((poly_idx, cells))
-    return cells[order], poly_idx[order], interior[order]
+def cover_index(cells, part, interior, feature=None) -> tuple:
+    """The index of the cover rows, sorted by (cell, part): (cells, part,
+    interior, feature).  ``feature`` maps each part to its feature, ascending; it
+    is None when every feature has one part, so part and feature coincide."""
+    order = np.lexsort((part, cells))
+    return cells[order], part[order], interior[order], feature
 
 
 def contain_blocks(lat, lon, index, rings, zoom, zooms, kernels: dict):
-    """The (point, polygon) containment pairs, boundary-inclusive, of points against
-    a :func:`cover_index` built at ``zoom`` with cover cells at ``zooms``.
+    """The (point, feature) containment pairs, boundary-inclusive, of points
+    against a :func:`cover_index` built at ``zoom`` with cover cells at ``zooms``.
 
     A generator over blocks of ``BLOCK`` points, so a caller can stream each block
-    out while the next computes.  Each yields ``(row, poly_idx)``: the point's input
-    row and the polygon it lies in.  ``rings`` and ``kernels`` are
-    :func:`pip.refine_mask`'s.  A point with a NaN or infinite coordinate (a null
-    read from Arrow is NaN) gets no pairs.
+    out while the next computes.  Each yields ``(row, feature)``: the point's input
+    row and the feature it lies in, each pair once.  ``rings`` (by part) and
+    ``kernels`` are :func:`pip.refine_mask`'s.  A point with a NaN or infinite
+    coordinate (a null read from Arrow is NaN) gets no pairs.
     """
-    cells, poly, interior = index
+    cells, part, interior, feature = index
     if not cells.size:
         return
     for s in range(0, lat.size, BLOCK):
@@ -59,5 +64,11 @@ def contain_blocks(lat, lon, index, rings, zoom, zooms, kernels: dict):
         pts = row[np.repeat(order[hit] % row.size, cnt)]
         keep = interior[pos]
         edge = np.flatnonzero(~keep)
-        keep[edge] = refine_mask(lon[pts[edge]], lat[pts[edge]], poly[pos[edge]], rings, kernels)
-        yield pts[keep], poly[pos[keep]]
+        keep[edge] = refine_mask(lon[pts[edge]], lat[pts[edge]], part[pos[edge]], rings, kernels)
+        if feature is None:
+            yield pts[keep], part[pos[keep]]
+            continue
+        # a point can lie in two parts of one feature (on an edge they share)
+        n = np.int64(feature[-1]) + 1
+        pair = np.unique(pts[keep] * n + feature[part[pos[keep]]])
+        yield pair // n, pair % n

@@ -21,70 +21,55 @@ class GeometryError(ValueError):
     pass
 
 
-def _check_polygon_type(geom: dict) -> None:
-    """Reject non-Polygon geometry types with a SPECIFIC message.
+# what a malformed document raises while it is read
+_PARSE_ERRORS = (GeometryError, json.JSONDecodeError, AttributeError, TypeError)
+
+
+def _geometry(geojson: str | dict, types: tuple) -> tuple[str | None, list]:
+    """(type, coordinates) of features[0]'s geometry, with the reference's exact
+    error strings (reference: backend/routers/catchment.py:94-99).
 
     Engine extension past the reference (which blindly indexes coordinates[0] —
     backend/routers/catchment.py:100 — so a LineString/Point feature produces a
-    shape crash or silent garbage): a mixed-geometry FeatureCollection lands in
-    ``poly_errors`` with the type named.  A missing ``type`` key keeps the
-    reference's lenient behavior (coordinates decide)."""
-    gtype = geom.get("type")
-    if gtype in (None, "Polygon"):
-        return
-    if gtype == "MultiPolygon":
-        raise GeometryError(
-            "MultiPolygon geometry: use explode_multipolygon_parts / "
-            "spatial_join_multi for union semantics"
-        )
-    raise GeometryError(
-        f"unsupported geometry type '{gtype}' in features[0] (expected Polygon)"
-    )
-
-
-def extract_outer_ring(geojson: str | dict) -> list[list[float]]:
-    """The reference's projection: features[0].geometry.coordinates[0].
-
-    Raises GeometryError with the reference's exact error strings
-    (reference: backend/routers/catchment.py:94-99); non-Polygon geometry types
-    additionally get the specific :func:`_check_polygon_type` message.
-    """
-    return extract_rings(geojson)[0]
-
-
-def extract_rings(geojson: str | dict) -> list[list[list[float]]]:
-    """ALL rings of features[0]: [outer, hole, hole, ...].
-
-    The hole-aware companion of :func:`extract_outer_ring` (which reproduces the
-    reference's coordinates[0]-only projection — the reference DISCARDS holes by
-    design, backend/routers/catchment.py:100).  Same error strings on bad input."""
+    shape crash or silent garbage): a geometry type outside ``types`` raises with
+    the type named.  A missing ``type`` key keeps the reference's lenient behavior
+    (coordinates decide)."""
     doc = json.loads(geojson) if isinstance(geojson, str) else geojson
     features = doc.get("features", [])
     if not features:
         raise GeometryError("No features found in GeoJSON response")
     geom = features[0].get("geometry", {}) or {}
-    _check_polygon_type(geom)
+    gtype = geom.get("type")
+    if gtype is not None and gtype not in types:
+        raise GeometryError(
+            f"unsupported geometry type '{gtype}' in features[0] "
+            f"(expected {' or '.join(types)})"
+        )
     coords = geom.get("coordinates")
     if not coords or not isinstance(coords, list):
         raise GeometryError("Invalid or missing coordinates in geometry")
-    return coords
+    return gtype, coords
 
 
-def normalize_polygon_rings(geojson: str) -> tuple[list | None, str]:
-    """Hole-aware normalize: extract ALL rings -> validate each -> fix winding
-    (RFC 7946: CCW outer, CW holes) -> return (rings as nested lists, errors).
+def extract_outer_ring(geojson: str | dict) -> list[list[float]]:
+    """The reference's projection: features[0].geometry.coordinates[0] of a Polygon.
 
-    Opt-in extension past the reference's outer-ring-only contract; the parity
-    path stays :func:`normalize_polygon_geojson`."""
-    try:
-        rings = extract_rings(geojson)
-    except (GeometryError, json.JSONDecodeError, AttributeError, TypeError) as e:
-        return None, str(e) or "invalid GeoJSON document"
+    Raises GeometryError with the reference's exact error strings; any other
+    geometry type, MultiPolygon included, gets the unsupported-type message."""
+    return _geometry(geojson, ("Polygon",))[1][0]
+
+
+def _normalize_part(rings, keep_holes: bool) -> tuple[list | None, str]:
+    """One Polygon part -> (normalized rings as nested lists, errors): the outer
+    ring validated and wound CCW, and with ``keep_holes`` every hole validated
+    (errors prefixed ``hole i:``) and wound CW (RFC 7946)."""
+    if not rings or not isinstance(rings, list):
+        return None, "Invalid or missing coordinates in geometry"
     errors = validate_ring(rings[0])
     if errors:
         return None, "; ".join(errors)
     out = [normalize_winding(np.asarray(rings[0], dtype=np.float64), ccw=True).tolist()]
-    for i, hole in enumerate(rings[1:], start=1):
+    for i, hole in enumerate(rings[1:] if keep_holes else [], start=1):
         herr = validate_ring(hole)
         if herr:
             return None, "; ".join(f"hole {i}: {e}" for e in herr)
@@ -92,6 +77,23 @@ def normalize_polygon_rings(geojson: str) -> tuple[list | None, str]:
             normalize_winding(np.asarray(hole, dtype=np.float64), ccw=False).tolist()
         )
     return out, ""
+
+
+def normalize_polygon_parts(geojson: str, keep_holes: bool) -> list[tuple[list | None, str]]:
+    """One document, parsed once -> one (rings, errors) per Polygon part of
+    features[0]: one part for a Polygon, one per member of a MultiPolygon.  A
+    document that fails to parse is one errored part.
+
+    keep_holes=False reproduces the reference's contract: interior rings are
+    DISCARDED (reference: backend/routers/catchment.py:100 takes coordinates[0]
+    only) and each part is its outer ring.  keep_holes=True validates and carries
+    the interior rings for the hole-aware even-odd PIP."""
+    try:
+        gtype, coords = _geometry(geojson, ("Polygon", "MultiPolygon"))
+    except _PARSE_ERRORS as e:
+        return [(None, str(e) or "invalid GeoJSON document")]
+    parts = coords if gtype == "MultiPolygon" else [coords]
+    return [_normalize_part(rings, keep_holes) for rings in parts]
 
 
 def wrap_polygon_feature_collection(outer_ring) -> dict:
@@ -126,6 +128,7 @@ def signed_area(ring: np.ndarray) -> float:
 
 
 def ensure_closed(ring: np.ndarray) -> np.ndarray:
+    """The ring as float64 with its first vertex repeated at the end if missing."""
     ring = np.asarray(ring, dtype=np.float64)
     if not (ring[0] == ring[-1]).all():
         ring = np.vstack([ring, ring[:1]])
@@ -213,13 +216,12 @@ def normalize_polygon_geojson(geojson: str) -> tuple[str | None, str]:
     """
     try:
         ring = extract_outer_ring(geojson)
-    except (GeometryError, json.JSONDecodeError, AttributeError, TypeError) as e:
+    except _PARSE_ERRORS as e:
         return None, str(e) or "invalid GeoJSON document"
-    errors = validate_ring(ring)
-    if errors:
-        return None, "; ".join(errors)
-    fixed = normalize_winding(np.asarray(ring, dtype=np.float64), ccw=True)
-    return json.dumps(wrap_polygon_feature_collection(fixed)), ""
+    rings, err = _normalize_part([ring], keep_holes=False)
+    if err:
+        return None, err
+    return json.dumps(wrap_polygon_feature_collection(rings[0])), ""
 
 
 def synth_catchment_ring(

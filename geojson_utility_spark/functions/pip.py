@@ -25,14 +25,9 @@ import json
 
 import numpy as np
 
+from geojson_utility_spark.functions.geometry import ensure_closed
+
 _BLOCK = 16384  # points per block: 16k x 64 edges x 8 B ≈ 8 MB of temporaries
-
-
-def _closed(ring: np.ndarray) -> np.ndarray:
-    ring = np.asarray(ring, dtype=np.float64)
-    if not (ring[0] == ring[-1]).all():
-        ring = np.vstack([ring, ring[:1]])
-    return ring
 
 
 class RingKernel:
@@ -40,7 +35,7 @@ class RingKernel:
     across point blocks."""
 
     def __init__(self, ring: np.ndarray):
-        ring = _closed(ring)
+        ring = ensure_closed(ring)
         self.x1 = ring[:-1, 0].copy()
         self.y1 = ring[:-1, 1].copy()
         self.x2 = ring[1:, 0].copy()

@@ -34,6 +34,6 @@ def rings_intersect(a: np.ndarray, b: np.ndarray) -> bool:
         return True
     if P.points_in_ring(a[:, 0], a[:, 1], b, boundary="include").any():
         return True
-    ra, rb = P._closed(a), P._closed(b)
+    ra, rb = P.ensure_closed(a), P.ensure_closed(b)
     va, vb = C._orientations(ra, rb)
     return bool(C._chains_meet(va, vb, ra, rb).any())

@@ -2,21 +2,27 @@
 
 Semantics: ``points JOIN polygons ON ST_Covers(polygon, point)`` — the Spark-native
 re-expression of the reference's per-row enrichment join (SURVEY.md §2.3; the reference
-fetches one polygon per point over HTTPS; we invert it into a set-oriented join).
+fetches one polygon per point over HTTPS; we invert it into a set-oriented join).  A
+feature is a Polygon or a MultiPolygon; a MultiPolygon is its parts, and a point in
+any part matches the feature once.  ``spatial_join`` is the one point-in-polygon
+operator: every ``how`` and every feature runs the same plan.
 
-Physical plan, for many points against at most ``PREPARED_POLYGONS_MAX`` polygons:
+Physical plan, for many points against at most ``PREPARED_POLYGONS_MAX`` polygon parts:
 
 1. **Polygon side (small), once per index**: parse + validate + normalize each
-   GeoJSON document in ``mapInPandas`` batches; cover each polygon via ADAPTIVE
-   QUADTREE DESCENT — O(perimeter) tiles per level, every cell classified interior
-   vs boundary (conservative covering — superset, no false negatives).
-   :func:`prepare_polygons` collects the valid rings and the cover (each bounded),
-   sorts the cover by cell and broadcasts it with the rings and the ids ONCE.
+   GeoJSON document into its Polygon parts in ``mapInPandas`` batches; cover each
+   part via ADAPTIVE QUADTREE DESCENT — O(perimeter) tiles per level, every cell
+   classified interior vs boundary (conservative covering — superset, no false
+   negatives).  :func:`prepare_polygons` collects the valid rings and the cover
+   (each bounded), sorts the cover by cell and broadcasts it with the rings and
+   the ids ONCE.
 2. **Point side (huge), per call**: ONE zero-shuffle ``mapInArrow`` pass
    (functions/contain.py).  Per block of points: the cell at the finest zoom, its
    ancestors at every probe zoom by bit shift, a ``searchsorted`` range per cell;
    interior-cell hits are matches, boundary-cell hits are ray-cast by
-   ``pip.refine_mask``, and the kernel emits ``polygon_id`` itself.
+   ``pip.refine_mask``.  ``inner`` emits ``polygon_id`` itself; ``left_semi`` and
+   ``left_anti`` mark each Arrow batch's matched rows and keep them or the rest, so
+   rows are kept by row, never re-joined by id.
 
 The measured trade (BENCH.md): every point crosses into Python once, and no
 broadcast is built per call.  The former plan kept the point side in the JVM but
@@ -28,7 +34,6 @@ per ``bulk_join`` op.  Work follows partition size, so no polygon can skew it.
 from __future__ import annotations
 
 import json
-from collections import Counter
 from typing import Iterator
 
 import numpy as np
@@ -49,12 +54,13 @@ from geojson_utility_spark.session import defer, release_staged, stage
 DEFAULT_JOIN_ZOOM = 16  # finest boundary-cell zoom (~600 m tiles ≈ H3 res 9).
 # Interior cells stay coarse (adaptive cover), so a fine max zoom shrinks the
 # boundary band that needs Python ray-casting ~4x per level at O(perimeter) cover cost.
-PREPARED_POLYGONS_MAX = 1_000_000  # valid rings prepare_polygons may collect and broadcast
+PREPARED_POLYGONS_MAX = 1_000_000  # valid parts prepare_polygons may collect and broadcast
 COVER_CELLS_MAX = 10_000_000  # cover cells it may collect and broadcast: ~130 MB of numpy
 
 POLYGON_NORM_SCHEMA = T.StructType(
     [
         T.StructField("polygon_id", T.StringType()),
+        T.StructField("part_idx", T.IntegerType()),  # 0 for a Polygon
         T.StructField("ring_json", T.StringType()),  # normalized outer ring [[lon,lat]..]
         T.StructField("holes_json", T.StringType()),  # "[]" unless keep_holes=True
         T.StructField("poly_errors", T.StringType()),
@@ -66,6 +72,7 @@ POLYGON_NORM_SCHEMA = T.StructType(
 COVER_SCHEMA = T.StructType(
     [
         T.StructField("polygon_id", T.StringType()),
+        T.StructField("part_idx", T.IntegerType()),
         T.StructField("cell", T.LongType()),
         T.StructField("cell_zoom", T.IntegerType()),
         T.StructField("interior", T.BooleanType()),
@@ -74,10 +81,13 @@ COVER_SCHEMA = T.StructType(
 
 
 def normalize_polygons(polygons: DataFrame, keep_holes: bool = False) -> DataFrame:
-    """geojson string column -> validated, winding-normalized outer rings.
+    """geojson string column -> one row per Polygon part: validated,
+    winding-normalized rings, ``part_idx`` 0 for a Polygon and 0.. for the members
+    of a MultiPolygon.
 
-    Invalid polygons are retained with ``poly_errors`` set (filter-that-annotates, same
+    Invalid parts are retained with ``poly_errors`` set (filter-that-annotates, same
     contract as row validation) — callers filter ``poly_errors == ''`` for the join.
+    A document that fails to parse is one errored row with ``part_idx`` 0.
 
     keep_holes=False (default) reproduces the reference's contract — interior rings
     are DISCARDED (reference: backend/routers/catchment.py:100 takes coordinates[0]
@@ -89,29 +99,27 @@ def normalize_polygons(polygons: DataFrame, keep_holes: bool = False) -> DataFra
         for pdf in it:
             rows = []
             for pid, gj in zip(pdf["polygon_id"], pdf["geojson"]):
-                if keep_holes:
-                    rings, err = G.normalize_polygon_rings(gj)
-                else:
-                    norm, err = G.normalize_polygon_geojson(gj)
-                    rings = None if err else [G.extract_outer_ring(norm)]
-                if err:
-                    rows.append((pid, None, None, err, None, None))
-                    continue
-                arr = np.asarray(rings[0], dtype=np.float64)
-                rows.append(
-                    (
-                        pid,
-                        json.dumps(rings[0]),
-                        json.dumps(rings[1:]),
-                        "",
-                        int(arr.shape[0]),
-                        abs(G.signed_area(arr)),
+                parts = G.normalize_polygon_parts(gj, keep_holes)
+                for i, (rings, err) in enumerate(parts):
+                    if err:
+                        rows.append((pid, i, None, None, err, None, None))
+                        continue
+                    arr = np.asarray(rings[0], dtype=np.float64)
+                    rows.append(
+                        (
+                            pid,
+                            i,
+                            json.dumps(rings[0]),
+                            json.dumps(rings[1:]),
+                            "",
+                            int(arr.shape[0]),
+                            abs(G.signed_area(arr)),
+                        )
                     )
-                )
             yield pd.DataFrame(
                 rows,
                 columns=[
-                    "polygon_id", "ring_json", "holes_json",
+                    "polygon_id", "part_idx", "ring_json", "holes_json",
                     "poly_errors", "n_vertices", "area",
                 ],
             )
@@ -168,7 +176,8 @@ def polygon_cover(
     compact: bool = False,
     min_zoom: int | None = None,
 ) -> DataFrame:
-    """(polygon_id, cell, cell_zoom, interior) covering rows for valid polygons.
+    """(polygon_id, part_idx, cell, cell_zoom, interior) covering rows for the
+    valid parts of :func:`normalize_polygons`, each part covered on its own.
 
     ``compact=True`` keeps the multi-zoom adaptive cover (bounds cover size for
     oversized polygons, point side multi-probes per zoom); ``compact=False`` expands
@@ -180,8 +189,10 @@ def polygon_cover(
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            out_pid, out_cell, out_zoom, out_int = [], [], [], []
-            for pid, rj, hj in zip(pdf["polygon_id"], pdf["ring_json"], pdf["holes_json"]):
+            out_pid, out_part, out_cell, out_zoom, out_int = [], [], [], [], []
+            for pid, part, rj, hj in zip(
+                pdf["polygon_id"], pdf["part_idx"], pdf["ring_json"], pdf["holes_json"]
+            ):
                 if rj is None:
                     continue
                 cover, interior = polygon_cells(
@@ -189,12 +200,14 @@ def polygon_cover(
                 )
                 zs = C.unpack_cell(cover)[0]
                 out_pid.extend([pid] * len(cover))
+                out_part.extend([part] * len(cover))
                 out_cell.extend(cover.tolist())
                 out_zoom.extend(zs.tolist())
                 out_int.extend(interior.tolist())
             yield pd.DataFrame(
                 {
                     "polygon_id": out_pid,
+                    "part_idx": pd.array(out_part, dtype="int32"),
                     "cell": pd.array(out_cell, dtype="int64"),
                     "cell_zoom": pd.array(out_zoom, dtype="int32"),
                     "interior": pd.array(out_int, dtype="bool"),
@@ -225,8 +238,8 @@ class PreparedPolygons:
         self.zooms = zooms
         self.norm = norm
         self.cover_idx = cover_idx
-        # sc.broadcast of (per-poly_idx ring lists ([outer] or [outer, *holes]),
-        # contain.cover_index arrays, polygon ids as a pa.array by poly_idx)
+        # sc.broadcast of (per-part ring lists ([outer] or [outer, *holes]),
+        # contain.cover_index arrays, feature ids as a pa.array by feature index)
         self.rings = rings
 
     def unpersist(self):
@@ -245,9 +258,10 @@ def prepare_polygons(
     keep_holes: bool = False,
 ) -> PreparedPolygons:
     """Build the reusable polygon index for :func:`spatial_join` (see
-    :class:`PreparedPolygons`).  Raises ``ValueError`` when two valid polygons
-    share a ``polygon_id`` (a match could not say which one it hit), when there
-    are more than ``PREPARED_POLYGONS_MAX`` valid polygons or more than
+    :class:`PreparedPolygons`) over the valid parts of every feature.  Raises
+    ``ValueError`` when two valid parts share a ``(polygon_id, part_idx)`` (two
+    features share an id, and a match could not say which one it hit), when there
+    are more than ``PREPARED_POLYGONS_MAX`` valid parts or more than
     ``COVER_CELLS_MAX`` cover cells (both are collected to the driver), and,
     before any Spark job, when ``min_zoom`` is given without ``compact=True``
     (only a compact cover reads it) or above ``zoom`` (no probe zoom would
@@ -259,10 +273,10 @@ def prepare_polygons(
         )
     # staged: normalize+cover run once; the cover job and callers reread them
     norm = stage(normalize_polygons(polygons, keep_holes=keep_holes), eager=False)
-    # ONE bounded collect serves both the dense-id list and the rings
+    # ONE bounded collect serves both the dense part list and the rings
     norm_rows = (
         norm.filter(F.col("poly_errors") == "")
-        .select("polygon_id", "ring_json", "holes_json")
+        .select("polygon_id", "part_idx", "ring_json", "holes_json")
         .limit(PREPARED_POLYGONS_MAX + 1)
         .collect()
     )
@@ -273,19 +287,24 @@ def prepare_polygons(
             f"{len(norm_rows):,} polygons before stopping, over the bound of "
             f"{PREPARED_POLYGONS_MAX:,}"
         )
-    # dense integer polygon surrogate: poly_idx is the position in the sorted ids
-    norm_rows.sort(key=lambda r: r["polygon_id"])
-    pid_rows = [r["polygon_id"] for r in norm_rows]
-    if len(set(pid_rows)) != len(pid_rows):
+    # dense integer surrogates: a part's poly_idx is its position in
+    # (polygon_id, part_idx) order, a feature's its position in the sorted ids
+    norm_rows.sort(key=lambda r: (r["polygon_id"], r["part_idx"]))
+    keys = [(r["polygon_id"], r["part_idx"]) for r in norm_rows]
+    dup = next((k[0] for k, n in zip(keys, keys[1:]) if k == n), None)
+    if dup is not None:
         release_staged(norm)
-        dup = Counter(pid_rows).most_common(1)[0][0]
         raise ValueError(f"duplicate polygon_id {dup!r}: polygon ids must be unique")
-    ids = pa.array(pid_rows, pa.string())
+    part_ids = pa.array([k[0] for k in keys], pa.string())
+    ids = pc.unique(part_ids)
+    feature = pc.index_in(part_ids, value_set=ids).to_numpy().astype(np.int32)
+    # (feature, part_idx) ascends with poly_idx: a cover row finds its part by search
+    part_key = (feature.astype(np.int64) << 32) | np.array([k[1] for k in keys], np.int64)
     cover_idx = stage(
         polygon_cover(norm, zoom=zoom, compact=compact, min_zoom=min_zoom), eager=False
     )
     cover = (
-        cover_idx.select("polygon_id", "cell", "interior")
+        cover_idx.select("polygon_id", "part_idx", "cell", "interior")
         .limit(COVER_CELLS_MAX + 1)
         .toArrow()
     )
@@ -298,10 +317,15 @@ def prepare_polygons(
             f"{COVER_CELLS_MAX:,}"
         )
     cells = cover["cell"].to_numpy()
+    cover_key = (
+        pc.index_in(cover["polygon_id"], value_set=ids).to_numpy().astype(np.int64) << 32
+    ) | cover["part_idx"].to_numpy().astype(np.int64)
     lookup = cover_index(
         cells,
-        pc.index_in(cover["polygon_id"], value_set=ids).to_numpy().astype(np.int32),
+        np.searchsorted(part_key, cover_key).astype(np.int32),
         cover["interior"].to_numpy(),
+        # the kernel dedupes (point, feature) pairs only if a feature has several parts
+        None if len(ids) == len(keys) else feature,
     )
     if not compact:
         zooms = [zoom]
@@ -334,14 +358,6 @@ def _check_how(how: str) -> None:
         raise ValueError(f"unsupported how={how!r}")
 
 
-def _apply_how(pts: DataFrame, matches: DataFrame, how: str) -> DataFrame:
-    """'inner' -> the matches; 'left_semi' / 'left_anti' -> the points with /
-    without any match."""
-    if how == "inner":
-        return matches
-    return pts.join(matches.select("point_id").distinct(), "point_id", how)
-
-
 def spatial_join(
     points: DataFrame,
     polygons: DataFrame | None = None,
@@ -355,6 +371,8 @@ def spatial_join(
 ) -> DataFrame:
     """points(point_id, lat, lon) ⋈ polygons(polygon_id, geojson) on containment.
 
+    A Polygon or MultiPolygon feature matches a point inside any of its valid
+    parts, once (union semantics, per the GeoJSON spec).
     keep_holes=False (default) keeps the reference's outer-ring-only contract.
     keep_holes=True joins on the full even-odd polygon (interior rings excluded,
     hole BOUNDARIES still included — covers semantics): cover cells touching a
@@ -362,7 +380,9 @@ def spatial_join(
     every ring.
 
     how: 'inner' -> (point_id, lat, lon, polygon_id as a string) matches;
-         'left_semi' -> served points; 'left_anti' -> serviceability-gap points;
+         'left_semi' -> the point rows inside some feature (served points);
+         'left_anti' -> the other rows (serviceability gaps), null or NaN
+         coordinates included; semi and anti partition the input rows;
          anything else raises ``ValueError`` before any Spark job.
     min_zoom: with compact=True only, and at most ``zoom``: cover cells coarser
       than it expand to it (see :func:`polygon_cover`); otherwise ``ValueError``.
@@ -383,7 +403,7 @@ def spatial_join(
     zoom, zooms, bc = prepared.zoom, prepared.zooms, prepared.rings
     names = ["point_id", "lat", "lon", "polygon_id"]
     # result schema tracks the caller's point-id type (string/bigint/...)
-    schema = f"point_id {dict(pts.dtypes)['point_id']}, lat double, lon double, polygon_id string"
+    schema = f"point_id {dict(pts.dtypes)['point_id']}, lat double, lon double"
 
     # mapInArrow, not mapInPandas: point ids stay in columnar buffers and only
     # lat/lon are viewed as numpy
@@ -393,97 +413,21 @@ def spatial_join(
         for batch in it:
             lat = batch.column("lat").to_numpy(zero_copy_only=False)
             lon = batch.column("lon").to_numpy(zero_copy_only=False)
-            # each block's matches stream back to the JVM while the next computes
-            for row, poly in contain_blocks(lat, lon, index, rings, zoom, zooms, kernels):
-                cols = [batch.column(c).take(row) for c in names[:3]]
-                yield pa.RecordBatch.from_arrays(cols + [ids.take(poly)], names)
+            pairs = contain_blocks(lat, lon, index, rings, zoom, zooms, kernels)
+            if how == "inner":
+                # each block's matches stream back to the JVM while the next computes
+                for row, feature in pairs:
+                    cols = [batch.column(c).take(row) for c in names[:3]]
+                    yield pa.RecordBatch.from_arrays(cols + [ids.take(feature)], names)
+                continue
+            hit = np.zeros(batch.num_rows, dtype=bool)
+            for row, _ in pairs:
+                hit[row] = True
+            yield batch.filter(pa.array(hit if how == "left_semi" else ~hit))
 
-    return _apply_how(pts, pts.mapInArrow(kernel, schema), how)
-
-
-def explode_multipolygon_parts(polygons: DataFrame) -> DataFrame:
-    """(polygon_id, geojson) -> one row per polygon PART: (polygon_id, part_idx,
-    geojson) where each part is rewrapped as a single-Polygon FeatureCollection
-    (holes preserved).
-
-    GeoJSON 'Polygon' geometries pass through as part 0; 'MultiPolygon' geometries
-    emit one part per member polygon.  Documents that fail to parse pass through
-    unchanged (part_idx 0) so the downstream normalize annotates them with the
-    reference's exact error strings instead of dropping rows here."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pids, idxs, docs = [], [], []
-            for pid, gj in zip(pdf["polygon_id"], pdf["geojson"]):
-                parts = None
-                try:
-                    doc = json.loads(gj)
-                    geom = doc["features"][0].get("geometry") or {}
-                    gtype = geom.get("type")
-                    if gtype == "MultiPolygon":
-                        parts = geom["coordinates"]
-                    elif gtype in (None, "Polygon"):
-                        parts = [geom["coordinates"]]
-                    else:
-                        # non-polygonal geometry: pass through UNCHANGED so the
-                        # downstream normalize annotates it with the specific
-                        # unsupported-type message (rewrapping as 'Polygon' here
-                        # would masquerade it as a malformed ring instead)
-                        parts = None
-                except Exception:
-                    parts = None
-                if not parts:
-                    pids.append(pid); idxs.append(0); docs.append(gj)
-                    continue
-                for i, coords in enumerate(parts):
-                    pids.append(pid)
-                    idxs.append(i)
-                    docs.append(json.dumps({
-                        "type": "FeatureCollection",
-                        "features": [{
-                            "type": "Feature",
-                            "geometry": {"type": "Polygon", "coordinates": coords},
-                            "properties": {},
-                        }],
-                    }))
-            yield pd.DataFrame(
-                {"polygon_id": pids, "part_idx": idxs, "geojson": docs}
-            )
-
-    return polygons.select(F.col("polygon_id").cast("string"), "geojson").mapInPandas(
-        batches, "polygon_id string, part_idx int, geojson string"
-    )
-
-
-def spatial_join_multi(
-    points: DataFrame,
-    polygons: DataFrame,
-    how: str = "inner",
-    **kwargs,
-) -> DataFrame:
-    """MultiPolygon-aware spatial join: a point matches a feature when it is inside
-    ANY member polygon (union semantics, per the GeoJSON spec — parts are disjoint).
-
-    Physical shape: parts exploded to independent rows (the polygon side stays the
-    small side — parts multiply it by the part count, not the point count), joined
-    with the regular two-phase engine under part ids ``<polygon_id>#<part_idx>``,
-    then each match is mapped back to its feature id by stripping that suffix and
-    deduped per (point, feature).  Composes with ``keep_holes=True`` — every part
-    carries its own interior rings."""
-    _check_how(how)
-    parts = explode_multipolygon_parts(polygons).select(
-        F.concat_ws("#", "polygon_id", F.col("part_idx").cast("string")).alias(
-            "polygon_id"
-        ),
-        "geojson",
-    )
-    matches = (
-        spatial_join(points, parts, how="inner", **kwargs)
-        .withColumn("polygon_id", F.regexp_replace("polygon_id", "#[0-9]+$", ""))
-        .dropDuplicates(["point_id", "polygon_id"])
-    )
-    pts = _points(points, kwargs.get("point_id", "point_id"))
-    return _apply_how(pts, matches, how)
+    if how == "inner":
+        schema += ", polygon_id string"
+    return pts.mapInArrow(kernel, schema)
 
 
 def polygon_intersect_join(
@@ -491,19 +435,20 @@ def polygon_intersect_join(
     polys_b: DataFrame,
     zoom: int = 12,
 ) -> DataFrame:
-    """Polygon x polygon intersection join: (a_id, b_id) for every pair of valid
-    polygons that share any point (boundary-inclusive).
+    """Polygon x polygon intersection join: (a_id, b_id) once for every pair of
+    features that share any point (boundary-inclusive), i.e. any valid part of
+    one meets any valid part of the other.
 
     Physical plan (both sides potentially large — neither is broadcast wholesale):
-    1. normalize + cover BOTH sides at one zoom (the usual adaptive descent,
-       expanded) — cover rows are (id, cell);
-    2. candidates = cover_a equi-join cover_b on cell, deduped — polygons can only
+    1. normalize + cover BOTH sides' parts at one zoom (the usual adaptive
+       descent, expanded) — cover rows are (id, part, cell);
+    2. candidates = cover_a equi-join cover_b on cell, deduped — parts can only
        intersect if their covers share a cell (covers are conservative supersets),
        so the candidate set is complete and the only shuffle is on the cell key;
-    3. exact refine per candidate pair with the vertex-containment + segment-
+    3. exact refine per candidate part pair with the vertex-containment + segment-
        intersection kernel (functions/polyops.py) inside mapInPandas, rings
        delivered via a join on the normalized tables (ring pairs are tiny —
-       tens of vertices each).
+       tens of vertices each), then a distinct over the feature pairs.
 
     zoom trades candidate precision against cover size exactly like the point
     join; intersection semantics match the box-overlap oracle (entry
@@ -514,19 +459,17 @@ def polygon_intersect_join(
     b_id_type = dict(polys_b.dtypes).get("polygon_id", "string")
     na = normalize_polygons(polys_a).filter(F.col("poly_errors") == "")
     nb = normalize_polygons(polys_b).filter(F.col("poly_errors") == "")
-    ca = polygon_cover(na, zoom=zoom, compact=False).select(
-        F.col("polygon_id").alias("a_id"), "cell"
-    )
-    cb = polygon_cover(nb, zoom=zoom, compact=False).select(
-        F.col("polygon_id").alias("b_id"), "cell"
-    )
-    cand = ca.join(cb, "cell").select("a_id", "b_id").dropDuplicates(["a_id", "b_id"])
-    pairs = (
-        cand.join(na.select(F.col("polygon_id").alias("a_id"),
-                            F.col("ring_json").alias("_ra")), "a_id")
-        .join(nb.select(F.col("polygon_id").alias("b_id"),
-                        F.col("ring_json").alias("_rb")), "b_id")
-    )
+
+    def side(norm, s):
+        """(s_id, s_part) renamed keys of a normalized side and of its cover."""
+        keys = [F.col("polygon_id").alias(f"{s}_id"), F.col("part_idx").alias(f"{s}_part")]
+        cover = polygon_cover(norm, zoom=zoom, compact=False).select(*keys, "cell")
+        return cover, norm.select(*keys, F.col("ring_json").alias(f"_r{s}"))
+
+    ca, ra = side(na, "a")
+    cb, rb = side(nb, "b")
+    cand = ca.join(cb, "cell").drop("cell").dropDuplicates()
+    pairs = cand.join(ra, ["a_id", "a_part"]).join(rb, ["b_id", "b_part"])
 
     def refine(it: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
         from geojson_utility_spark.functions.polyops import rings_intersect
@@ -540,7 +483,7 @@ def polygon_intersect_join(
             yield pdf.loc[keep, ["a_id", "b_id"]]
 
     schema = "a_id string, b_id string"
-    return pairs.mapInPandas(refine, schema).select(
+    return pairs.mapInPandas(refine, schema).distinct().select(
         F.col("a_id").cast(a_id_type).alias("a_id"),
         F.col("b_id").cast(b_id_type).alias("b_id"),
     )

@@ -45,6 +45,7 @@ def quadkey_udf(cell: pd.Series) -> pd.Series:
 TILE_MASK_SCHEMA = T.StructType(
     [
         T.StructField("polygon_id", T.StringType()),
+        T.StructField("part_idx", T.IntegerType()),
         T.StructField("tile_cell", T.LongType()),
         T.StructField("tile_z", T.IntegerType()),
         T.StructField("tile_x", T.LongType()),
@@ -59,9 +60,9 @@ TILE_MASK_SCHEMA = T.StructType(
 def rasterize_polygons(
     polygons_norm: DataFrame, zoom: int, mask_size: int = 64
 ) -> DataFrame:
-    """For every valid normalized polygon (operators/spatial_join.normalize_polygons
+    """For every valid normalized polygon part (operators/spatial_join.normalize_polygons
     output), emit one row per covering tile with a mask_size x mask_size bitmask of
-    pixel-center containment (np.packbits row-major).
+    pixel-center containment (np.packbits row-major): one mask per part and tile.
 
     Pixel grid: tile rect in (lon, lat), pixel centers at (i+0.5)/mask_size — matches
     XYZ raster-tile convention of sampling at pixel centers.  Each polygon builds one
@@ -74,7 +75,7 @@ def rasterize_polygons(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
-            for pid, rj in zip(pdf["polygon_id"], pdf["ring_json"]):
+            for pid, part, rj in zip(pdf["polygon_id"], pdf["part_idx"], pdf["ring_json"]):
                 if rj is None:
                     continue
                 ring = np.asarray(json.loads(rj), dtype=np.float64)
@@ -88,6 +89,7 @@ def rasterize_polygons(
                     rows.append(
                         (
                             pid,
+                            part,
                             cell,
                             z,
                             x,
@@ -100,7 +102,7 @@ def rasterize_polygons(
             yield pd.DataFrame(
                 rows,
                 columns=[
-                    "polygon_id", "tile_cell", "tile_z", "tile_x", "tile_y",
+                    "polygon_id", "part_idx", "tile_cell", "tile_z", "tile_x", "tile_y",
                     "mask_size", "coverage", "mask",
                 ],
             )

@@ -126,3 +126,27 @@ def test_contain_blocks_skip_empty_blocks(monkeypatch):
     assert list(K.contain_blocks(empty, empty, index, polys, ZOOM, zooms, {})) == []
     no_cover = K.cover_index(np.empty(0, np.int64), np.empty(0, np.int32), np.empty(0, bool))
     assert list(K.contain_blocks(lat, lon, no_cover, polys, ZOOM, [], {})) == []
+
+
+@pytest.mark.parametrize("compact", [False, True], ids=["expanded", "compact"])
+def test_two_part_feature_pairs_once(compact):
+    """Feature 0 has two parts that share an edge (lon 2, lat 1..2); feature 1 is
+    one square.  A point on the shared edge or on a shared vertex lies in both
+    parts and still yields one (point, feature) pair; the pairs equal the union
+    of the parts' brute-force pairs."""
+    polys = [[_square(1.0, 1.0, 2.0, 2.0)], [_square(2.0, 1.0, 3.0, 2.0)],
+             [_square(5.0, 5.0, 6.0, 6.0)]]
+    feature = np.array([0, 0, 1], dtype=np.int32)
+    parts = [polygon_cells(rings, ZOOM, compact, None) for rings in polys]
+    cells = np.concatenate([c for c, _ in parts])
+    part = np.concatenate([np.full(len(c), i, np.int32) for i, (c, _) in enumerate(parts)])
+    index = K.cover_index(cells, part, np.concatenate([i for _, i in parts]), feature)
+    zooms = np.unique(C.unpack_cell(cells)[0]).tolist()
+    planted_lon = np.array([2.0, 2.0, 2.0, 1.5, 2.5, 5.5, 9.0])
+    planted_lat = np.array([1.5, 1.0, 2.0, 1.5, 1.5, 5.5, 9.0])
+    rng = np.random.default_rng(7)
+    lon = np.concatenate([planted_lon, rng.uniform(0.5, 6.5, 3000)])
+    lat = np.concatenate([planted_lat, rng.uniform(0.5, 6.5, 3000)])
+    got = _pairs(lat, lon, index, polys, zooms)
+    assert {(r, f) for r, f in got if r < 7} == {(0, 0), (1, 0), (2, 0), (3, 0), (4, 0), (5, 1)}
+    assert got == {(r, int(feature[k])) for r, k in _brute_force(lat, lon, polys)}

@@ -7,6 +7,7 @@ shuffle or a join of the point table), parquet scans prune to the referenced col
 push into the scan.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from geojson_utility_spark import fixtures as FX
@@ -85,9 +86,11 @@ def test_flagship_single_shuffle(spark, tmp_path):
     assert "ReadSchema: struct<point_id:string,lat:double,lon:double>" in plan
 
 
-def test_prepared_index_join_plan_shape(spark, tmp_path):
+@pytest.mark.parametrize("how", ["inner", "left_semi", "left_anti"])
+def test_prepared_index_join_plan_shape(spark, tmp_path, how):
     """spatial_join through a PreparedPolygons index is one MapInArrow over the
-    point scan: no exchange, no join, no per-call broadcast."""
+    point scan for every ``how``: no exchange, no join, no per-call broadcast,
+    and one Spark job."""
 
     from geojson_utility_spark.operators.spatial_join import prepare_polygons
 
@@ -98,8 +101,16 @@ def test_prepared_index_join_plan_shape(spark, tmp_path):
     pts = spark.read.parquet(pts_path)
     polys = spark.createDataFrame(FX.make_polygons(10)[["polygon_id", "geojson"]])
     prep = prepare_polygons(polys, compact=True)
-    plan = _plan(spatial_join(pts, prepared=prep))
-    _assert_one_arrow_pass(plan)
+    joined = spatial_join(pts, prepared=prep, how=how)
+    _assert_one_arrow_pass(_plan(joined))
+    sc = spark.sparkContext
+    group = f"prepared_join_{how}"
+    sc.setJobGroup(group, "one job per prepared join")
+    try:
+        joined.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
     prep.unpersist()
 
 

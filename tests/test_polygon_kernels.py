@@ -143,7 +143,7 @@ def test_rings_intersect_matches_plain_formulation():
     for _ in range(1500):
         a = rng.integers(0, 7, (int(rng.integers(3, 7)), 2)).astype(float)
         b = rng.integers(0, 7, (int(rng.integers(3, 7)), 2)).astype(float)
-        ra, rb = P._closed(a), P._closed(b)
+        ra, rb = P.ensure_closed(a), P.ensure_closed(b)
         want = bool(
             P.points_in_ring(b[:, 0], b[:, 1], a).any()
             or P.points_in_ring(a[:, 0], a[:, 1], b).any()

@@ -66,6 +66,36 @@ def test_semi_anti(spark, data, oracle_pairs):
     assert semi.count() + anti.count() == len(pts)
 
 
+def test_semi_anti_keep_rows_not_ids(spark):
+    """left_semi and left_anti keep input ROWS, decided by each row's own
+    coordinates: a null point_id inside, one id on a point inside and on a point
+    outside, and NaN coordinates.  Semi returns exactly the rows the inner join
+    pairs, anti exactly the others, and together they are the input."""
+    from collections import Counter
+
+    ring = [[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 1.0], [0.0, 0.0]]
+    doc = json.dumps(G.wrap_polygon_feature_collection(ring))
+    polys = spark.createDataFrame([("sq", doc)], ["polygon_id", "geojson"])
+    nan = float("nan")
+    rows = [(None, 0.5, 0.5), ("dup", 0.25, 0.25), ("dup", 5.0, 5.0),
+            ("out", 5.0, 5.0), ("nan", nan, 0.5), ("nan", 0.5, nan)]
+    pts = spark.createDataFrame(rows, "point_id string, lat double, lon double")
+
+    def bag(frame):
+        return Counter((r["point_id"], repr(r["lat"]), repr(r["lon"])) for r in frame.collect())
+
+    inside = bag(spark.createDataFrame(rows[:2], pts.schema))
+    outside = bag(spark.createDataFrame(rows[2:], pts.schema))
+    inner = SJ.spatial_join(pts, polys, zoom=12)
+    assert bag(inner.select("point_id", "lat", "lon")) == inside
+    semi = SJ.spatial_join(pts, polys, zoom=12, how="left_semi")
+    anti = SJ.spatial_join(pts, polys, zoom=12, how="left_anti")
+    assert semi.columns == anti.columns == ["point_id", "lat", "lon"]
+    assert bag(semi) == inside
+    assert bag(anti) == outside
+    assert semi.count() + anti.count() == len(rows)
+
+
 def test_normalize_polygons_flags_bowtie(spark, data):
     _, polys = data
     norm = SJ.normalize_polygons(spark.createDataFrame(polys[["polygon_id", "geojson"]]))
@@ -235,15 +265,17 @@ def test_unprepared_joins_release_their_index(spark, data):
 
 
 def test_spatial_join_bigint_polygon_ids(spark):
-    """A non-string polygon_id is joined as its string: both spatial_join and
-    spatial_join_multi return it as one."""
+    """A non-string polygon_id is joined as its string, for a Polygon feature and
+    for a MultiPolygon one alike."""
     ring = [[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 1.0], [0.0, 0.0]]
-    doc = json.dumps(G.wrap_polygon_feature_collection(ring))
-    polys = spark.createDataFrame([(7, doc)], "polygon_id bigint, geojson string")
+    far = [[x + 3.0, y] for x, y in ring]
     pts = spark.createDataFrame([("in", 0.5, 0.5), ("out", 5.0, 5.0)], ["point_id", "lat", "lon"])
-    for join in (SJ.spatial_join, SJ.spatial_join_multi):
-        got = join(pts, polys, zoom=12).select("point_id", "polygon_id").collect()
-        assert [tuple(r) for r in got] == [("in", "7")], join.__name__
+    for geom in ({"type": "Polygon", "coordinates": [ring]},
+                 {"type": "MultiPolygon", "coordinates": [[ring], [far]]}):
+        doc = _fc(geom)
+        polys = spark.createDataFrame([(7, doc)], "polygon_id bigint, geojson string")
+        got = SJ.spatial_join(pts, polys, zoom=12).select("point_id", "polygon_id").collect()
+        assert [tuple(r) for r in got] == [("in", "7")], geom["type"]
 
 
 @pytest.mark.parametrize("compact", [False, True])
@@ -306,9 +338,6 @@ def test_min_zoom_outside_compact_cover_is_rejected(spark, data, kwargs, match):
     try:
         with pytest.raises(ValueError, match=match):
             SJ.spatial_join(pts_df, polys_df, zoom=14, **kwargs)
-        if "how" in kwargs:
-            with pytest.raises(ValueError, match=match):
-                SJ.spatial_join_multi(pts_df, polys_df, zoom=14, **kwargs)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert not sc.statusTracker().getJobIdsForGroup(group)
@@ -353,6 +382,28 @@ def test_polygon_intersect_join_matches_bruteforce(spark):
     assert got == want and len(want) > 0
 
 
+def test_polygon_intersect_join_multipolygon_pairs_once(spark):
+    """A two-part feature meets another feature when any part does, and the pair
+    is reported once even when both parts meet it."""
+    from geojson_utility_spark.operators.spatial_join import polygon_intersect_join
+
+    sq = lambda x0, y0, s: [[x0, y0], [x0 + s, y0], [x0 + s, y0 + s], [x0, y0 + s], [x0, y0]]
+    a = spark.createDataFrame(
+        [("mp", _fc({"type": "MultiPolygon", "coordinates": [[sq(0, 0, 1)], [sq(2, 0, 1)]]})),
+         ("far", _fc({"type": "Polygon", "coordinates": [sq(10, 10, 1)]}))],
+        ["polygon_id", "geojson"],
+    )
+    bar = [[0.5, 0.25], [2.5, 0.25], [2.5, 0.75], [0.5, 0.75], [0.5, 0.25]]
+    b = spark.createDataFrame(
+        [("bar", _fc({"type": "Polygon", "coordinates": [bar]})),      # meets both parts
+         ("touch", _fc({"type": "Polygon", "coordinates": [sq(3, 0, 1)]})),  # part 1's edge
+         ("none", _fc({"type": "Polygon", "coordinates": [sq(5, 5, 1)]}))],
+        ["polygon_id", "geojson"],
+    )
+    got = [tuple(r) for r in polygon_intersect_join(a, b, zoom=10).collect()]
+    assert sorted(got) == [("mp", "bar"), ("mp", "touch")]
+
+
 def test_rings_intersect_kernel_cases():
     from geojson_utility_spark.functions.polyops import rings_intersect
 
@@ -384,16 +435,16 @@ def test_polygon_intersect_join_bigint_ids(spark):
     assert all(isinstance(r["a_id"], int) for r in rows) and len(rows) >= 10
 
 
-def _holed_fc(outer, holes):
-    import json as _j
-    return _j.dumps({
+def _fc(geom):
+    """A one-Feature FeatureCollection document of ``geom``."""
+    return json.dumps({
         "type": "FeatureCollection",
-        "features": [{
-            "type": "Feature",
-            "geometry": {"type": "Polygon", "coordinates": [outer] + holes},
-            "properties": {},
-        }],
+        "features": [{"type": "Feature", "geometry": geom, "properties": {}}],
     })
+
+
+def _holed_fc(outer, holes):
+    return _fc({"type": "Polygon", "coordinates": [outer] + holes})
 
 
 def test_spatial_join_keep_holes_matches_bruteforce(spark):
@@ -487,7 +538,7 @@ def test_spatial_join_multipolygon_union_semantics(spark):
     import pandas as pd
 
     from geojson_utility_spark.functions import pip as P
-    from geojson_utility_spark.operators.spatial_join import spatial_join_multi
+    from geojson_utility_spark.operators.spatial_join import spatial_join
 
     part_a = [[[0.0, 0.0], [4.0, 0.0], [4.0, 4.0], [0.0, 4.0], [0.0, 0.0]],
               [[1.0, 1.0], [2.0, 1.0], [2.0, 2.0], [1.0, 2.0], [1.0, 1.0]]]  # + hole
@@ -529,14 +580,14 @@ def test_spatial_join_multipolygon_union_semantics(spark):
                                                            [3.0, 3.0]])])
     want = {(int(i), "multi") for i in pts.loc[in_multi, "point_id"]} | \
            {(int(i), "single") for i in pts.loc[in_single, "point_id"]}
-    got_rows = spatial_join_multi(pts_df, polys, zoom=14, keep_holes=True).collect()
+    got_rows = spatial_join(pts_df, polys, zoom=14, keep_holes=True).collect()
     got = {(r["point_id"], r["polygon_id"]) for r in got_rows}
     assert got == want
     assert len(got_rows) == len(got)  # deduped: one row per (point, feature)
     # anti join: points in NO feature
     anti = {r["point_id"]
-            for r in spatial_join_multi(pts_df, polys, how="left_anti",
-                                        zoom=14, keep_holes=True).collect()}
+            for r in spatial_join(pts_df, polys, how="left_anti",
+                                  zoom=14, keep_holes=True).collect()}
     assert anti == set(pts["point_id"]) - {p for p, _ in want}
 
 
@@ -644,46 +695,31 @@ def test_normalize_rejects_non_polygon_geometries(spark):
     GeometryCollection lands in poly_errors with a SPECIFIC unsupported-type
     message (VERDICT r3 item 4 — the reference blindly indexes coordinates[0],
     so a real mixed-geometry GeoJSON user used to get a shape-crash message);
-    MultiPolygon through the Polygon-only path names the union-semantics
-    operators; valid Polygons are untouched, in BOTH keep_holes modes."""
-    import json as _json
-
-    def fc(geom):
-        return _json.dumps({
-            "type": "FeatureCollection",
-            "features": [{"type": "Feature", "geometry": geom, "properties": {}}],
-        })
-
+    a MultiPolygon yields one row per part, each validated on its own; valid
+    Polygons are untouched, in BOTH keep_holes modes."""
     square = [[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 1.0], [0.0, 0.0]]
+    shifted = [[x + 2.0, y] for x, y in square]
+    bowtie = [[0.0, 0.0], [1.0, 1.0], [1.0, 0.0], [0.0, 1.0], [0.0, 0.0]]
     rows = [
-        ("ok", fc({"type": "Polygon", "coordinates": [square]})),
-        ("pt", fc({"type": "Point", "coordinates": [1.0, 2.0]})),
-        ("ls", fc({"type": "LineString", "coordinates": [[0.0, 0.0], [1.0, 1.0]]})),
-        ("gc", fc({"type": "GeometryCollection", "geometries": []})),
-        ("mp", fc({"type": "MultiPolygon", "coordinates": [[square]]})),
+        ("ok", _fc({"type": "Polygon", "coordinates": [square]})),
+        ("pt", _fc({"type": "Point", "coordinates": [1.0, 2.0]})),
+        ("ls", _fc({"type": "LineString", "coordinates": [[0.0, 0.0], [1.0, 1.0]]})),
+        ("gc", _fc({"type": "GeometryCollection", "geometries": []})),
+        ("mp", _fc({"type": "MultiPolygon", "coordinates": [[square], [shifted]]})),
+        ("mp_bad", _fc({"type": "MultiPolygon", "coordinates": [[square], [bowtie]]})),
     ]
     polys = spark.createDataFrame(rows, ["polygon_id", "geojson"])
     for keep_holes in (False, True):
         got = {
-            r["polygon_id"]: r["poly_errors"]
+            (r["polygon_id"], r["part_idx"]): r["poly_errors"]
             for r in SJ.normalize_polygons(polys, keep_holes=keep_holes).collect()
         }
-        assert got["ok"] == ""
+        assert got[("ok", 0)] == ""
         for pid, gtype in (("pt", "Point"), ("ls", "LineString"),
                            ("gc", "GeometryCollection")):
-            assert f"unsupported geometry type '{gtype}'" in got[pid], (pid, got[pid])
-        assert "explode_multipolygon_parts" in got["mp"]
-    # the multi path still explodes MultiPolygon and passes other types through
-    # unchanged so its normalize annotates them with the same specific message
-    parts = {
-        (r["polygon_id"], r["part_idx"])
-        for r in SJ.explode_multipolygon_parts(polys).collect()
-    }
-    assert ("mp", 0) in parts and ("ls", 0) in parts
-    norm_multi = {
-        r["polygon_id"]: r["poly_errors"]
-        for r in SJ.normalize_polygons(SJ.explode_multipolygon_parts(polys)
-                                       .drop("part_idx")).collect()
-    }
-    assert norm_multi["mp"] == ""  # exploded part is a plain Polygon now
-    assert "unsupported geometry type 'LineString'" in norm_multi["ls"]
+            err = got[(pid, 0)]
+            assert f"unsupported geometry type '{gtype}'" in err, (pid, err)
+        assert got[("mp", 0)] == got[("mp", 1)] == ""
+        assert got[("mp_bad", 0)] == ""
+        assert "self-intersecting" in got[("mp_bad", 1)]
+        assert len(got) == 8
